@@ -576,13 +576,15 @@ def cmd_arpa_filter(args) -> int:
     from pyspark.sql import functions as F  # noqa: N812
 
     from .functions.arpa import _write_arpa, arpa_filter, arpa_load
+    from .functions.partitioning import pin
     from .runners.spark_runner import get_spark
 
     spark = get_spark("cli-arpa-filter")
     rows = arpa_load(spark, args.model)
-    small = arpa_filter(
-        rows, spark.read.parquet(args.src), args.text_column
-    ).localCheckpoint(eager=True)
+    small = pin(
+        arpa_filter(rows, spark.read.parquet(args.src), args.text_column),
+        eager=True,
+    )
     counts = {
         "before": {
             int(r["order"]): r["n"]

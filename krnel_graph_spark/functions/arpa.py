@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .partitioning import pin, pin_scope
+
 __all__ = [
     "kneser_ney_arpa_rows",
     "kneser_ney3_arpa_rows",
@@ -418,6 +420,14 @@ def _word_cols(df: DataFrame) -> "list[str]":
     return [f"w{k}" for k in ks]
 
 
+def _require_word_cols(mo: int, wcols: "list[str]") -> None:
+    if mo > len(wcols):
+        raise ValueError(
+            f"arpa_score: max_order={mo} needs word columns w1..w{mo}; "
+            f"rows frame carries {wcols}"
+        )
+
+
 def _write_arpa(rows: DataFrame, path: str, max_order: int) -> None:
     """Stream ARPA rows into one ``.arpa`` text file — header counts,
     per-order sections sorted by words, ``\\end\\`` trailer. Order-
@@ -431,12 +441,12 @@ def _write_arpa(rows: DataFrame, path: str, max_order: int) -> None:
 
     The writer runs ``1 + max_order`` separate actions (header counts
     plus one sorted stream per section), so the rows frame is pinned
-    here via an eager ``localCheckpoint`` — without it a frame straight
-    off the exporter re-derives the whole model-join DAG per section
-    (the same repeated-lineage cost :func:`arpa_score` checkpoints
-    against) — and released when the file is written."""
-    rows = rows.localCheckpoint(eager=True)
-    try:
+    here eagerly — without it a frame straight off the exporter
+    re-derives the whole model-join DAG per section (the same
+    repeated-lineage cost :func:`arpa_score` pins against) — and
+    released when the file is written."""
+    with pin_scope():
+        rows = pin(rows, eager=True)
         wcols = _word_cols(rows)
         counts = {
             r["order"]: r["n"]
@@ -465,8 +475,6 @@ def _write_arpa(rows: DataFrame, path: str, max_order: int) -> None:
                         line += f"\t{0.0 if bow is None else bow:.6f}"
                     f.write(line + "\n")
             f.write("\n\\end\\\n")
-    finally:
-        rows.unpersist()
 
 
 def kneser_ney_export_arpa(
@@ -727,7 +735,6 @@ def arpa_score(
     text_col: str,
     id_col: str,
     max_order: int | None = None,
-    pins: "list | None" = None,
     bos: bool = False,
     eos: bool = False,
     oov_mode: str = "keep",
@@ -780,28 +787,26 @@ def arpa_score(
     Scale shape: the model tables are vocab/type-bounded join sides;
     the corpus does one positions explode + ``2·N−1`` digest joins
     (N prob + N−1 bow) + one per-doc aggregate. ``rows`` feeds every
-    lookup table plus the <unk> probe, so it is materialized here via
-    an eager ``localCheckpoint`` (the kneser_ney score-op convention):
-    without it, a rows frame with an expensive lineage — e.g. straight
-    from the exporter — re-derives the whole model per join branch
-    (measured 2× the gate query at sf0.01), and the checkpoint also
-    TRUNCATES that lineage so the final query plan is the joins, not
-    N copies of the model build. The checkpoint blocks free when the
-    frame is garbage-collected; pass ``pins=[]`` to receive the handle
-    for an explicit ``unpersist()`` in a long-lived session. The two
-    bounded actions below (order probe, <unk> probe) execute
-    immediately anyway, so eagerness costs nothing extra."""
+    lookup table plus the <unk> probe, so it is pinned here eagerly
+    (:func:`~krnel_graph_spark.functions.partitioning.pin`): without
+    it, a rows frame with an expensive lineage — e.g. straight from
+    the exporter — re-derives the whole model per join branch
+    (measured 2× the gate query at sf0.01); on a local master the
+    checkpoint also TRUNCATES that lineage so the final query plan is
+    the joins, not N copies of the model build. Call inside a
+    :func:`~krnel_graph_spark.functions.partitioning.pin_scope` to
+    release the pin explicitly in a long-lived session. The bounded
+    probe below executes immediately anyway, so eagerness costs
+    nothing extra."""
     if oov_mode not in ("keep", "unk"):
         raise ValueError(f"arpa_score: unknown oov_mode {oov_mode!r}")
-    rows = rows.localCheckpoint(eager=True)
-    if pins is not None:
-        pins.append(rows)
-    # ONE aggregate job answers both model probes (r15; was a distinct
-    # collect + a separate limit(1) collect — two driver jobs over the
-    # checkpointed frame): the listed orders and <unk>'s log-prob.
-    # ``min`` over the (at most one) <unk> row replaces the old
-    # arbitrary ``limit(1)`` — identical on any legal ARPA model, which
-    # lists each 1-gram once, and deterministic if one ever did not.
+    wcols = _word_cols(rows)
+    if not wcols:  # the probe below reads w1
+        _require_word_cols(max_order or 1, wcols)
+    rows = pin(rows, eager=True)
+    # ONE aggregate job answers both model probes: the listed orders
+    # and <unk>'s log-prob. ``min`` over the (at most one) <unk> row is
+    # deterministic even on a model that listed a 1-gram twice.
     probe_row = rows.agg(
         F.collect_set("order").alias("orders"),
         F.min(
@@ -818,12 +823,7 @@ def arpa_score(
             f"arpa_score: max_order={mo} but the model lists orders "
             f"1..{max(orders)}"
         )
-    wcols = _word_cols(rows)
-    if mo > len(wcols):
-        raise ValueError(
-            f"arpa_score: max_order={mo} needs word columns w1..w{mo}; "
-            f"rows frame carries {wcols}"
-        )
+    _require_word_cols(mo, wcols)
     if probe_row["unk_lp"] is None:
         raise ValueError(
             "arpa_score: model lists no <unk> 1-gram — OOV tokens would "
@@ -978,10 +978,9 @@ def arpa_filter(
     from .text import normalize_text, whitespace_tokens
 
     # rows feeds TWO consumers (the word explode and the final
-    # anti-join) — a non-eager localCheckpoint materializes an
-    # expensive lineage (e.g. straight from an exporter) once instead
-    # of per branch, the arpa_score convention
-    rows = rows.localCheckpoint(eager=False)
+    # anti-join) — the pin materializes an expensive lineage (e.g.
+    # straight from an exporter) once instead of per branch
+    rows = pin(rows)
     wcols = _word_cols(rows)
     spark = rows.sparkSession
     vocab = (

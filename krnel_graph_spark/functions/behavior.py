@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..streaming.events import with_event_time
+from .partitioning import pin
 
 
 def _per_user_funnel(
@@ -363,13 +364,13 @@ def rrf_fuse(
     fusion is O(lists × k).
 
     The contract is ENFORCED (round-7): each list's (id, score)
-    projection is materialized ONCE via eager ``localCheckpoint`` —
+    projection is materialized ONCE via an eager pin —
     rankers are expensive, and a separate guard job would recompute
-    them, while the checkpoint makes both the guard count and the rank
+    them, while the pin makes both the guard count and the rank
     window read the already-computed rows — then a list over
     ``max_list_rows`` raises instead of running a single-partition
     corpus sort. Set ``max_list_rows=None`` only if you know every
-    input is ranker output (the checkpoint is kept regardless: it is
+    input is ranker output (the pin is kept regardless: it is
     what keeps fusion a single ranker pass per list).
     """
     if len(ranked) != len(score_cols):
@@ -387,7 +388,7 @@ def rrf_fuse(
     ]
     with ThreadPoolExecutor(max_workers=len(projs)) as pool:
         slim = list(
-            pool.map(lambda d: d.localCheckpoint(eager=True), projs)
+            pool.map(lambda d: pin(d, eager=True), projs)
         )
     if max_list_rows is not None:
         for i, df in enumerate(slim):
@@ -475,13 +476,9 @@ def session_cooccurrence(
     )
     # Both aliases of the pair self-join otherwise re-run the
     # sessionizing window sort + dedup shuffle over the full event
-    # stream. Locally neutral at sf0.1 (interleaved 0.97 vs 0.96 s
-    # min, ahead mid-distribution); structural at scale — one window
-    # pass instead of two, and the pinned frame is the deduped
-    # (user, session, type) triple set, already reduced.
-    from pyspark import StorageLevel
-
-    keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+    # stream — one window pass instead of two, and the pinned frame is
+    # the deduped (user, session, type) triple set, already reduced.
+    keyed = pin(keyed)
     l, r = keyed.alias("l"), keyed.alias("r")
     return (
         l.join(

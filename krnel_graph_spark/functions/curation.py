@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from .partitioning import pin
 
 
 def group_cap(
@@ -538,11 +539,7 @@ def corpus_divergence(a: DataFrame, b: DataFrame, text_col: str) -> DataFrame:
     # final divergence agg); pin it so each corpus is scanned exactly
     # ONCE — the frame is vocabulary-bounded (~50 B/type), the classic
     # count table a 100-TB run would checkpoint anyway.
-    j0 = (
-        counts(a, "ca")
-        .join(counts(b, "cb"), "h", "full_outer")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    j0 = pin(counts(a, "ca").join(counts(b, "cb"), "h", "full_outer"))
     totals = F.broadcast(
         j0.agg(
             F.sum("ca").cast("double").alias("na"),

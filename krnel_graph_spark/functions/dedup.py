@@ -22,10 +22,12 @@ Scale notes: MinHash/SimHash signatures are computed in one scan-side pass
 brute-force variants exist as correctness baselines and for small candidate
 sets — at 100 TB you run the LSH path.
 
-The LSH pipeline persists two candidate-scale frames per invocation
-(MEMORY_AND_DISK — recomputable, LRU-evicted under memory pressure, never
-explicitly unpersisted because consumers are lazy). Drivers running dedup
-over MANY corpora in one long session should call
+Multi-consumer frames (signature tables, candidate pairs, shingle sets)
+are pinned through :func:`~krnel_graph_spark.functions.partitioning.pin`,
+most of them only above the source size where a pin pays for itself
+(:data:`PIN_MIN_BYTES`). Consumers are lazy, so the pins are not released
+here: locally the ContextCleaner reclaims them, and on a cluster a driver
+running dedup over MANY corpora in one long session should call
 ``spark.catalog.clearCache()`` between corpora.
 """
 
@@ -34,14 +36,25 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import md5_long
 from .kernels import minhash_sig_count_udf, norm_udf, shingle_set_udf
-from .partitioning import ensure_min_partitions
+from .partitioning import ensure_min_partitions, pin, plan_size_bytes
 from .text import fingerprint
+
+# Source size from which pinning a multi-consumer derived frame pays:
+# below it the pin's extra job and block write cost more than the second
+# pass it saves (interleaved, the pin was neutral at 64 KB and ahead from
+# ~600 KB up).
+PIN_MIN_BYTES = 256 << 10
+
+
+def _worth_pinning(src: DataFrame) -> bool:
+    """Size gate for pins derived from ``src``; unknown sizes pin."""
+    size = plan_size_bytes(src)
+    return size is None or size >= PIN_MIN_BYTES
 
 # ---------------------------------------------------------------------- #
 # Exact                                                                    #
@@ -112,8 +125,6 @@ def minhash_lsh_pairs(
     tuples, not O(rows²); shingle arrays never enter the banding shuffle —
     they are joined back only for the (LSH-pruned) candidate pairs.
     """
-    from .partitioning import plan_size_bytes
-
     rows_per_band = num_perm // bands
     df = ensure_min_partitions(df)
     # asNondeterministic: the n_sh>0 filter below references the UDF's
@@ -135,17 +146,13 @@ def minhash_lsh_pairs(
     # does not plan a ReusedExchange across the differently-aliased
     # branches — without pinning, the raw text is scanned and the
     # signature kernel run TWICE over the whole corpus (measured 2.5× on a
-    # 200k-doc corpus). The persisted frame is narrow — id + num_perm longs
+    # 200k-doc corpus). The pinned frame is narrow — id + num_perm longs
     # + a count, ~300 B/doc regardless of document size — the classic
     # "signature table" a 100-TB dedup pipeline would checkpoint anyway.
-    # Size-gated: on a tens-of-KB corpus the persist's extra job + memory
-    # write costs more than the second signature pass it saves. The gate
-    # sits at 256 KB (r9, interleaved A/B: pin neutral at 64 KB, ahead
-    # from ~600 KB up — r8's 16 MB threshold left the benched sf0.1
-    # corpus running the signature kernel twice).
-    src_bytes = plan_size_bytes(df)
-    if src_bytes is None or src_bytes >= (256 << 10):
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # Size-gated: on a tens-of-KB corpus the pin costs more than the
+    # second signature pass it saves.
+    if _worth_pinning(df):
+        base = pin(base)
 
     banded = base.select(
         "doc",
@@ -183,14 +190,11 @@ def minhash_lsh_pairs(
         )
         .select(F.col("l.doc").alias("doc_a"), F.col("r.doc").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
-        # Three consumers below (id-prune + two verify joins): persist so
-        # the banding self-join runs once, not three times. Candidate pairs
-        # are the LSH-pruned set — tiny relative to the corpus.
-        # MEMORY_AND_DISK (not localCheckpoint): a checkpoint stored in
-        # executor-local storage dies with the executor on a real cluster;
-        # persisted blocks are recomputable from lineage after a loss.
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # Three consumers below (id-prune + two verify joins): pin so the
+    # banding self-join runs once, not three times. Candidate pairs are
+    # the LSH-pruned set — tiny relative to the corpus.
+    candidates = pin(candidates)
 
     # Verification cost must scale with |candidates|, not |corpus|: semi-join
     # the corpus down to docs that appear in some candidate pair before
@@ -209,11 +213,11 @@ def minhash_lsh_pairs(
             F.col(id_col).alias("doc"),
             shingle_set_udf(shingle_k)(F.col(text_col)).alias("sh"),
         )
-        # Two consumers (doc_a and doc_b joins): persist so the candidate
-        # docs are re-shingled once, and the raw text scanned once, not
-        # twice — this is the only remaining full-text touch after banding.
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # Two consumers (doc_a and doc_b joins): pin so the candidate docs
+    # are re-shingled once, and the raw text scanned once, not twice —
+    # this is the only remaining full-text touch after banding.
+    shingle_sets = pin(shingle_sets)
     verified = candidates.join(
         shingle_sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")),
         "doc_a",
@@ -376,17 +380,10 @@ def ngram_jaccard_pairs(
     )
     # Both sides of the co-occurrence self-join rebuild the shingle-UDF
     # subtree (no ReusedExchange across aliases) — pin the exploded
-    # index so the corpus is shingled once. Same 256 KB gate as the
-    # minhash signature pin; this exact path is small-corpus by
-    # contract (the 100-TB route is minhash_lsh_pairs).
-    from .partitioning import plan_size_bytes
-
-    if (sz := plan_size_bytes(df)) is None or sz >= (256 << 10):
-        # non-eager localCheckpoint (r15; was persist) — containment's
-        # same-shape pin measured 1.21->1.06 interleaved; this path is
-        # small-corpus by contract, so ckpt's executor-loss tradeoff
-        # costs a query retry at worst.
-        inverted = inverted.localCheckpoint(eager=False)
+    # index so the corpus is shingled once. Same size gate as the
+    # minhash signature pin.
+    if _worth_pinning(df):
+        inverted = pin(inverted)
     l, r = inverted.alias("l"), inverted.alias("r")
     inter = (
         l.join(
@@ -481,14 +478,9 @@ def containment_pairs(
         )
         # Pin the exploded index: the self-join below (and the optional
         # pair_budget pre-pass) otherwise re-run the shingle UDF per
-        # consumer. Same gate/rationale as ngram_jaccard_pairs
-        # (interleaved A/B at sf0.1: 1.39 vs 1.66 s).
-        from .partitioning import plan_size_bytes
-
-        if (sz := plan_size_bytes(df)) is None or sz >= (256 << 10):
-            # r15: non-eager localCheckpoint (was persist) — interleaved
-            # containment 1.21->1.06 s; small-corpus-by-contract path.
-            inverted = inverted.localCheckpoint(eager=False)
+        # consumer. Same gate as ngram_jaccard_pairs.
+        if _worth_pinning(df):
+            inverted = pin(inverted)
         if pair_budget is not None:
             bound = (
                 inverted.groupBy("shingle")
@@ -535,15 +527,10 @@ def containment_pairs(
         )
     # Pair-bounded verify (the 100-TB route), same idiom as the
     # minhash_lsh_pairs verify stage: semi-join the corpus down to docs
-    # appearing in some candidate pair BEFORE the shingle UDF, persist
-    # the (small, pair-bounded) shingle-set table so its two consumers
+    # appearing in some candidate pair BEFORE the shingle UDF, pin the
+    # (small, pair-bounded) shingle-set table so its two consumers
     # re-shingle once, then intersect arrays per candidate row — shingle
     # arrays ride only |pairs| join rows, never a corpus-wide shuffle.
-    # Cache-lifetime convention (repo-wide): callers own cleanup —
-    # persisted frames here are pair-bounded and evictable
-    # (MEMORY_AND_DISK recomputes from lineage under pressure); a
-    # long-lived session issuing many calls should spark.catalog
-    # .clearCache() between pipelines, as bench.py does between reps.
     cand = (
         candidates.select(
             F.least("doc_a", "doc_b").alias("doc_a"),
@@ -570,10 +557,9 @@ def containment_pairs(
             shingle_set_udf(shingle_k).asNondeterministic()(F.col(text_col)).alias("sh"),
         )
         .filter(F.size("sh") > 0)
-        # r15: non-eager localCheckpoint (was persist) — part of the
-        # containment 1.21->1.06 s interleaved win; bounded candidate set.
-        .localCheckpoint(eager=False)
     )
+    # Two consumers (doc_a and doc_b joins); bounded candidate set.
+    shingle_sets = pin(shingle_sets)
     verified = cand.join(
         shingle_sets.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")),
         "doc_a",
@@ -1050,12 +1036,9 @@ def winnow_pairs(
     # Every consumer below (the optional hot-fingerprint/pair-budget
     # branches and BOTH aliases of the co-occurrence self-join)
     # otherwise re-runs the fingerprint scan + distinct shuffle — pin
-    # the (doc, 8-byte fp) frame (r14 interleaved A/B: 1.57 pinned vs
-    # 2.50 s). Same 256 KB gate as the signature pin.
-    from .partitioning import plan_size_bytes
-
-    if (sz := plan_size_bytes(df)) is None or sz >= (256 << 10):
-        fps = fps.persist(StorageLevel.MEMORY_AND_DISK)
+    # the (doc, 8-byte fp) frame. Same size gate as the signature pin.
+    if _worth_pinning(df):
+        fps = pin(fps)
     if max_doc_freq is not None:
         hot = (
             fps.groupBy("fp")
@@ -1118,7 +1101,6 @@ def clean_corpus(
     SQL oracle reproducing the filter boundary cannot disagree over a
     float ULP.
     """
-    from .partitioning import plan_size_bytes
     from .text import quality_score
 
     # The exact-deduped frame feeds THREE text touches downstream (the
@@ -1136,8 +1118,8 @@ def clean_corpus(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
-    if (sz := plan_size_bytes(df)) is None or sz >= (256 << 10):
-        keepers = keepers.persist(StorageLevel.MEMORY_AND_DISK)
+    if _worth_pinning(df):
+        keepers = pin(keepers)
     out = df.join(keepers, id_col, "left_semi")
     # (exact dups have identical text, hence identical quality — min id IS
     # the quality-tie rule there; keep_by only matters for NEAR dups.)
@@ -1462,12 +1444,11 @@ def dedup_against(
                 F.concat_ws("|", F.col("band").cast("string"), "band_sig"),
             )
         )
-    cand = (
+    cand = pin(
         new_banded
         .join(ref_banded, ["band", "band_sig"])
         .select("new_doc", "ref_doc")
         .dropDuplicates(["new_doc", "ref_doc"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
     def shingles_for(df: DataFrame, ids: DataFrame, side: str) -> DataFrame:
@@ -1533,7 +1514,7 @@ def duplicate_window_stats(
     — a boilerplate window repeated a billion times arrives at its reducer
     as per-partition partial counts, not a billion rows. The per-(doc,
     window) frame (bounded by distinct windows per doc, ~n_tokens/stride
-    rows of 40 bytes) is persisted so the corpus text is scanned exactly
+    rows of 40 bytes) is pinned so the corpus text is scanned exactly
     once; the totals re-join it on the digest, where AQE's skew-join
     splitting handles pathological boilerplate keys.
     """
@@ -1567,10 +1548,9 @@ def duplicate_window_stats(
             )
         ).alias("__wh"),
     )
-    per = (
-        wins.groupBy(id_col, "__wh")
-        .agg(F.count(F.lit(1)).alias("__k"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # Two consumers (the window totals and the join back).
+    per = pin(
+        wins.groupBy(id_col, "__wh").agg(F.count(F.lit(1)).alias("__k"))
     )
     totals = per.groupBy("__wh").agg(F.sum("__k").alias("__tot"))
     dup_k = F.when(F.col("__tot") > 1, F.col("__k")).otherwise(F.lit(0))
@@ -2077,15 +2057,9 @@ def cdc_chunk_dedup(
     # Two consumers (the digest counts and the join back) otherwise both
     # re-run the rolling-digest chunking scan — the expensive leg (one
     # window md5 per token position). Pin the (doc, digest, n_tok)
-    # frame, ~24 B/chunk (r14 interleaved A/B: 1.00 pinned vs 1.21 s).
-    # Same 256 KB gate as the signature pin.
-    from .partitioning import plan_size_bytes
-
-    if (sz := plan_size_bytes(df)) is None or sz >= (256 << 10):
-        # non-eager localCheckpoint (r15; was persist): interleaved
-        # cdc_dedup 1.36->1.20 s. The chunk frame is lineage-cheap (one
-        # codegen scan), so an executor-loss recompute is one retry.
-        chunks = chunks.localCheckpoint(eager=False)
+    # frame, ~24 B/chunk. Same size gate as the signature pin.
+    if _worth_pinning(df):
+        chunks = pin(chunks)
     counts = chunks.groupBy("digest").agg(F.count(F.lit(1)).alias("cnt"))
     per_doc = (
         chunks.join(counts, "digest")

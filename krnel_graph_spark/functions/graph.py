@@ -13,15 +13,22 @@ pair list. Here it backs ``dedup.drop_near_dups(components="distributed")``
 for corpora whose LSH pair graph is itself too large for driver-side
 union-find (see ``functions/dedup.py``).
 
-Iterative-Spark pitfall handled explicitly: every round materializes via
-``localCheckpoint`` to break lineage — without it the plan
-doubles per iteration and Catalyst analysis time explodes long before the
-data does.
+Iterative-Spark pitfall handled explicitly: every round is pinned through
+:func:`~krnel_graph_spark.functions.partitioning.pin`. On a local master
+that is a ``localCheckpoint``, which breaks the lineage — without it the
+plan doubles per iteration and Catalyst analysis time explodes long before
+the data does. On a cluster the pin is a ``persist`` instead: the rounds
+keep their lineage so that a frame whose executor is lost can be
+recomputed, and the plans are bounded only by the cache substitution. That
+trade is unverified here, because no real cluster is available to measure
+it on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .partitioning import pin
 
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -90,14 +97,14 @@ def connected_components(
     (measured: the sf0.1 LSH pair graph converges in ONE round — the
     detection round was half the operator's cost).
     """
-    e = _canonical(edges, src, dst).localCheckpoint(eager=False)
+    e = pin(_canonical(edges, src, dst))
     for _ in range(max_iterations):
-        # ONE non-eager checkpoint per round, after the small star: the
+        # ONE non-eager pin per round, after the small star: the
         # large-star frame is single-consumer (the small star), so
-        # checkpointing it too only added a second materialization per
-        # round. The convergence aggregate below is the one action that
+        # pinning it too only adds a second materialization per round.
+        # The convergence aggregate below is the one action that
         # materializes the round.
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = pin(_small_star(_large_star(e)))
         internal = (
             e.select(F.col("src").alias("dst")).distinct()
             .withColumn("__s", F.lit(1))
@@ -161,27 +168,25 @@ def pagerank(
     the aggregate input (node-count extra rows in the one shuffle),
     NOT a second nodes-join after it — one shuffle per round, not two;
     summing the extra exact-decimal zero cannot move the result.
-    ``localCheckpoint`` per iteration breaks the lineage (same pitfall
-    note as ``connected_components``).
+    A pin per iteration breaks the lineage (same pitfall note as
+    ``connected_components``).
     """
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    e = (
+    e = pin(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    nodes = (
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_nodes = nodes.count()  # one job materializes e AND nodes
     if n_nodes == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__od"))
-    e_od = e.join(outdeg, "src").localCheckpoint(eager=False)
+    e_od = pin(e.join(outdeg, "src"))
 
     rank = nodes.withColumn(
         "rank", F.round(F.lit(1.0) / n_nodes, round_to)
@@ -197,7 +202,9 @@ def pagerank(
             .cast("decimal(38,12)")
             .alias("__c"),
         )
-        rank = (
+        # Non-eager: lineage is cut per round, but the floor-priced jobs
+        # collapse into the consumer's single job.
+        rank = pin(
             contrib.unionByName(zero)
             .groupBy("dst")
             .agg(F.sum("__c").alias("__s"))
@@ -209,9 +216,6 @@ def pagerank(
                     round_to,
                 ).alias("rank"),
             )
-            # Non-eager: lineage is cut per round (LogicalRDD), but the
-            # floor-priced jobs collapse into the consumer's single job.
-            .localCheckpoint(eager=False)
         )
     return rank
 
@@ -359,7 +363,7 @@ def k_core(
     Iterative peeling: drop all nodes of degree < k, recompute degrees on
     the induced subgraph, repeat to fixpoint. Each round is one degree
     aggregation plus two semi-joins on the shrinking edge list;
-    ``localCheckpoint`` breaks lineage per round (same policy as
+    a pin breaks lineage per round (same policy as
     :func:`connected_components`). Rounds needed = peeling depth, which
     is small on real graphs; ``max_iter`` guards adversarial chains.
 
@@ -373,11 +377,10 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
+    e = pin(
         edges.select(a.alias("a"), b.alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n_edges = e.count()
     for _ in range(max_iter):
@@ -390,13 +393,12 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
         keep = deg.filter(F.col("degree") >= k).select("node")
-        ne = (
+        ne = pin(
             e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
-        n_new = ne.count()  # triggers the checkpoint: one job per round
+        n_new = ne.count()  # materializes the pin: one job per round
         e = ne
         if n_new == n_edges:
             break
@@ -503,16 +505,15 @@ def label_propagation(
     aggregate; partial maps are label-count bounded per node) —
     edge-count shuffle volume, node-count results, no window over
     unbounded partitions.
-    ``localCheckpoint`` per round breaks the O(n_iter) lineage growth
-    (same policy as ``pagerank``/``connected_components``)."""
+    A pin per round breaks the O(n_iter) lineage growth (same policy
+    as ``pagerank``/``connected_components``)."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
     )
-    sym = (
+    sym = pin(
         und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
@@ -533,14 +534,12 @@ def label_propagation(
         # came from a symmetrized edge), but keep the left-join +
         # carry-forward so subgraph relabeling stays correct if a
         # caller feeds a pre-filtered label frame in a future variant.
-        labels = (
-            nodes.join(best, "node", "left")
-            .select(
+        # Non-eager: per-round lineage cut without a per-round job —
+        # the caller's one action materializes every round's state.
+        labels = pin(
+            nodes.join(best, "node", "left").select(
                 "node",
                 F.coalesce(best.label, F.col("node")).alias("label"),
             )
-            # Non-eager: per-round lineage cut without a per-round job —
-            # the caller's one action materializes every round's state.
-            .localCheckpoint(eager=False)
         )
     return labels

@@ -150,16 +150,6 @@ def shingle_set_udf(shingle_k: int) -> Column:
 
 
 @F.pandas_udf(T.DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized float64 dot product over two array columns. Summation
-    order is numpy's (pairwise), not a strict left fold — differences are
-    a few ulp and vanish under the engine's round-to-6 outputs."""
-    am = np.vstack([np.asarray(v, dtype=np.float64) for v in a])
-    bm = np.vstack([np.asarray(v, dtype=np.float64) for v in b])
-    return pd.Series(np.einsum("ij,ij->i", am, bm))
-
-
-@F.pandas_udf(T.DoubleType())
 def norm_udf(a: pd.Series) -> pd.Series:
     """Vectorized L2 norm over an array column."""
     am = np.vstack([np.asarray(v, dtype=np.float64) for v in a])

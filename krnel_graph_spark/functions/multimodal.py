@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .partitioning import pin
+
 MEDIA_META_SCHEMA = (
     "doc_id long, media_type string, byte_len long, crc32 long, sha256 string"
 )
@@ -255,18 +257,13 @@ def image_near_dups(
     Scale: images are decoded once scan-side; only (id, 8-byte hash)
     pairs shuffle — a 100 TB image corpus shuffles ~16 bytes per image.
     Completeness: guaranteed for ``max_hamming < 64 / band_bits``."""
-    from pyspark import StorageLevel
-
     from .dedup import hash_band_pairs
 
     # Pin the fingerprint table: hash_band_pairs self-joins it and
-    # would otherwise run the PNG decode kernel over the corpus twice
-    # (interleaved A/B at sf0.1: 1.02 pinned vs 1.39 s). 16 B/image —
-    # the artifact a production run persists anyway.
-    hashes = (
-        image_dhash(df, binary_col, id_col)
-        .select("doc_id", "phash")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # would otherwise run the PNG decode kernel over the corpus twice.
+    # 16 B/image — the artifact a production run persists anyway.
+    hashes = pin(
+        image_dhash(df, binary_col, id_col).select("doc_id", "phash")
     )
     return hash_band_pairs(
         hashes, "doc_id", "phash",
@@ -400,12 +397,8 @@ def video_near_dups(
         )
         .distinct()  # set semantics: repeated identical frames count once
     )
-    # Eager localCheckpoint (same lineage policy as functions/graph.py):
-    # decode once, reuse thrice (sizes / signatures / verify) — and the
-    # blocks are reclaimed by the ContextCleaner when the result goes out
-    # of scope, unlike persist(), which pins executor storage for the
-    # session unless the caller remembers to unpersist.
-    frames = frames.localCheckpoint(eager=True)
+    # Eager pin: decode once, reuse thrice (sizes / signatures / verify).
+    frames = pin(frames, eager=True)
     sizes = frames.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sig = frames.groupBy("doc_id").agg(
         F.array(
@@ -418,10 +411,8 @@ def video_near_dups(
     # The banding self-join below consumes sig on both aliases — pin the
     # per-video signature table (num_perm longs/video, the minhash
     # signature-pin rationale) so the frame-set aggregation runs once,
-    # not twice. Noise-bound at sf0.1's 120 videos; structural at scale.
-    from pyspark import StorageLevel
-
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    # not twice.
+    sig = pin(sig)
     rows_per_band = num_perm // bands
     band_structs = F.array(
         *[
@@ -604,16 +595,12 @@ def audio_near_dups(
     → pigeonhole band self-join (``dedup.hash_band_pairs``) → exact
     Hamming verify. Same scale contract as :func:`image_near_dups`:
     audio bytes never shuffle, only (id, 8-byte fingerprint)."""
-    from pyspark import StorageLevel
-
     from .dedup import hash_band_pairs
 
     # Pin for the same reason as image_near_dups: the band self-join
     # would re-run the WAV decode + spectral fingerprint kernel twice.
-    fps = (
-        audio_fingerprint(df, binary_col, id_col)
-        .select("doc_id", "afp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    fps = pin(
+        audio_fingerprint(df, binary_col, id_col).select("doc_id", "afp")
     )
     return hash_band_pairs(
         fps, "doc_id", "afp",

@@ -34,8 +34,8 @@ Scale shape: ONE corpus scan explodes every gram order at once
 (k=1..N from the same token array — the dedicated kn2/kn3 trainers
 paid one scan per order until they became rename adapters over this
 one, mid-r14); the single ``groupBy(k, w1..wN)`` reduces to a type table that
-every later frame derives from, so the persisted pin is one frame, not
-two. All derived frames are type-table-bounded (the MODEL, never the
+every later frame derives from, so the pinned type table is one frame,
+not two. All derived frames are type-table-bounded (the MODEL, never the
 corpus); the rows builder is broadcast-scalar + type-table joins with
 no corpus scan at all.
 """
@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .partitioning import pin
+
 __all__ = [
     "kneser_ney_ngram_train",
     "kneser_ney_ngram_arpa_rows",
@@ -53,25 +55,6 @@ __all__ = [
     "kneser_ney_ngram_load",
 ]
 
-
-def _pin_table(df: DataFrame) -> DataFrame:
-    """Pin a multi-consumer model-bounded table with a NON-EAGER
-    localCheckpoint (r15; was ``persist()``): consumers read a plain
-    materialized RDD instead of relaunching InMemoryTableScan stages
-    through the cache layer, and the lineage truncation shrinks every
-    downstream plan AQE has to re-optimize per stage (the measured KN
-    residual is driver-side inter-job time, not executor work).
-    Interleaved A/B min-of-4 at sf0.1: kn3_arpa 3.29->2.88 (-12%),
-    kneser_ney5 6.22->5.84, kneser_ney5_pruned 6.49->6.16, arpa_score
-    4.27->4.10, kneser_ney5_modified flat-better — outputs proven
-    IDENTICAL (exceptAll both ways == 0). Blocks are ContextCleaner-
-    reclaimed when the frame is dropped; callers' ``unpersist()`` on
-    the ``_pinned_*`` handles remains a legal no-op."""
-    return df.localCheckpoint(eager=False)
-
-
-def _wc(k: int) -> "list[str]":
-    return [f"w{i}" for i in range(1, k + 1)]
 
 
 # gram-string surgery over the canonical `__g` column (space-joined
@@ -123,18 +106,20 @@ def kneser_ney_ngram_train(
       the bottom continuation floor, structurally identical to the
       order-2/3 trainers'.
 
-    Persist-pinning (all frames are type-table-bounded and multi-
-    consumer in the rows builder — ctx_j feeds section j-1's bow plus
-    every section >= j's interpolation chain): the pinned frames are
+    Pinning (all frames are type-table-bounded and multi-consumer in
+    the rows builder — ctx_j feeds section j-1's bow plus every section
+    >= j's interpolation chain): the frames pinned through
+    :func:`~krnel_graph_spark.functions.partitioning.pin` are
     ``_pinned_counts`` (the one combined type table), ``_pinned_cont``
     (ALL continuation levels + the ``back`` floor, reduced in one
     shuffle), and ``_pinned_ctx`` (all lower ctx levels, one shuffle)
     — the per-level ``cont{k}``/``ctx{k}``/``back`` entries are narrow
-    filters over them, plus the separately pinned ``ctx{N}``. Callers
-    running many models in one session can ``unpersist()`` via those
-    handles once the artifact is written out (a no-op since the r15
-    switch to non-eager localCheckpoint pins — ContextCleaner
-    reclaims the blocks when the frames go out of scope).
+    filters over them, plus the separately pinned ``ctx{N}``
+    (``_pinned_ctxn``). Train inside a
+    :func:`~krnel_graph_spark.functions.partitioning.pin_scope` to
+    release them once the model has been consumed; on a local master
+    the ContextCleaner reclaims them anyway, and an ``unpersist()`` on
+    the ``_pinned_*`` handles is always legal.
     """
     from .text import normalize_text, whitespace_tokens
 
@@ -178,7 +163,7 @@ def kneser_ney_ngram_train(
         .select(F.col("gg.k").alias("k"), F.col("gg.g").alias("__g"))
         .groupBy("k", "__g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .transform(_pin_table)
+        .transform(pin)
     )
 
     def _cls(cnt):
@@ -215,7 +200,7 @@ def kneser_ney_ngram_train(
         counts.filter(F.col("k") >= 2)
         .groupBy((F.col("k") - 1).alias("lvl"), _drop_first().alias("__g"))
         .agg(F.count(F.lit(1)).alias("cc"))
-        .transform(_pin_table)
+        .transform(pin)
     )
     for k in range(2, n):
         out[f"cont{k}"] = _wsplit(
@@ -243,7 +228,7 @@ def kneser_ney_ngram_train(
             F.count(F.lit(1)).alias("n1f"),
             *_cls(F.col("c")),
         )
-        .transform(_pin_table)
+        .transform(pin)
     )
     out[f"ctx{n}"] = _wsplit(
         ctxn_g, n - 1, [F.col(c) for c in _CTX_STATS]
@@ -262,7 +247,7 @@ def kneser_ney_ngram_train(
                 F.count(F.lit(1)).alias("n1f"),
                 *_cls(F.col("cc")),
             )
-            .transform(_pin_table)
+            .transform(pin)
         )
         out["_pinned_ctx"] = ctx_all
         for k in range(2, n):
@@ -663,13 +648,12 @@ def kneser_ney_ngram_arpa_rows(
         _log10_bow(F.lit(1.0)).alias("log10_bow"),
     )
     # each level frame feeds TWO consumers (its section + the next
-    # level's suffix join): a non-eager localCheckpoint materializes it
-    # once on first use and is ContextCleaner-reclaimed — no manual
-    # unpersist needed, and the frames are model-bounded
+    # level's suffix join): pin it so it materializes once on first use;
+    # the frames are model-bounded
     frames = {}
     prev = None
     for j in range(1, n + 1):
-        prev = level_frame(j, prev).localCheckpoint(eager=False)
+        prev = pin(level_frame(j, prev))
         frames[j] = prev
 
     # per-level pruning: top-down kept-set recursion. kept_k = level-k
@@ -691,15 +675,14 @@ def kneser_ney_ngram_arpa_rows(
             # no distinct(): the left-semi consumer dedups by nature,
             # and each level's set feeds only joins — a distinct here
             # would add one shuffle per level for nothing.
-            # r14 stage-5: each kept_k with k > 2 has TWO consumers
-            # (section k's semi-join AND kept_{k-1}'s union leg), so an
-            # un-checkpointed chain re-derives kept_{k+1}'s whole union
-            # tree per consumer — kept_N recomputed n-1 times; a
-            # non-eager localCheckpoint materializes each model-bounded
-            # set once. kept[2] is the recursion base with a single
-            # consumer (section 2's semi-join; no kept_1 exists —
-            # unigrams are never pruned), so it is not checkpointed.
-            kept[k] = ev.localCheckpoint(eager=False) if k > 2 else ev
+            # each kept_k with k > 2 has TWO consumers (section k's
+            # semi-join AND kept_{k-1}'s union leg), so an unpinned
+            # chain re-derives kept_{k+1}'s whole union tree per
+            # consumer — kept_N recomputed n-1 times; a pin materializes
+            # each model-bounded set once. kept[2] is the recursion base
+            # with a single consumer (section 2's semi-join; no kept_1
+            # exists — unigrams are never pruned), so it is not pinned.
+            kept[k] = pin(ev) if k > 2 else ev
 
     out = finalize(1, section(1, frames[1])).unionByName(unk)
     for k in range(2, n + 1):

@@ -1,4 +1,5 @@
-"""Partitioning guards for compute-heavy operators.
+"""Partitioning guards for compute-heavy operators, and the one pinning
+policy every multi-consumer frame in the package goes through.
 
 A small parquet file arrives as ONE input split (`maxPartitionBytes` is an
 upper bound, not a target), so per-row-expensive operators — shingling,
@@ -10,6 +11,10 @@ case: thousands of splits), so large inputs never pay a gratuitous shuffle.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,6 +43,84 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
     # Catalyst signals "unknown" with Long.MaxValue-ish sentinels.
     return size if 0 <= size < (1 << 62) else None
+
+
+def _local_master(master: str) -> bool:
+    """True for ``local`` / ``local[N]`` / ``local[*]`` — one JVM holds
+    every block, so an executor cannot be lost independently."""
+    return master == "local" or master.startswith("local[")
+
+
+class _PinScope(list):
+    """Frames pinned while this scope is the innermost active one."""
+
+    def __init__(self, parent: "_PinScope | None"):
+        super().__init__()
+        self.parent = parent
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` out of this scope: it stays pinned after exit and
+        is released by the enclosing scope instead (or by the session's
+        ``clearCache`` when there is none). Use for a scope's result."""
+        if any(f is df for f in self):
+            self[:] = [f for f in self if f is not df]
+            if self.parent is not None:
+                self.parent.append(df)
+        return df
+
+
+_ACTIVE_SCOPE: contextvars.ContextVar["_PinScope | None"] = (
+    contextvars.ContextVar("pin_scope", default=None)
+)
+
+
+def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Materialize a multi-consumer frame once, so each consumer reads
+    the pinned rows instead of re-deriving the lineage — the package's
+    single pinning policy, decided by the frame's own session:
+
+    * local master: ``localCheckpoint(eager=eager)``. The lineage is
+      truncated (consumers' plans read a ``Scan ExistingRDD``, so loops
+      do not grow their plans), and the ContextCleaner reclaims the
+      blocks when the frame is garbage-collected. One JVM holds every
+      block, so none can be lost on its own.
+    * anything else (a real cluster): ``persist(MEMORY_AND_DISK)``, plus
+      a ``count()`` when ``eager``. Cached blocks keep their lineage, so
+      a frame whose executor is lost is recomputed instead of failing
+      every later consumer. The frame is registered with the innermost
+      :func:`pin_scope`, which unpersists it on exit; outside any scope
+      it stays cached until ``spark.catalog.clearCache()``.
+
+    ``eager`` materializes before returning — for bounded frames whose
+    every consumer runs right away, or where the caller wants the
+    compute to happen here rather than in the first consumer's job."""
+    if _local_master(df.sparkSession.sparkContext.master):
+        return df.localCheckpoint(eager=eager)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if eager:
+        df.count()
+    scope = _ACTIVE_SCOPE.get()
+    if scope is not None:
+        scope.append(df)
+    return df
+
+
+@contextlib.contextmanager
+def pin_scope():
+    """Release every frame :func:`pin` registers inside the block when
+    the block exits, on the error path too — so a long-lived session
+    running many corpora does not accumulate cached tables. Yields the
+    scope; ``scope.keep(df)`` exempts a result that must outlive it.
+    Locally this does nothing: local pins are checkpoints the
+    ContextCleaner already reclaims."""
+    scope = _PinScope(_ACTIVE_SCOPE.get())
+    token = _ACTIVE_SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _ACTIVE_SCOPE.reset(token)
+        for df in scope:
+            df.unpersist()
 
 
 def widen_if_heavy(

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .partitioning import ensure_min_partitions
+from .partitioning import ensure_min_partitions, pin
 from .vector import dot
 
 
@@ -1528,19 +1528,20 @@ def contrastive_triplets(
     top-k heaps); the |q|·k result is persist-pinned for its two
     bounded consumers (positive row + negative band) so the GEMM never
     runs twice, and the final assembly is a broadcast-sized self-join
-    on query_id. The top-k frame is pinned with an EAGER
-    ``localCheckpoint`` (ContextCleaner-reclaimed when the frame goes
-    out of scope) rather than a ``persist`` that would leak executor
-    storage for the session.
+    on query_id. The top-k frame is pinned eagerly
+    (:func:`~krnel_graph_spark.functions.partitioning.pin`).
 
     Contract: a query whose corpus yields fewer than ``neg_skip + 1``
     ranked candidates has an empty hard-negative band and emits NO
     rows (inner join on query_id) — mirroring mining practice where
     such a query simply contributes no triplets; size the corpus or
     lower ``neg_skip`` if every query must appear."""
-    top = cosine_topk(
-        corpus, queries, vector_col, id_col, k=neg_skip + n_negatives
-    ).localCheckpoint(eager=True)
+    top = pin(
+        cosine_topk(
+            corpus, queries, vector_col, id_col, k=neg_skip + n_negatives
+        ),
+        eager=True,
+    )
     pos = top.filter(F.col("rank") == 1).select(
         "query_id",
         F.col("doc_id").alias("positive_id"),
@@ -1683,10 +1684,10 @@ def kcenter_select(
         )
     c0 = first[0]
     picked = [(1, c0[id_col], None)]
-    state = (
-        unit.filter(F.col(id_col) != F.lit(c0[id_col]))
-        .withColumn("__mind", F.lit(1.0) - dot_lit(list(c0["__u"])))
-        .localCheckpoint(eager=False)
+    state = pin(
+        unit.filter(F.col(id_col) != F.lit(c0[id_col])).withColumn(
+            "__mind", F.lit(1.0) - dot_lit(list(c0["__u"]))
+        )
     )
     # batched greedy rounds (see _GREEDY_PAD note above): one TakeOrdered
     # job per BATCH of picks instead of one per pick
@@ -1729,16 +1730,14 @@ def kcenter_select(
         cond = F.col(id_col) != F.lit(accepted[0][0])
         for a in accepted[1:]:
             cond = cond & (F.col(id_col) != F.lit(a[0]))
-        state = (
-            state.filter(cond)
-            .withColumn(
+        state = pin(
+            state.filter(cond).withColumn(
                 "__mind",
                 F.least(
                     F.col("__mind"),
                     *[F.lit(1.0) - dot_lit(a[1]) for a in accepted],
                 ),
             )
-            .localCheckpoint(eager=False)
         )
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1820,7 +1819,7 @@ def mmr_select(
         )
 
     lam_c, inv_c = F.lit(float(lam)), F.lit(1.0 - float(lam))
-    state = (
+    state = pin(
         df.select(
             F.col(id_col),
             F.transform(F.col(vector_col), lambda x: x.cast("double")).alias(
@@ -1837,7 +1836,6 @@ def mmr_select(
         )
         .withColumn("__rel", dot_lit(qu))
         .withColumn("__maxsim", F.lit(0.0))
-        .localCheckpoint(eager=False)
     )
     score = lam_c * F.col("__rel") - inv_c * F.col("__maxsim")
     picked = []
@@ -1892,15 +1890,13 @@ def mmr_select(
         cond = F.col(id_col) != F.lit(accepted[0][0])
         for a in accepted[1:]:
             cond = cond & (F.col(id_col) != F.lit(a[0]))
-        state = (
-            state.filter(cond)
-            .withColumn(
+        state = pin(
+            state.filter(cond).withColumn(
                 "__maxsim",
                 F.greatest(
                     F.col("__maxsim"), *[dot_lit(a[1]) for a in accepted]
                 ),
             )
-            .localCheckpoint(eager=False)
         )
     return spark.createDataFrame(
         picked, f"rank long, {id_col} {id_type}, relevance double, mmr double"

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .partitioning import pin
+
 
 def approx_distinct(df: DataFrame, cols: list[str], rsd: float = 0.05) -> DataFrame:
     """HyperLogLog++ distinct counts per column, one pass over the data.
@@ -40,14 +42,10 @@ def heavy_hitters(
 
     The support threshold (``ceil(total × support)``) derives from the
     counts aggregate itself — the raw table is scanned exactly once (the
-    counts frame is persisted for its two consumers; it is
+    counts frame is pinned for its two consumers; it is
     value-cardinality-sized, already reduced)."""
-    from pyspark import StorageLevel
-
-    counts = (
-        df.groupBy(F.col(col).alias("value"))
-        .agg(F.count("*").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    counts = pin(
+        df.groupBy(F.col(col).alias("value")).agg(F.count("*").alias("n"))
     )
     # total from the aggregate (value-cardinality-sized), not a second scan
     threshold = counts.agg(

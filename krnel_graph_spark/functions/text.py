@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import pin
+
 # Tiny per-language stopword lexicons for the n-gram/stopword language-ID
 # heuristic. Deliberately small: language ID at pipeline scale is a scoring
 # pass, not a model.
@@ -622,17 +624,11 @@ def unigram_logprob(
     ).otherwise(whitespace_tokens(F.col(text_col)))
     pairs = df.select(F.col(id_col), F.explode(toks).alias("term"))
     # The vocabulary table has two consumers (the N total and the scored
-    # broadcast) — unpinned, each re-ran the corpus explode+aggregate
-    # (r14 interleaved A/B: 1.50 pinned vs 1.67 s). Vocabulary-sized at
-    # any corpus scale. (Pinning the corpus-sized `pairs` frame instead
-    # measured SLOWER — 1.74 — the cache write outweighs one tokenize.)
-    from pyspark import StorageLevel
-
-    counts = (
-        pairs.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # broadcast) — unpinned, each re-ran the corpus explode+aggregate.
+    # Vocabulary-sized at any corpus scale. (Pinning the corpus-sized
+    # `pairs` frame instead measured slower — the block write outweighs
+    # one tokenize.)
+    counts = pin(pairs.groupBy("term").agg(F.count(F.lit(1)).alias("ct")))
     total = counts.agg(F.sum("ct").alias("tot"))
     scored = counts.crossJoin(F.broadcast(total)).select(
         "term",
@@ -913,11 +909,9 @@ def ngram_logprob(
     # Three consumers (both count tables + the scoring join) each re-ran
     # the tokenize+posexplode+digest scan — pin the positions frame
     # (~70 B/token digests, the per-position feature table a 100-TB run
-    # would checkpoint; r14 interleaved A/B 1.83 pinned vs 2.10 s;
-    # pinning the two count tables instead measured slower, 2.29).
-    from pyspark import StorageLevel
-
-    grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # would checkpoint; pinning the two count tables instead measured
+    # slower).
+    grams = pin(grams)
     cnt_g = grams.groupBy("__g").agg(F.count(F.lit(1)).alias("__cg"))
     cnt_c = grams.groupBy("__c").agg(F.count(F.lit(1)).alias("__cc"))
     if broadcast_vocab:
@@ -1027,32 +1021,23 @@ def dsir_weights(
             F.col(id_col), F.explode(both).alias("g")
         ).select(id_col, (md5_long(F.col("g")) % buckets).alias("b"))
 
-    from pyspark import StorageLevel
-
     # doc_counts feeds BOTH the global raw table and the final per-doc
     # join; without a pin Spark re-runs the tokenize+shingle explode over
     # the whole train corpus for each consumer (5 corpus scans measured).
-    # The persisted frame is (id, bucket, count) — ~20 B/row regardless
+    # The pinned frame is (id, bucket, count) — ~20 B/row regardless
     # of document size — the classic feature table a 100-TB DSIR run
-    # would checkpoint anyway. Pinned UNCONDITIONALLY (r14): the old
-    # ≥16 MB size gate only ever disabled the pin where the recompute
-    # was still 2 extra corpus explodes — measured 10% slower at sf0.1
-    # and never cheaper (the pin is one ~20 B/row cache write).
-    doc_counts = (
-        grams(train)
-        .groupBy(id_col, "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # would checkpoint anyway. Pinned without a size gate: skipping the
+    # pin still costs 2 extra corpus explodes at any size.
+    doc_counts = pin(
+        grams(train).groupBy(id_col, "b").agg(F.count(F.lit(1)).alias("c"))
     )
     # The two global bucket tables are ≤``buckets`` rows each but are
     # read twice (totals + ratio) — pin them so the target corpus is
     # scanned exactly once.
-    raw_counts = doc_counts.groupBy("b").agg(
-        F.sum("c").alias("cr")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    tgt_counts = grams(target).groupBy("b").agg(
-        F.count(F.lit(1)).alias("ct")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    raw_counts = pin(doc_counts.groupBy("b").agg(F.sum("c").alias("cr")))
+    tgt_counts = pin(
+        grams(target).groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
+    )
     totals = raw_counts.agg(F.sum("cr").alias("tr")).crossJoin(
         tgt_counts.agg(F.sum("ct").alias("tt"))
     )
@@ -1192,13 +1177,11 @@ def corpus_report(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
     Scale: the per-doc feature frame (token count / blank flag /
     fingerprint / quality / lang-id — all codegen expressions, ~50 B/row)
-    is computed in ONE scan and size-gate persisted for its two consumers
+    is computed in ONE scan and size-gate pinned for its two consumers
     (the global aggregate and the language distribution); vocabulary and
     the Zipf fit share the one explode+agg pass shape that
     ``term_stats`` documents. Everything reduces to one-row or
     #languages-row frames before any union."""
-    from pyspark import StorageLevel
-
     from .partitioning import plan_size_bytes
 
     norm = normalize_text(F.col(text_col))
@@ -1209,12 +1192,12 @@ def corpus_report(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.round(quality_score(text_col), 6).alias("q"),
         lang_id(text_col).alias("pl"),
     )
-    # Gate stays at 16 MB: an r14 interleaved A/B at sf0.1 (0.57 MB
-    # corpus) measured the pin SLOWER (1.37 vs 1.13 s) — the projection
-    # here is scan-cheap and the cache write is a materialization
-    # barrier between two otherwise-concurrent aggregate subtrees.
+    # Gate at 16 MB: an interleaved A/B at sf0.1 (0.57 MB corpus)
+    # measured the pin SLOWER (1.37 vs 1.13 s) — the projection here is
+    # scan-cheap and the pin is a materialization barrier between two
+    # otherwise-concurrent aggregate subtrees.
     if (sz := plan_size_bytes(df)) is None or sz >= (16 << 20):
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+        base = pin(base)
     a = base.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("nt").cast("long").alias("n_tokens"),
@@ -1499,20 +1482,10 @@ def stupid_backoff_train(
     count) model artifact a production run would persist to parquet —
     vocabulary/gram-type-bounded, never corpus-sized.
     """
-    fused = (
-        _sb_fused_grams(train, text_col)
-        # non-eager localCheckpoint (r15; was persist): same
-        # materialize-once pin, but consumers read a plain RDD and the
-        # truncated lineage shrinks every AQE replan. Interleaved
-        # min-of-3 at sf0.1: stupid_backoff_fixed 2.05->1.70,
-        # perplexity_buckets_fixed 1.88->1.69. Model-artifact frame:
-        # losing a block costs a query retry, never a wrong result.
-        # (The pin also hides the train-side pushed filter from the
-        # FINAL printed plan — tests/test_plan_quality.py pins that
-        # pushdown on _sb_fused_grams' own plan, the real
-        # construction path.)
-        .localCheckpoint(eager=False)
-    )
+    # (Locally the pin hides the train-side pushed filter from the FINAL
+    # printed plan — tests/test_plan_quality.py checks that pushdown on
+    # _sb_fused_grams' own plan, the real construction path.)
+    fused = pin(_sb_fused_grams(train, text_col))
     uni = fused.filter(F.col("l") == 1).select(
         F.col("k").alias("w"), F.col("c").alias("c1")
     )
@@ -1865,18 +1838,16 @@ def vocab_growth(
         f"{i}, CAST({cuts[i]} AS BIGINT), d{i}, t{i}, v{i}"
         for i in range(levels)
     )
-    # Eager localCheckpoint: the levels-row frame has TWO consumers
-    # (the output rows and the OLS fit) — without the pin each branch
-    # re-derives both corpus passes (4 scans instead of 2). The frame
-    # is `levels` rows, so materializing it is free; ContextCleaner
-    # reclaims the blocks when the frame is dropped.
-    pts = (
-        drow.crossJoin(vrow)
-        .selectExpr(
+    # Eager pin: the levels-row frame has TWO consumers (the output
+    # rows and the OLS fit) — without the pin each branch re-derives
+    # both corpus passes (4 scans instead of 2). The frame is `levels`
+    # rows, so materializing it is free.
+    pts = pin(
+        drow.crossJoin(vrow).selectExpr(
             f"stack({levels}, {stack_args}) AS "
             "(level, bucket_lt, n_docs, n_tokens, n_types)"
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
     ok = (F.col("n_tokens") > 0) & (F.col("n_types") > 0)
@@ -2047,7 +2018,6 @@ def pmi_collocations(
     min_count: int = 5,
     top_k: int = 100,
     broadcast_vocab: bool = True,
-    pins: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Top-``top_k`` bigram collocations by pointwise mutual
     information: ``pmi = log10(p(w1,w2) / (p(w1) p(w2)))`` with unigram
@@ -2067,6 +2037,12 @@ def pmi_collocations(
     lookups broadcast by default (vocab-sized, corpus-independent) —
     ``broadcast_vocab=False`` for open vocabularies falls back to AQE
     hash joins. The final top-k is a TakeOrdered, never a global sort.
+
+    The two count tables are pinned (vocab-sized; the corpus is never
+    pinned). Run inside a
+    :func:`~krnel_graph_spark.functions.partitioning.pin_scope` to
+    release them once the top-k has materialized, as the OpSpec path
+    does; otherwise they live until the session drops them.
     """
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
@@ -2078,29 +2054,19 @@ def pmi_collocations(
         .select(toks.alias("__toks"))
         .withColumn("__L", F.size("__toks"))
     )
-    # Both count tables feed multiple branches (lookups + totals):
-    # persist-pin them so the corpus explode+groupBy runs ONCE per
-    # table instead of once per consumer (vocab-sized cache, corpus
-    # never cached). Pass ``pins=[]`` to receive the pinned frames and
-    # ``unpersist()`` them once the top-k has materialized (the OpSpec
-    # path does exactly this); otherwise the pin lives until the
-    # session drops it — long-lived sessions running many corpora
-    # should release per-call or spark.catalog.clearCache() between
-    # batches (the bench harness does the latter between reps).
-    uni = (
+    # Both count tables feed multiple branches (lookups + totals): pin
+    # them so the corpus explode+groupBy runs ONCE per table instead of
+    # once per consumer.
+    uni = pin(
         base.select(F.explode("__toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
-    pairs_all = (
+    pairs_all = pin(
         _adjacent_word_pairs(base, "__toks")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .persist()
     )
-    if pins is not None:
-        pins.extend([uni, pairs_all])
     pairs = pairs_all.filter(F.col("n_pair") >= int(min_count))
     # Totals fold out of the count tables (vocab-sized aggregates), so
     # the corpus is scanned once per explode — never for a scalar.
@@ -2322,27 +2288,6 @@ def kneser_ney_score(
             F.sum("__oov").cast("long").alias("n_oov"),
             F.sum("__term").cast("double").alias("logprob_sum"),
         )
-    )
-
-
-def _adjacent_word_triples(df: DataFrame, toks_col: str) -> DataFrame:
-    """Explode a tokenized frame (carrying ``__L``) into adjacent
-    ``(u, v, w)`` trigram rows — the order-3 sibling of
-    :func:`_adjacent_word_pairs`, shared by the trigram Kneser-Ney
-    trainer and replayed verbatim by its SQL oracle."""
-    return (
-        df.filter(F.col("__L") >= 3)
-        .select(
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, __L - 2),"
-                    f" s -> struct({toks_col}[s - 1] AS u,"
-                    f" {toks_col}[s] AS v,"
-                    f" {toks_col}[s + 1] AS w))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
     )
 
 
@@ -2763,7 +2708,6 @@ def bm25_search_index(
 
 
 _BM25_FRAMES = ("postings", "term_df", "stats")
-_KN_FRAMES = ("big", "ctx", "back", "scalars")
 _KN3_FRAMES = ("tri", "tctx", "mid", "vstats", "back", "scalars", "coc")
 
 
@@ -2832,18 +2776,6 @@ def bm25_index_load(spark, path: str) -> dict[str, DataFrame]:
                 "not a bm25_index artifact"
             )
     return out
-
-
-def kneser_ney_save(
-    lm: dict[str, DataFrame], path: str, mode: str = "overwrite"
-) -> None:
-    """Persist a :func:`kneser_ney_train` artifact (four count frames,
-    ``big`` clustered by its join key)."""
-    _index_save(lm, _KN_FRAMES, path, mode, cluster={"big": ("w1",)})
-
-
-def kneser_ney_load(spark, path: str) -> dict[str, DataFrame]:
-    return _index_load(spark, _KN_FRAMES, path, "kneser_ney_load")
 
 
 def kneser_ney3_save(

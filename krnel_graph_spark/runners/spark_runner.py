@@ -82,6 +82,7 @@ from ..operators.dataset_ops import (
     TakeRowsOp,
     VectorToScalarOp,
 )
+from ..functions.partitioning import pin, pin_scope
 from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
 from ..plans.op_spec import OpSpec
@@ -461,9 +462,8 @@ class SparkRunner(BaseRunner):
 
     def _pin_lazy_barrier(self, op: OpSpec, plan):
         """Lazy mode (no store): non-ephemeral ops are STILL
-        materialization barriers. Pin their frame with a non-eager
-        ``localCheckpoint`` (computed on first use, ContextCleaner-
-        reclaimed) so downstream OpSpec stages reference the
+        materialization barriers. Pin their frame (non-eager: computed
+        on first use) so downstream OpSpec stages reference the
         materialized frame instead of re-deriving the whole upstream
         lineage. Without this, every enrichment stage that joins its
         stats back on the row id references its parent frame TWICE, so
@@ -476,7 +476,7 @@ class SparkRunner(BaseRunner):
             return plan
         from dataclasses import replace
 
-        return replace(plan, df=plan.df.localCheckpoint(eager=False))
+        return replace(plan, df=pin(plan.df))
 
     def _compute(self, op: OpSpec):
         impl = self.dispatch(op)
@@ -1929,25 +1929,20 @@ def pmi_collocations_op(
     """PMI collocation mining: a bounded top-k table, fresh dense row
     ids in the deterministic (pmi desc, w1, w2) rank order.
 
-    The result is top_k rows by construction, so the op path
-    materializes it eagerly (an eager localCheckpoint — executor-side,
-    no driver round-trip) and releases the two vocab-sized count-table
-    pins immediately, on the error path too — repeated
-    PmiCollocationsOp runs over different corpora in one long-lived
-    session no longer accumulate cached tables until a blanket
-    clearCache."""
+    The result is top_k rows by construction, so the op path pins it
+    eagerly (executor-side, no driver round-trip) inside a
+    ``pin_scope`` that releases the two vocab-sized count tables on
+    exit, on the error path too — repeated PmiCollocationsOp runs over
+    different corpora in one long-lived session do not accumulate
+    cached tables."""
     from ..functions.text import pmi_collocations as _impl
 
     ds = runner.dataset_plan(op.dataset)
-    pins: list = []
-    try:
+    with pin_scope() as scope:
         scored = _impl(
-            ds.df, op.text_column, min_count=op.min_count, top_k=op.top_k,
-            pins=pins,
-        ).localCheckpoint(eager=True)
-    finally:
-        for frame in pins:
-            frame.unpersist()
+            ds.df, op.text_column, min_count=op.min_count, top_k=op.top_k
+        )
+        scored = scope.keep(pin(scored, eager=True))
     from pyspark.sql import Window as _W
 
     w = _W.orderBy(F.col("pmi").desc(), "w1", "w2")
@@ -1966,32 +1961,28 @@ def kneser_ney_score_op(
     back on the row id (blank docs null). Both parents content-address
     the result.
 
-    The op path eagerly checkpoints the NARROW scores frame (4 columns
-    per doc) and releases the trainer's vocab²-sized count-table pin —
-    repeated LM ops over different corpora in one session must not
-    accumulate cached tables (the pmi_collocations_op lesson)."""
+    The op path eagerly pins the NARROW scores frame (4 columns per
+    doc) inside a ``pin_scope`` that releases the trainer's vocab²-sized
+    count tables on exit, on the error path too — repeated LM ops over
+    different corpora in one session must not accumulate cached
+    tables."""
     from ..functions.text import kneser_ney_score as _score
     from ..functions.text import kneser_ney_train as _train
 
     ds = runner.dataset_plan(op.dataset)
     train = runner.dataset_plan(op.train)
-    lm = _train(
-        train.df.select(
-            ROW_ID, F.col(op.train_column).alias(op.text_column)
-        ),
-        op.text_column,
-    )
-    try:
+    with pin_scope() as scope:
+        lm = _train(
+            train.df.select(
+                ROW_ID, F.col(op.train_column).alias(op.text_column)
+            ),
+            op.text_column,
+        )
         scores = _score(
             lm, ds.df.select(ROW_ID, op.text_column),
             op.text_column, ROW_ID, discount=op.discount,
-        ).localCheckpoint(eager=True)
-    finally:
-        # Release the trainer's pins on the error path too — a failed
-        # checkpoint must not leak a vocab²-sized cached table.
-        for key in lm:
-            if key.startswith("_pinned_"):
-                lm[key].unpersist()
+        )
+        scores = scope.keep(pin(scores, eager=True))
     out = ds.df.join(scores, ROW_ID, "left")
     return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
 
@@ -2002,30 +1993,27 @@ def kneser_ney3_score_op(
 ) -> DatasetPlan:
     """Trigram twin of kneser_ney_score_op: same two-parent enrichment
     contract, order-3 count tables with optional hapax pruning; same
-    checkpoint-then-release pin hygiene."""
+    pin-then-release scope."""
     from ..functions.text import kneser_ney3_score as _score
     from ..functions.text import kneser_ney3_train as _train
 
     ds = runner.dataset_plan(op.dataset)
     train = runner.dataset_plan(op.train)
-    lm = _train(
-        train.df.select(
-            ROW_ID, F.col(op.train_column).alias(op.text_column)
-        ),
-        op.text_column,
-        min_count=op.min_count,
-    )
-    try:
+    with pin_scope() as scope:
+        lm = _train(
+            train.df.select(
+                ROW_ID, F.col(op.train_column).alias(op.text_column)
+            ),
+            op.text_column,
+            min_count=op.min_count,
+        )
         scores = _score(
             lm, ds.df.select(ROW_ID, op.text_column),
             op.text_column, ROW_ID,
             discount="modified" if op.smoothing == "modified" else op.discount,
             base_discount=op.discount,
-        ).localCheckpoint(eager=True)
-    finally:
-        for key in lm:
-            if key.startswith("_pinned_"):
-                lm[key].unpersist()
+        )
+        scores = scope.keep(pin(scores, eager=True))
     out = ds.df.join(scores, ROW_ID, "left")
     return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
 

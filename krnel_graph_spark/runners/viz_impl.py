@@ -122,11 +122,11 @@ def umap_vis(runner: SparkRunner, op: UMAPVizOp) -> ColumnPlan:
         )
 
     # Distributed PCA: stats pass + broadcast projection; vectors stay put.
-    # Persisted: the stats collect and the projection job would otherwise
+    # Pinned: the stats collect and the projection job would otherwise
     # each re-run the (possibly expensive) upstream vector pipeline.
-    from pyspark import StorageLevel
+    from ..functions.partitioning import pin
 
-    src = col.df().persist(StorageLevel.MEMORY_AND_DISK)
+    src = pin(col.df())
     mean, components = _distributed_pca_components(src, col.name)
     b_mean = mean.tolist()
     b_comp = components.tolist()

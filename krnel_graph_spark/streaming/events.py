@@ -524,7 +524,7 @@ def rollup_event_counts(
     level re-aggregates the previous level's output. Durations MUST nest
     (each an integer multiple of the finer one) — validated, because a
     non-nesting cascade silently assigns a straddling fine bucket wholly
-    to one coarse window. Each level is persisted — they are
+    to one coarse window. Each level is pinned — they are
     aggregate-sized, and without pinning, the union's branches would
     re-run the whole lineage (Spark's exchange reuse does not fire across
     the differing branch tails). At 100 TB the cascade touches raw data
@@ -532,10 +532,10 @@ def rollup_event_counts(
     continuous-aggregate design (TimescaleDB/Druid style). Output: one
     union frame tagged with a ``resolution`` column.
 
-    Batch-only (persisted cascades are illegal on streams): for streaming,
+    Batch-only (pinned cascades are illegal on streams): for streaming,
     run ``windowed_event_counts`` at the finest grain and roll up from its
     sink downstream."""
-    from pyspark import StorageLevel
+    from ..functions.partitioning import pin
 
     if events.isStreaming:
         raise ValueError(
@@ -555,7 +555,7 @@ def rollup_event_counts(
     # bit-identical total regardless of partitioning / summation order (a
     # double-sum cascade can land a ULP away from a direct sum and flip the
     # final round()). Rounding to 4 happens once, on the decimal, at the end.
-    finest = (
+    finest = pin(
         with_event_time(events)
         .groupBy(F.window("ts", durations[0]).alias("w"), "event_type")
         .agg(
@@ -568,12 +568,11 @@ def rollup_event_counts(
             "n_events",
             "sum_value",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     levels = [finest.withColumn("resolution", F.lit(durations[0]))]
     prev = finest
     for dur in durations[1:]:
-        prev = (
+        prev = pin(
             prev.groupBy(F.window("window_start", dur).alias("w"), "event_type")
             .agg(
                 F.sum("n_events").alias("n_events"),
@@ -585,7 +584,6 @@ def rollup_event_counts(
                 "n_events",
                 "sum_value",
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         levels.append(prev.withColumn("resolution", F.lit(dur)))
     out = levels[0]

@@ -342,6 +342,19 @@ def test_arpa_score_validation(spark):
         arpa_score(rows, df, "text", "doc_id", max_order=5)
 
 
+def test_arpa_score_rejects_rows_without_word_columns(spark):
+    """The word columns are checked before the model probe, which reads
+    ``w1``: a rows frame without them gets the friendly ValueError, not
+    an AnalysisException from the probe aggregate."""
+    from krnel_graph_spark.functions.arpa import arpa_score
+
+    rows = spark.createDataFrame(
+        [(1, -1.0, 0.0)], "order int, log10_p double, log10_bow double"
+    )
+    with pytest.raises(ValueError, match="rows frame carries"):
+        arpa_score(rows, _docs_df(spark), "text", "doc_id")
+
+
 def test_arpa_load_rejects_malformed(spark, tmp_path):
     from krnel_graph_spark.functions.arpa import arpa_load
 

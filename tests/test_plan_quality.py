@@ -28,6 +28,13 @@ def _exchanges(plan):
     return len(re.findall(r"\bExchange (?:hash|range|Single)", plan))
 
 
+def _reads_pins_only(plan, n):
+    """At least ``n`` consumers read pinned frames (a local pin is a
+    checkpoint, scanned as ExistingRDD) and no source file is
+    re-scanned behind them."""
+    return plan.count("Scan ExistingRDD") >= n and "FileScan" not in plan
+
+
 def test_no_row_python_udfs_in_headline(spark, entry):
     """Row-at-a-time Python (BatchEvalPython) is banned from every
     headline query — Arrow-batched (ArrowEvalPython/MapInPandas) only."""
@@ -73,9 +80,9 @@ def test_mix_corpus_is_scan_side_filter(spark, entry):
 def test_dup_windows_no_udf_and_reuses_persist(spark, entry):
     plan = _plan(spark, entry, "dup_windows")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the per-(doc,window) frame is persisted: both consumers must read
-    # the InMemoryRelation, not re-scan the parquet twice at runtime
-    assert plan.count("InMemoryTableScan") >= 2
+    # the per-(doc,window) frame is pinned: both consumers must read
+    # the pinned frame, not re-scan the parquet twice at runtime
+    assert _reads_pins_only(plan, 2)
 
 
 def test_canonical_urls_semi_join_broadcasts(spark, entry):
@@ -147,18 +154,21 @@ def test_image_dups_banded_join_no_cartesian(spark, entry):
 
 
 def test_video_dups_banded_join_and_checkpointed_frames(spark, entry):
-    """Video near-dups: frame hashes are decoded once (eager
-    localCheckpoint -> ExistingRDD scans), the per-video signature table
-    is pinned (r14: the banding self-join would otherwise aggregate the
-    frame set twice), candidates come from the LSH band equi-join, and
-    nothing degenerates into a cross product."""
+    """Video near-dups: frame hashes are decoded once (eager pin ->
+    ExistingRDD scans), the per-video signature table is pinned (the
+    banding self-join would otherwise aggregate the frame set twice),
+    candidates come from the LSH band equi-join, and nothing
+    degenerates into a cross product."""
     plan = _plan(spark, entry, "video_dups_q")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("Scan ExistingRDD") >= 1  # checkpointed frame set
-    assert "InMemoryTableScan" in plan  # pinned signature table
-    # 6, not 5: the signature pin's cached subtree prints its own
-    # aggregate Exchange under the InMemoryRelation definition.
+    assert _reads_pins_only(plan, 2)
+    # both banding-join sides read the pinned signature table
+    sig_reads = re.findall(r"Scan ExistingRDD\[doc_id#\d+L?,sig#", plan)
+    assert len(sig_reads) >= 2
+    # 6, not 5: under the cluster policy the signature pin's cached
+    # subtree prints its own aggregate Exchange under the
+    # InMemoryRelation definition.
     assert _exchanges(plan) <= 6
 
 
@@ -202,11 +212,11 @@ def test_paragraph_dedup_no_cartesian(spark, entry):
 def test_dsir_weights_broadcast_ratio_and_persist(spark, entry):
     """The fixed-size bucket-ratio table must broadcast onto the per-doc
     counts (never a sort-merge join against the big side), and the two
-    global bucket tables must come from the persisted frames."""
+    global bucket tables must come from the pinned frames."""
     plan = _plan(spark, entry, "dsir_weights")
     assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("InMemoryTableScan") >= 2
+    assert _reads_pins_only(plan, 2)
 
 
 def test_zipf_fit_topk_never_global_sorts_corpus(spark, entry):
@@ -414,9 +424,9 @@ def test_corpus_divergence_digest_join_broadcast_totals(spark, entry):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Window" not in plan
-    # the joined digest frame is persisted: both consumers (totals +
-    # final agg) must read the cache, not re-scan the corpora
-    assert plan.count("InMemoryTableScan") >= 2
+    # the joined digest frame is pinned: both consumers (totals +
+    # final agg) must read the pin, not re-scan the corpora
+    assert _reads_pins_only(plan, 2)
 
 
 def test_vocab_growth_no_per_level_rescan(spark, entry):
@@ -546,7 +556,7 @@ def test_stupid_backoff_fixed_filters_train_side_only(spark, entry):
 
     from krnel_graph_spark.functions.text import _sb_fused_grams
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     fused_plan = (
         _sb_fused_grams(docs.filter(F.col("doc_id") % 5 == 0), "text")
         ._jdf.queryExecution()
