@@ -336,8 +336,11 @@ def train_classifier(runner: SparkRunner, op: TrainClassifierOp) -> ArtifactPlan
     neg_expr = F.col("__neg") if op.negatives is not None else ~F.col("__pos")
     dom_expr = F.col("__dom") if op.train_domain is not None else F.lit(True)
 
-    overlap = df.filter(F.col("__pos") & neg_expr).limit(1).count()
-    if overlap:
+    # The default negatives are ~__pos, which cannot overlap: no job.
+    if (
+        op.negatives is not None
+        and df.filter(F.col("__pos") & neg_expr).limit(1).count()
+    ):
         raise ValueError("positives and negatives overlap")
 
     selected = df.filter((F.col("__pos") | neg_expr) & dom_expr).select(

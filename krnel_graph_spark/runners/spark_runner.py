@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
+import json
 import math
 import os
 import random
@@ -171,7 +172,19 @@ def get_spark(
     if parts is not None:
         builder = builder.config("spark.sql.shuffle.partitions", parts)
     if not os.environ.get("SPARK_MASTER") and not os.environ.get("MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        # Python workers fork from the engine's daemon, which skips the
+        # per-task re-read of pyspark.zip (see worker_daemon.py). Local
+        # only: cluster executors may not have the package. The package
+        # root goes on the workers' path so the daemon imports from any
+        # driver working directory.
+        package_root = os.path.dirname(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        )
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", package_root)
+        )
     return builder.getOrCreate()
 
 
@@ -423,7 +436,7 @@ class SparkRunner(BaseRunner):
             if self.store.is_done(dep.uuid):
                 continue
             df = self.dataset_plan(dep).df  # includes ROW_ID
-            df.write.mode("overwrite").parquet(self.store.parquet_path(dep.uuid))
+            _write_store_parquet(df, self.store.parquet_path(dep.uuid))
             self.store.mark_done(dep.uuid)
 
     # ------------------------------------------------------------------ #
@@ -521,9 +534,8 @@ class SparkRunner(BaseRunner):
                 store.write_json(op.uuid, plan.payload)
             store.mark_done(op.uuid)
             return plan
-        path = store.parquet_path(op.uuid)
         df = plan.df() if isinstance(plan, ColumnPlan) else plan.df
-        df.write.mode("overwrite").parquet(path)
+        _write_store_parquet(df, store.parquet_path(op.uuid))
         store.mark_done(op.uuid)
         return self._load_from_store(op, plan)
 
@@ -533,7 +545,7 @@ class SparkRunner(BaseRunner):
             return ArtifactPlan(payload=store.read_json(op.uuid), kind="json")
         if store.has_pickle(op.uuid):
             return ArtifactPlan(payload=store.read_pickle(op.uuid), kind="pickle")
-        df = self.spark.read.parquet(store.parquet_path(op.uuid))
+        df = _read_store_parquet(self.spark, store.parquet_path(op.uuid))
         dense = computed.dense if computed is not None else False
         value_cols = [c for c in df.columns if c != ROW_ID]
         from ..types import ColumnType
@@ -804,6 +816,27 @@ def _bucket_of(col, bounds: list[int], lo: int = 0, hi: Optional[int] = None):
     )
 
 
+def _write_store_parquet(df: DataFrame, path: str) -> None:
+    """Write a store result, then its schema next to the data. Spark's
+    file listing skips ``_``-prefixed files, and the schema is written
+    before the caller marks the result done."""
+    df.write.mode("overwrite").parquet(path)
+    with open(os.path.join(path, ResultStore.SCHEMA), "w") as f:
+        f.write(df.schema.json())
+
+
+def _read_store_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The one reader of store parquet results. A given schema spares
+    the schema-inference job (about 0.1 s per re-read); entries written
+    without a schema file are still inferred."""
+    try:
+        with open(os.path.join(path, ResultStore.SCHEMA)) as f:
+            schema = T.StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _aligned_uuid(op: OpSpec) -> str:
     """The dataset node a column op is row-aligned with."""
     for fname in ("dataset",):
@@ -836,8 +869,6 @@ def _content_identity(file_path: str) -> str:
 
 
 def _inline_identity(data: dict[str, list]) -> str:
-    import json
-
     blob = json.dumps(data, sort_keys=True, default=str)
     return hashlib.sha256(blob.encode()).hexdigest()
 
@@ -857,7 +888,7 @@ def load_parquet(runner: SparkRunner, op: LoadParquetDatasetOp) -> DatasetPlan:
         # Source not on this machine: fall back to a store copy pushed by
         # prepare() (it already carries the scan-assigned row ids).
         if runner.store is not None and runner.store.is_done(op.uuid):
-            df = spark.read.parquet(runner.store.parquet_path(op.uuid))
+            df = _read_store_parquet(spark, runner.store.parquet_path(op.uuid))
             return DatasetPlan(df=df, dataset_uuid=op.uuid, dense=False)
         raise FileNotFoundError(
             f"{op.file_path!r} not found locally and not prepared into the store"

@@ -4,6 +4,7 @@ Layout (parity with the reference's store,
 ``local_arrow_runner.py:51-57,105-152``)::
 
     {root}/{ClassName}/{hash}/result.parquet/   (a Spark parquet directory)
+                               result.parquet/_schema.json  (its schema)
                                result.json
                                result.pickle
                                status.json
@@ -31,6 +32,7 @@ from typing import Any, Optional
 
 class ResultStore:
     PARQUET = "result.parquet"
+    SCHEMA = "_schema.json"  # inside PARQUET; Spark's listing skips "_" files
     JSON = "result.json"
     PICKLE = "result.pickle"
     STATUS = "status.json"

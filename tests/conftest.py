@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,6 +28,18 @@ def lazy_runner(spark):
     from krnel_graph_spark import SparkRunner
 
     return SparkRunner(spark=spark, store_path=None)
+
+
+def jobs_during(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -10,6 +10,7 @@ import random
 
 import numpy as np
 import pytest
+from conftest import jobs_during
 
 
 @pytest.fixture()
@@ -105,3 +106,36 @@ def test_registry_covers_reference_surface():
             "logistic_regression",
             "nearest_centroid",
         }
+
+
+def test_overlapping_explicit_negatives_rejected(sep_ds):
+    runner, ds = sep_ds
+    label = ds.col_categorical("label")
+    clf = ds.col_vector("v").train_classifier(
+        positives=label.is_in({"pos"}),
+        negatives=label.is_in({"pos", "neg"}),
+        model_type="logistic_regression",
+    )
+    with pytest.raises(ValueError, match="overlap"):
+        runner.to_model(clf)
+
+
+def test_default_negatives_skip_the_overlap_job(sep_ds):
+    """Default negatives are the complement of the positives, which
+    cannot overlap them: the overlap check runs only for explicit
+    negatives."""
+    runner, ds = sep_ds
+    x = ds.col_vector("v")
+    label = ds.col_categorical("label")
+    pos = label.is_in({"pos"})
+    default = x.train_classifier(positives=pos, model_type="logistic_regression")
+    explicit = x.train_classifier(
+        positives=pos,
+        negatives=label.is_in({"neg"}),
+        model_type="logistic_regression",
+    )
+    runner.plan(x)  # lower the shared inputs outside the counts
+    runner.plan(pos)
+    jobs_default = jobs_during(runner.spark, lambda: runner.to_model(default))
+    jobs_explicit = jobs_during(runner.spark, lambda: runner.to_model(explicit))
+    assert jobs_explicit == jobs_default + 1

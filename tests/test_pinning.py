@@ -5,11 +5,10 @@ scope, and no other module in the package pins on its own."""
 from __future__ import annotations
 
 import re
-import uuid
 from pathlib import Path
 
 import pytest
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_during
 from pyspark.sql import functions as F
 
 import krnel_graph_spark
@@ -35,17 +34,6 @@ def _cached(df) -> bool:
     return level.useMemory or level.useDisk
 
 
-def _jobs_during(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"pin-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "pinning test")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_local_master_predicate():
     assert partitioning._local_master("local")
     assert partitioning._local_master("local[4]")
@@ -69,8 +57,8 @@ def test_local_pin_eagerness(spark):
     # shuffle-free: with AQE, building a shuffled frame's RDD already
     # runs its map stages, eager or not
     df = _frame(spark).filter("k = 1")
-    assert _jobs_during(spark, lambda: pin(df)) == 0
-    assert _jobs_during(spark, lambda: pin(df, eager=True)) >= 1
+    assert jobs_during(spark, lambda: pin(df)) == 0
+    assert jobs_during(spark, lambda: pin(df, eager=True)) >= 1
 
 
 def test_local_scope_is_a_no_op(spark):
@@ -90,9 +78,9 @@ def test_cluster_pin_persists_memory_and_disk(spark, cluster_policy):
     plan = pinned._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan  # lineage kept behind the cache
     lazy = _frame(spark).filter("k = 1")
-    assert _jobs_during(spark, lambda: pin(lazy)) == 0
+    assert jobs_during(spark, lambda: pin(lazy)) == 0
     eager = _frame(spark).filter("k = 2")
-    assert _jobs_during(spark, lambda: pin(eager, eager=True)) >= 1
+    assert jobs_during(spark, lambda: pin(eager, eager=True)) >= 1
 
 
 def test_cluster_scope_releases_on_exit(spark, cluster_policy):
