@@ -21,6 +21,7 @@ from typing import Any, Callable, Optional
 import numpy as np
 import pandas as pd
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,7 +31,7 @@ from ..operators.classifier_ops import (
     ClassifierPredictOp,
     TrainClassifierOp,
 )
-from .plan import ROW_ID, VALUE, ArtifactPlan, ColumnPlan
+from .plan import VALUE, ArtifactPlan, ColumnPlan
 from .spark_runner import SparkRunner
 
 # ---------------------------------------------------------------------- #
@@ -289,30 +290,16 @@ class TrainedProbe:
 
 
 # ---------------------------------------------------------------------- #
-# Column gathering helper                                                 #
+# Column alignment                                                         #
 # ---------------------------------------------------------------------- #
 
 
-def _gather(runner: SparkRunner, primary: ColumnPlan, extras: dict[str, ColumnPlan]):
-    """One DataFrame holding the primary column plus row-aligned extras.
-    Same-dataset columns fuse as expressions; cross-dataset fall back to
-    row-id joins (all plans here retain original ids)."""
-    df = primary.source
-    cols = [F.col(ROW_ID), primary.expr.alias("__x")]
-    pending = {}
-    for key, plan in extras.items():
-        # Fusion requires the SAME physical DataFrame, not just the same
-        # row-id domain (a mapInPandas-derived column lives elsewhere).
-        if plan.aligned_with == primary.aligned_with and plan.source is df:
-            cols.append(plan.expr.alias(key))
-        else:
-            pending[key] = plan
-    out = df.select(*cols)
-    for key, plan in pending.items():
-        out = out.join(
-            plan.df().withColumnRenamed(plan.name, key), ROW_ID, "inner"
-        )
-    return out
+def _aligned(runner: SparkRunner, **ops) -> tuple[DataFrame, dict[str, Column]]:
+    """One frame holding the given column ops (``None`` ones skipped) row
+    by row, through the runner's aligner; rows are the first op's."""
+    ops = {k: v for k, v in ops.items() if v is not None}
+    df, exprs = runner.align_columns(*(runner.column_plan(v) for v in ops.values()))
+    return df, dict(zip(ops, exprs))
 
 
 # ---------------------------------------------------------------------- #
@@ -322,29 +309,18 @@ def _gather(runner: SparkRunner, primary: ColumnPlan, extras: dict[str, ColumnPl
 
 @SparkRunner.implementation
 def train_classifier(runner: SparkRunner, op: TrainClassifierOp) -> ArtifactPlan:
-    from ..operators.dataset_ops import BooleanLogicOp
+    df, c = _aligned(
+        runner, x=op.x, pos=op.positives, neg=op.negatives, dom=op.train_domain
+    )
+    pos = c["pos"]
+    neg = c.get("neg", ~pos)
 
-    x = runner.column_plan(op.x)
-    pos = runner.column_plan(op.positives)
-    extras = {"__pos": pos}
-    if op.negatives is not None:
-        extras["__neg"] = runner.column_plan(op.negatives)
-    if op.train_domain is not None:
-        extras["__dom"] = runner.column_plan(op.train_domain)
-
-    df = _gather(runner, x, extras)
-    neg_expr = F.col("__neg") if op.negatives is not None else ~F.col("__pos")
-    dom_expr = F.col("__dom") if op.train_domain is not None else F.lit(True)
-
-    # The default negatives are ~__pos, which cannot overlap: no job.
-    if (
-        op.negatives is not None
-        and df.filter(F.col("__pos") & neg_expr).limit(1).count()
-    ):
+    # The default negatives are ~pos, which cannot overlap: no job.
+    if "neg" in c and df.filter(pos & neg).limit(1).count():
         raise ValueError("positives and negatives overlap")
 
-    selected = df.filter((F.col("__pos") | neg_expr) & dom_expr).select(
-        "__x", F.col("__pos").alias("__y")
+    selected = df.filter((pos | neg) & c.get("dom", F.lit(True))).select(
+        c["x"].alias("__x"), pos.alias("__y")
     )
 
     if op.mode == "spark":
@@ -452,24 +428,20 @@ def classifier_predict(runner: SparkRunner, op: ClassifierPredictOp) -> ColumnPl
 
 @SparkRunner.implementation
 def classifier_evaluate(runner: SparkRunner, op: ClassifierEvaluationOp) -> ArtifactPlan:
-    scores = runner.column_plan(op.scores)
-    extras = {"__pos": runner.column_plan(op.gt_positives)}
-    if op.gt_negatives is not None:
-        extras["__neg"] = runner.column_plan(op.gt_negatives)
-    if op.predict_domain is not None:
-        extras["__dom"] = runner.column_plan(op.predict_domain)
-    if op.split is not None:
-        extras["__split"] = runner.column_plan(op.split)
-
-    df = _gather(runner, scores, extras)
-    neg_expr = F.col("__neg") if op.gt_negatives is not None else ~F.col("__pos")
-    dom_expr = F.col("__dom") if op.predict_domain is not None else F.lit(True)
-    split_expr = F.col("__split") if op.split is not None else F.lit("all")
-
-    eligible = df.filter(dom_expr & (F.col("__pos") | neg_expr)).select(
-        F.col("__x").cast("double").alias("score"),
-        F.col("__pos").alias("label"),
-        split_expr.alias("split"),
+    df, c = _aligned(
+        runner,
+        x=op.scores,
+        pos=op.gt_positives,
+        neg=op.gt_negatives,
+        dom=op.predict_domain,
+        split=op.split,
+    )
+    pos = c["pos"]
+    neg = c.get("neg", ~pos)
+    eligible = df.filter(c.get("dom", F.lit(True)) & (pos | neg)).select(
+        c["x"].cast("double").alias("score"),
+        pos.alias("label"),
+        c.get("split", F.lit("all")).alias("split"),
     )
 
     threshold = op.threshold

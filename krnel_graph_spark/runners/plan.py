@@ -3,16 +3,20 @@
 The central scale decision: column operators do NOT materialize single-column
 tables (the reference's model, ``local_arrow_runner.py:331-339``). Instead a
 lowered column is a *Catalyst expression over its source DataFrame*
-(:class:`ColumnPlan`). Combining two columns that are row-aligned with the
-same dataset node composes expressions — zero joins, zero shuffles, one
-whole-stage-codegen'd scan. Only genuinely cross-dataset positional
-combinations fall back to an explicit rank-aligned zip join.
+(:class:`ColumnPlan`). ``SparkRunner.align_columns`` is the one rule for
+combining columns row by row: expressions over one source frame fuse (zero
+joins, one whole-stage-codegen'd scan); columns of one row domain
+(``aligned_with``) on different frames equi-join on ``__row_id``; anything
+else is zipped by rank (positional semantics) after one equal-length check.
 
 Row discipline: every dataset DataFrame carries a stable ``__row_id`` column
 assigned at scan time (parquet ``_metadata.row_index`` + file ordinal — no
 shuffle, reproducible across recomputation). Filters keep original ids;
-exports sort by id; cross-column ops align by id (same row set) or by rank
-(positional zip).
+exports sort by id.
+
+A stored result records its plan's row domain, ``dense`` and ``is_json`` in
+the metadata of its ``__row_id`` field, so a store hit rebuilds exactly the
+plan its compute produced.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ from typing import Any, Optional, Union
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -88,7 +88,7 @@ from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
 from ..plans.op_spec import OpSpec
 from ..plans.status import OpState, OpStatus, utcnow
-from ..types import DatasetType, JSONColumnType
+from ..types import JSONColumnType
 from .base import BaseRunner
 from .plan import ROW_ID, VALUE, ArtifactPlan, ColumnPlan, DatasetPlan
 from .store import ResultStore
@@ -435,8 +435,8 @@ class SparkRunner(BaseRunner):
                 continue
             if self.store.is_done(dep.uuid):
                 continue
-            df = self.dataset_plan(dep).df  # includes ROW_ID
-            _write_store_parquet(df, self.store.parquet_path(dep.uuid))
+            ds = self.dataset_plan(dep)  # includes ROW_ID
+            _write_store_parquet(_with_plan_facts(ds), self.store.parquet_path(dep.uuid))
             self.store.mark_done(dep.uuid)
 
     # ------------------------------------------------------------------ #
@@ -534,36 +534,42 @@ class SparkRunner(BaseRunner):
                 store.write_json(op.uuid, plan.payload)
             store.mark_done(op.uuid)
             return plan
-        df = plan.df() if isinstance(plan, ColumnPlan) else plan.df
-        _write_store_parquet(df, store.parquet_path(op.uuid))
+        _write_store_parquet(_with_plan_facts(plan), store.parquet_path(op.uuid))
         store.mark_done(op.uuid)
-        return self._load_from_store(op, plan)
+        return self._load_from_store(op)
 
-    def _load_from_store(self, op: OpSpec, computed=None):
+    def _load_from_store(self, op: OpSpec):
+        """Rebuild a stored result's plan from the store entry alone, so a
+        hit plans exactly like the compute that wrote it (which reads its
+        result back through here too)."""
         store = self.store
         if store.has_json(op.uuid):
             return ArtifactPlan(payload=store.read_json(op.uuid), kind="json")
         if store.has_pickle(op.uuid):
             return ArtifactPlan(payload=store.read_pickle(op.uuid), kind="pickle")
         df = _read_store_parquet(self.spark, store.parquet_path(op.uuid))
-        dense = computed.dense if computed is not None else False
+        # Entries written without recorded facts: their own row domain,
+        # not dense, JSON exactly when stored as VARIANT.
+        facts = df.schema[ROW_ID].metadata.get(_PLAN_FACTS, {})
+        domain = facts.get("aligned_with", op.uuid)
+        dense = facts.get("dense", False)
         value_cols = [c for c in df.columns if c != ROW_ID]
         from ..types import ColumnType
 
         if isinstance(op, ColumnType) and len(value_cols) == 1:
             name = value_cols[0]
-            is_json = bool(getattr(computed, "is_json", False)) or isinstance(
-                df.schema[name].dataType, T.VariantType
+            is_json = facts.get(
+                "is_json", isinstance(df.schema[name].dataType, T.VariantType)
             )
             return ColumnPlan(
                 source=df,
                 expr=F.col(name),
                 name=name,
-                aligned_with=_aligned_uuid(op),
+                aligned_with=domain,
                 dense=dense,
                 is_json=is_json,
             )
-        return DatasetPlan(df=df, dataset_uuid=op.uuid, dense=dense)
+        return DatasetPlan(df=df, dataset_uuid=domain, dense=dense)
 
     def has_result(self, op: OpSpec) -> bool:
         """Parity with the reference's recursive ``has_result``
@@ -620,12 +626,7 @@ class SparkRunner(BaseRunner):
         return df
 
     def to_pandas(self, op: OpSpec) -> pd.DataFrame:
-        plan = self.plan(op)
-        if isinstance(plan, ArtifactPlan):
-            raise TypeError(f"{op.short_name()} is an artifact; use to_json")
-        df = plan.df() if isinstance(plan, ColumnPlan) else plan.df
-        if isinstance(plan, ColumnPlan) and plan.is_json:
-            df = df.select(ROW_ID, F.to_json(F.col(plan.name)).alias(plan.name))
+        df = self.dataframe(op, keep_row_id=True)
         with _translate_runtime_errors():
             return df.orderBy(ROW_ID).drop(ROW_ID).toPandas()
 
@@ -676,65 +677,56 @@ class SparkRunner(BaseRunner):
             raise TypeError(f"Expected a dataset op, got {op.short_name()}")
         return plan
 
-    def align_columns(
-        self, left: ColumnPlan, right: ColumnPlan
-    ) -> tuple[DataFrame, Any, Any, ColumnPlan]:
-        """Make two columns combinable row-by-row.
+    def align_columns(self, *plans: ColumnPlan) -> tuple[DataFrame, list[Column]]:
+        """Put columns side by side, row by row — the one alignment rule.
 
-        Fast path (same aligned dataset AND same physical DataFrame):
-        compose raw expressions — no join, stays in one codegen stage.
-        Same row-id domain but a *different* physical DataFrame (a
-        mapInPandas/driver-side op replaced the source, e.g. LLM outputs,
-        UMAP coords): equi-join on ``__row_id`` — cheap, no rank pass.
-        Fallback (different datasets, reference §1.5 positional semantics):
-        zip by rank over row-id order after an equal-length check.
-        Returns (df, left_expr, right_expr, template_plan).
-        """
-        if left.aligned_with == right.aligned_with:
-            if left.source is right.source:
-                return left.source, left.expr, right.expr, left
-            return self._id_zip(left, right)
-        return self._rank_zip(left, right)
+        * One shared source frame: fuse the raw expressions — no join, one
+          codegen stage, filters still push down to the scan.
+        * One shared row domain (``aligned_with``) over different frames
+          (a mapInPandas/driver-side op replaced the source, e.g. LLM
+          outputs, UMAP coords): equi-join on ``__row_id`` — the ids
+          already correspond, so no rank pass.
+        * Otherwise (reference §1.5 positional semantics): zip by rank
+          over row-id order after one equal-length check.
 
-    def _id_zip(self, left: ColumnPlan, right: ColumnPlan):
-        """Join two columns from the same row-id domain on ``__row_id``.
-        Fusing their expressions would be an AnalysisException (they live on
-        different DataFrames); a rank pass is unnecessary (ids already
-        correspond)."""
-        lc = left.df().select(F.col(ROW_ID), F.col(left.name).alias("__l"))
-        rc = right.df().select(F.col(ROW_ID), F.col(right.name).alias("__r"))
-        joined = lc.join(rc, ROW_ID)
-        plan = ColumnPlan(
-            source=joined,
-            expr=F.col("__l"),
-            name=left.name,
-            aligned_with=left.aligned_with,
-            dense=left.dense,
-        )
-        return joined, F.col("__l"), F.col("__r"), plan
+        Columns sharing a frame are selected from it together, so each
+        distinct frame is joined (or ranked) once. Returns the frame and
+        one expression per plan, in order. Its rows carry the first
+        plan's row ids, domain and density."""
+        by_source: dict[int, list[int]] = {}
+        for i, p in enumerate(plans):
+            by_source.setdefault(id(p.source), []).append(i)
+        if len(by_source) == 1:
+            return plans[0].source, [p.expr for p in plans]
+        frames = [
+            plans[ix[0]].source.select(
+                ROW_ID, *(plans[i].expr.alias(f"__a{i}") for i in ix)
+            )
+            for ix in by_source.values()
+        ]
+        if all(p.aligned_with == plans[0].aligned_with for p in plans):
+            df = frames[0]
+            for frame in frames[1:]:
+                df = df.join(frame, ROW_ID)
+        else:
+            df = self._rank_zip(*frames)
+        return df, [F.col(f"__a{i}") for i in range(len(plans))]
 
-    def _rank_zip(self, left: ColumnPlan, right: ColumnPlan):
-        lc, rc = left.df(), right.df()
-        lr, n_left = self._ranked_with_count(
-            lc.select(F.col(ROW_ID), F.col(left.name).alias("__l"))
-        )
-        rr, n_right = self._ranked_with_count(
-            rc.select(F.col(ROW_ID), F.col(right.name).alias("__r"))
-        )
-        if n_left != n_right:
+    def _rank_zip(self, *frames: DataFrame) -> DataFrame:
+        """Zip ``(__row_id, ...)`` frames by rank over row-id order, keeping
+        the first frame's ids. The rank passes' counts are the one
+        equal-length check."""
+        ranked = [self._ranked_with_count(f) for f in frames]
+        lengths = [n for _, n in ranked]
+        if len(set(lengths)) > 1:
             raise ValueError(
                 f"Positional combination of columns with different lengths: "
-                f"{n_left} vs {n_right}"
+                f"{' vs '.join(map(str, lengths))}"
             )
-        joined = lr.join(rr.select("__r", "__rank"), "__rank").drop("__rank")
-        plan = ColumnPlan(
-            source=joined,
-            expr=F.col("__l"),
-            name=left.name,
-            aligned_with=left.aligned_with,
-            dense=left.dense,
-        )
-        return joined, F.col("__l"), F.col("__r"), plan
+        df = ranked[0][0]
+        for r, _ in ranked[1:]:
+            df = df.join(r.drop(ROW_ID), "__rank")
+        return df.drop("__rank")
 
     def ranked(self, df: DataFrame) -> DataFrame:
         """Attach a 0-based global rank ``__rank`` in ROW_ID order — the
@@ -816,6 +808,22 @@ def _bucket_of(col, bounds: list[int], lo: int = 0, hi: Optional[int] = None):
     )
 
 
+_PLAN_FACTS = "krnel.plan"  # key of the plan facts in __row_id's field metadata
+
+
+def _with_plan_facts(plan: Union[DatasetPlan, ColumnPlan]) -> DataFrame:
+    """The frame to store for ``plan``: its ``__row_id`` field records the
+    facts a reload needs to plan like the compute — row domain, density
+    and JSON-ness. Field metadata flows through selects, so the facts are
+    always set here, never inherited from a stored upstream."""
+    if isinstance(plan, ColumnPlan):
+        df, domain, is_json = plan.df(), plan.aligned_with, plan.is_json
+    else:
+        df, domain, is_json = plan.df, plan.dataset_uuid, False
+    facts = {"aligned_with": domain, "dense": plan.dense, "is_json": is_json}
+    return df.withMetadata(ROW_ID, {_PLAN_FACTS: facts})
+
+
 def _write_store_parquet(df: DataFrame, path: str) -> None:
     """Write a store result, then its schema next to the data. Spark's
     file listing skips ``_``-prefixed files, and the schema is written
@@ -835,15 +843,6 @@ def _read_store_parquet(spark: SparkSession, path: str) -> DataFrame:
     except FileNotFoundError:
         return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
-
-
-def _aligned_uuid(op: OpSpec) -> str:
-    """The dataset node a column op is row-aligned with."""
-    for fname in ("dataset",):
-        value = getattr(op, fname, None)
-        if isinstance(value, DatasetType):
-            return value.uuid
-    return op.uuid
 
 
 def _content_identity(file_path: str) -> str:
@@ -888,8 +887,7 @@ def load_parquet(runner: SparkRunner, op: LoadParquetDatasetOp) -> DatasetPlan:
         # Source not on this machine: fall back to a store copy pushed by
         # prepare() (it already carries the scan-assigned row ids).
         if runner.store is not None and runner.store.is_done(op.uuid):
-            df = _read_store_parquet(spark, runner.store.parquet_path(op.uuid))
-            return DatasetPlan(df=df, dataset_uuid=op.uuid, dense=False)
+            return runner._load_from_store(op)
         raise FileNotFoundError(
             f"{op.file_path!r} not found locally and not prepared into the store"
         )
@@ -976,6 +974,14 @@ def load_orc(runner: SparkRunner, op: LoadORCDatasetOp) -> DatasetPlan:
     parquet). Row ids follow the text-source policy: written ids are
     re-adopted on round-trips, fresh scans get stable monotonic ids."""
     return _text_scan_with_row_ids(runner.spark.read.orc(op.file_path), op.uuid)
+
+
+def _fresh_ids(df: DataFrame, *order) -> DataFrame:
+    """Fresh dense row ids 0..n-1 in ``order``. The global window runs in
+    one task, so only for results bounded by contract (top-k, pair and
+    bin tables)."""
+    w = Window.orderBy(*order)
+    return df.select((F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*")
 
 
 @SparkRunner.implementation
@@ -1097,8 +1103,6 @@ def ann_topk_op(runner: SparkRunner, op: AnnTopKOp) -> DatasetPlan:
     """Two-parent exact cosine top-k (queries broadcast). Fresh dense row
     ids in (query, rank) order — legal because the result is bounded by
     contract (|queries| x k), the same contract as the rrf/top-k frames."""
-    from pyspark.sql import Window as _W
-
     from ..functions.similarity import cosine_topk as _impl
 
     corpus = runner.dataset_plan(op.dataset)
@@ -1110,11 +1114,9 @@ def ann_topk_op(runner: SparkRunner, op: AnnTopKOp) -> DatasetPlan:
         op.id_column,
         k=op.k,
     )
-    w = _W.orderBy("query_id", "rank")
-    out = out.select(
-        (F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*"
+    return DatasetPlan(
+        df=_fresh_ids(out, "query_id", "rank"), dataset_uuid=op.uuid, dense=True
     )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=True)
 
 
 @SparkRunner.implementation
@@ -1228,8 +1230,6 @@ def winnow_pairs_op(runner: SparkRunner, op: WinnowPairsOp) -> DatasetPlan:
     """Winnowing pair mining keyed on the engine row id; the result is
     a bounded pair table, so fresh dense row ids in (doc_a, doc_b)
     order (the AnnTopKOp contract)."""
-    from pyspark.sql import Window as _W
-
     from ..functions.dedup import winnow_pairs as _impl
 
     ds = runner.dataset_plan(op.dataset)
@@ -1242,11 +1242,9 @@ def winnow_pairs_op(runner: SparkRunner, op: WinnowPairsOp) -> DatasetPlan:
         min_shared=op.min_shared,
         max_doc_freq=op.max_doc_freq,
     )
-    w = _W.orderBy("doc_a", "doc_b")
-    out = out.select(
-        (F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*"
+    return DatasetPlan(
+        df=_fresh_ids(out, "doc_a", "doc_b"), dataset_uuid=op.uuid, dense=True
     )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=True)
 
 
 @SparkRunner.implementation
@@ -1501,38 +1499,22 @@ def take_rows(runner: SparkRunner, op: TakeRowsOp) -> DatasetPlan:
 @SparkRunner.implementation
 def mask_rows(runner: SparkRunner, op: MaskRowsOp) -> DatasetPlan:
     """Filter by a row-aligned boolean column. Same-dataset masks fuse into a
-    plain ``Filter`` over the scan (predicate pushdown applies); masks from a
+    plain ``Filter`` over the scan (predicate pushdown applies); masks of the
+    same row domain on another frame join on the row id; masks from a
     *different* same-length dataset use the positional rank-zip."""
     ds = runner.dataset_plan(op.dataset)
     mask = runner.column_plan(op.mask)
     _require_boolean(mask)
-    if mask.aligned_with == op.dataset.uuid:
-        if mask.source is ds.df:
-            # Same physical DataFrame: fuse into a plain Filter.
-            out = ds.df.filter(mask.expr)
-        else:
-            # Same row-id domain, different physical DataFrame (mask built
-            # from a mapInPandas/driver-side column): semi-join on row id.
-            keep = mask.df().filter(F.col(mask.name)).select(ROW_ID)
-            out = ds.df.join(keep, ROW_ID, "left_semi")
-        return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-    # Positional fallback: i-th row of the dataset pairs with i-th mask value.
-    n_ds = ds.df.count()
-    mask_df = mask.df()
-    n_mask = mask_df.count()
-    if n_ds != n_mask:
-        raise ValueError(
-            f"Mask length {n_mask} does not match dataset length {n_ds}"
-        )
-    ds_ranked = runner.ranked(ds.df)
-    mask_ranked = runner.ranked(mask_df).select(
-        F.col("__rank"), F.col(mask.name).alias("__mask")
+    # The dataset's rows ride through the aligner as one struct column.
+    rows = ColumnPlan(
+        source=ds.df,
+        expr=F.struct(F.col("*")),
+        name="__rows",
+        aligned_with=op.dataset.uuid,
+        dense=ds.dense,
     )
-    out = (
-        ds_ranked.join(mask_ranked, "__rank")
-        .filter(F.col("__mask"))
-        .drop("__rank", "__mask")
-    )
+    df, (row, keep) = runner.align_columns(rows, mask)
+    out = df.filter(keep).select(row.alias("__rows")).select("__rows.*")
     return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
 
 
@@ -1589,14 +1571,14 @@ def boolean_logic(runner: SparkRunner, op: BooleanLogicOp) -> ColumnPlan:
         )
     right = runner.column_plan(op.right)
     _require_boolean(right)
-    df, l, r, template = runner.align_columns(left, right)
+    df, (l, r) = runner.align_columns(left, right)
     combined = {"and": l & r, "or": l | r, "xor": l != r}[op.operation]
     return ColumnPlan(
         source=df,
         expr=combined,
         name=VALUE,
-        aligned_with=template.aligned_with,
-        dense=template.dense,
+        aligned_with=left.aligned_with,
+        dense=left.dense,
     )
 
 
@@ -1604,7 +1586,7 @@ def boolean_logic(runner: SparkRunner, op: BooleanLogicOp) -> ColumnPlan:
 def pairwise_arithmetic(runner: SparkRunner, op: PairwiseArithmeticOp) -> ColumnPlan:
     left = runner.column_plan(op.left)
     right = runner.column_plan(op.right)
-    df, l, r, template = runner.align_columns(left, right)
+    df, (l, r) = runner.align_columns(left, right)
     l, r = l.cast("double"), r.cast("double")
     if op.operation == "+":
         expr = l + r
@@ -1624,8 +1606,8 @@ def pairwise_arithmetic(runner: SparkRunner, op: PairwiseArithmeticOp) -> Column
         source=df,
         expr=expr,
         name=VALUE,
-        aligned_with=template.aligned_with,
-        dense=template.dense,
+        aligned_with=left.aligned_with,
+        dense=left.dense,
     )
 
 
@@ -1692,63 +1674,15 @@ def jinja_templatize(runner: SparkRunner, op: JinjaTemplatizeOp) -> ColumnPlan:
     import jinja2
 
     names = sorted(op.context)
-    plans = {k: runner.column_plan(v) for k, v in op.context.items()}
-    json_vars = {k for k, v in op.context.items() if isinstance(v, JSONColumnType)}
-
-    if not plans:
+    if not names:
         raise ValueError("template requires at least one column variable")
-
-    aligned = {p.aligned_with for p in plans.values()}
-    sources = {id(p.source) for p in plans.values()}
-    if len(aligned) == 1 and len(sources) == 1:
-        base = next(iter(plans.values()))
-        df = base.source
-        exprs = {
-            k: (F.to_json(p.expr) if k in json_vars and p.is_json else p.expr)
-            for k, p in plans.items()
-        }
-    elif len(aligned) == 1:
-        # Same row-id domain, different physical DataFrames (e.g. an
-        # LLM-generated variable next to a plain column): equi-join the
-        # single-column frames on ROW_ID — no rank pass needed.
-        base = plans[names[0]]
-        df = base.df().withColumnRenamed(base.name, f"__v_{names[0]}")
-        for k in names[1:]:
-            p = plans[k]
-            df = df.join(
-                p.df().withColumnRenamed(p.name, f"__v_{k}"), ROW_ID
-            )
-        exprs = {
-            k: (
-                F.to_json(F.col(f"__v_{k}"))
-                if k in json_vars and plans[k].is_json
-                else F.col(f"__v_{k}")
-            )
-            for k in names
-        }
-    else:
-        # Cross-dataset context: positional rank-zip of every column.
-        first = plans[names[0]]
-        df = runner.ranked(first.df()).withColumnRenamed(first.name, f"__v_{names[0]}")
-        n0 = df.count()
-        for k in names[1:]:
-            p = plans[k]
-            pdf_k = runner.ranked(p.df()).select(
-                F.col("__rank"), F.col(p.name).alias(f"__v_{k}")
-            )
-            if pdf_k.count() != n0:
-                raise ValueError("Template context columns have different lengths")
-            df = df.join(pdf_k, "__rank")
-        df = df.drop("__rank")
-        exprs = {
-            k: (
-                F.to_json(F.col(f"__v_{k}"))
-                if k in json_vars and plans[k].is_json
-                else F.col(f"__v_{k}")
-            )
-            for k in names
-        }
-        base = plans[names[0]]
+    plans = [runner.column_plan(op.context[k]) for k in names]
+    json_vars = {k for k, v in op.context.items() if isinstance(v, JSONColumnType)}
+    df, cols = runner.align_columns(*plans)
+    exprs = [
+        F.to_json(c) if k in json_vars and p.is_json else c
+        for k, p, c in zip(names, plans, cols)
+    ]
 
     # Per-row Jinja rendering is CPU-bound: a sizeable parquet source can
     # still arrive as ONE input split (= one busy core across the whole
@@ -1782,13 +1716,12 @@ def jinja_templatize(runner: SparkRunner, op: JinjaTemplatizeOp) -> ColumnPlan:
             out.append(text)
         return pd.Series(out, dtype="object")
 
-    expr = render(*[exprs[k] for k in names])
     return ColumnPlan(
         source=df,
-        expr=expr,
+        expr=render(*exprs),
         name=VALUE,
-        aligned_with=base.aligned_with,
-        dense=base.dense,
+        aligned_with=plans[0].aligned_with,
+        dense=plans[0].dense,
     )
 
 
@@ -1940,17 +1873,11 @@ def calibration_bins_op(
 ) -> DatasetPlan:
     """Reliability-curve aggregate: a bounded ``bins``-row table, fresh
     dense row ids in bin order (the bounded-aggregate contract)."""
-    from pyspark.sql import Window as _W
-
     from ..functions.metrics import calibration_bins as _impl
 
     ds = runner.dataset_plan(op.dataset)
     out = _impl(ds.df, op.score_column, op.label_column, bins=op.bins)
-    w = _W.orderBy("bin")
-    out = out.select(
-        (F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*"
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=True)
+    return DatasetPlan(df=_fresh_ids(out, "bin"), dataset_uuid=op.uuid, dense=True)
 
 
 @SparkRunner.implementation
@@ -1974,12 +1901,7 @@ def pmi_collocations_op(
             ds.df, op.text_column, min_count=op.min_count, top_k=op.top_k
         )
         scored = scope.keep(pin(scored, eager=True))
-    from pyspark.sql import Window as _W
-
-    w = _W.orderBy(F.col("pmi").desc(), "w1", "w2")
-    out = scored.select(
-        (F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*"
-    )
+    out = _fresh_ids(scored, F.col("pmi").desc(), "w1", "w2")
     return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=True)
 
 

@@ -2,20 +2,98 @@
 (mapInPandas LLM outputs, driver-side UMAP coords) must still combine with
 sibling columns of the originating dataset — via a row-id equi-join, not
 expression fusion (which would reference columns across two DataFrames and
-fail analysis)."""
+fail analysis). On a store-backed runner the same holds for stored
+columns, and a hit from a fresh runner plans exactly like the compute."""
+
+import ast
+from pathlib import Path
 
 import pytest
+from conftest import jobs_during
+
+import krnel_graph_spark
+from krnel_graph_spark import SparkRunner
+from krnel_graph_spark.runners.plan import ArtifactPlan, ColumnPlan
+
+TEXT = {
+    "text": ["alpha beta", "gamma", "delta epsilon zeta", "eta"],
+    "score": [1.0, 2.0, 3.0, 4.0],
+}
 
 
-@pytest.fixture()
-def text_ds(lazy_runner):
-    ds = lazy_runner.from_inline_dataset(
-        {
-            "text": ["alpha beta", "gamma", "delta epsilon zeta", "eta"],
-            "score": [1.0, 2.0, 3.0, 4.0],
-        }
+@pytest.fixture(params=["lazy", "store"])
+def text_ds(request):
+    runner = request.getfixturevalue(
+        "lazy_runner" if request.param == "lazy" else "runner"
     )
-    return lazy_runner, ds
+    return runner, runner.from_inline_dataset(TEXT)
+
+
+def _fresh(runner) -> SparkRunner:
+    """A new runner of the same kind: same store (hits) or none."""
+    root = runner.store.root if runner.store is not None else None
+    return SparkRunner(spark=runner.spark, store_path=root)
+
+
+def _facts(plan):
+    if isinstance(plan, ColumnPlan):
+        return plan.aligned_with, plan.dense, plan.is_json
+    return plan.dataset_uuid, plan.dense
+
+
+def _run(runner, op):
+    """Materialize every stored input of ``op``, then export it: the
+    export's values and Spark jobs, and the plan facts of every node."""
+    graph = [*op.get_dependencies(recursive=True), op]
+    for node in graph:
+        if not node.is_ephemeral:
+            runner.plan(node)
+    out = []
+    jobs = jobs_during(runner.spark, lambda: out.append(runner.to_pandas(op)))
+    facts = {
+        node.uuid: _facts(plan)
+        for node in graph
+        if not isinstance(plan := runner.plan(node), ArtifactPlan)
+    }
+    return out[0], jobs, facts
+
+
+_CASES = {
+    "llm_column": lambda ds: ds.col_text("text")
+    .llm_logit_scores("fake:dim4", tokens=["yes"])
+    .col(0)
+    + ds.col_score("score"),
+    "activations": lambda ds: ds.col_text("text")
+    .llm_layer_activations("fake:dim4", layer_num=-1)
+    .col(1)
+    + ds.col_score("score"),
+    "llm_mask": lambda ds: ds.mask_rows(
+        ds.col_text("text").llm_generate_text("fake:dim4", max_tokens=8).is_in({""})
+        | ds.col_categorical("text").is_in({"gamma", "eta"})
+    ),
+    "template": lambda ds: ds.template(
+        "{{orig}}::{{gen}}",
+        orig=ds.col_text("text"),
+        gen=ds.col_text("text").llm_generate_text("fake:dim4", max_tokens=6),
+    ),
+    "dense_take": lambda ds: ds.text_stats("text").take(2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_hit_plans_like_the_compute(text_ds, case):
+    """Every node keeps the row domain, density and JSON-ness of a plain
+    store-less compute, and a hit from a fresh runner exports the same
+    values with the same Spark jobs as the runner that computed it."""
+    runner, ds = text_ds
+    op = _CASES[case](ds)
+    ref_out, _, ref_facts = _run(SparkRunner(spark=runner.spark), op)
+    out, jobs, facts = _run(runner, op)
+    hit_out, hit_jobs, hit_facts = _run(_fresh(runner), op)
+    assert facts == ref_facts
+    assert hit_facts == facts
+    assert out.equals(ref_out) and hit_out.equals(out)
+    assert hit_jobs == jobs
 
 
 def test_llm_column_combines_with_sibling(text_ds):
@@ -207,3 +285,30 @@ def test_distributed_pca_partition_invariant_at_round6(spark):
     c = coords(df.repartition(5))
     np.testing.assert_array_equal(a, b)
     np.testing.assert_array_equal(a, c)
+
+
+_RANKERS = {"ranked", "_ranked_with_count"}
+
+
+def test_only_the_rank_tier_and_take_rank():
+    """Positional alignment has one home: outside ``ranked`` itself,
+    only the aligner's rank tier and ``take_rows`` rank a frame."""
+    root = Path(krnel_graph_spark.__file__).parent
+    callers = set()
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _RANKERS
+                ):
+                    callers.add(f"{path.relative_to(root)}:{fn.name}")
+    assert callers == {
+        "runners/spark_runner.py:ranked",
+        "runners/spark_runner.py:_rank_zip",
+        "runners/spark_runner.py:take_rows",
+    }

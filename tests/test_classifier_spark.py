@@ -139,3 +139,35 @@ def test_default_negatives_skip_the_overlap_job(sep_ds):
     jobs_default = jobs_during(runner.spark, lambda: runner.to_model(default))
     jobs_explicit = jobs_during(runner.spark, lambda: runner.to_model(explicit))
     assert jobs_explicit == jobs_default + 1
+
+
+def _odd_rows(runner, n_odd):
+    """Labels from another dataset, masked to its first ``n_odd`` odd
+    rows: ids 1, 3, 5, ... — not contiguous, not the vectors' ids."""
+    other = runner.from_inline_dataset(
+        {"k": [str(i) for i in range(16)], "y": [i >= 8 for i in range(16)]}
+    )
+    keep = {str(i) for i in range(1, 2 * n_odd, 2)}
+    return other.mask_rows(other.col_categorical("k").is_in(keep))
+
+
+def test_cross_dataset_labels_pair_by_position(lazy_runner):
+    """Vectors of one 8-row dataset and labels of another 8-row dataset
+    combine row by row, like every other positional op; joining on row
+    ids would keep the 4 shared ids only (all negatives)."""
+    runner = lazy_runner
+    x = runner.from_inline_dataset({"v": [[float(i), 1.0] for i in range(8)]})
+    x = x.col_vector("v")
+    labels = _odd_rows(runner, 8).col_boolean("y")
+    clf = x.train_classifier(positives=labels, model_type="logistic_regression")
+    report = runner.to_json(clf.predict(x).evaluate(gt_positives=labels))["all"]
+    assert (report["count"], report["n_true"]) == (8, 4)
+    assert report["roc_auc"] == 1.0
+
+    short = _odd_rows(runner, 6).col_boolean("y")
+    with pytest.raises(ValueError, match="length"):
+        runner.to_model(
+            x.train_classifier(positives=short, model_type="logistic_regression")
+        )
+    with pytest.raises(ValueError, match="length"):
+        runner.to_json(clf.predict(x).evaluate(gt_positives=short))

@@ -98,6 +98,9 @@ def test_entry_without_schema_file_still_loads(spark, tmp_path):
     fresh = SparkRunner(spark=spark, store_path=store)
     assert jobs_during(spark, lambda: fresh.plan(op)) >= 1  # inference
     assert fresh.to_pandas(op).equals(first)
+    # the plan facts ride in the parquet footer too
+    computed, hit = runner.column_plan(op), fresh.column_plan(op)
+    assert (hit.aligned_with, hit.dense) == (computed.aligned_with, computed.dense)
 
 
 def test_cached_rehydrate_carries_the_schema(spark, tmp_path):
@@ -154,3 +157,27 @@ def test_store_parquet_only_through_the_helpers():
         if "parquet_path(" in line and not _HELPER_CALL.search(line)
     ]
     assert offenders == []
+
+
+def test_entry_without_plan_facts_still_loads(spark, tmp_path):
+    """Entries stored before plan facts were recorded load with their
+    own uuid as the row domain and as not dense, and still combine
+    correctly with their dataset (positionally)."""
+    from krnel_graph_spark.runners.plan import ROW_ID
+
+    store = str(tmp_path / "store")
+    runner = SparkRunner(spark=spark, store_path=store)
+    ds = runner.from_inline_dataset({"n": [f"n{i}" for i in range(20)]})
+    tmpl = ds.template("{{n}}!", n=ds.col_text("n"))
+    masked = ds.mask_rows(tmpl.is_in({"n1!", "n7!"}))
+    assert runner.column_plan(tmpl).aligned_with == ds.uuid
+    path = runner.store.parquet_path(tmpl.uuid)
+    stored = spark.read.parquet(path)
+    rows = stored.collect()
+    legacy = spark.createDataFrame(rows, stored.schema).withMetadata(ROW_ID, {})
+    _write_store_parquet(legacy, path)
+
+    fresh = SparkRunner(spark=spark, store_path=store)
+    plan = fresh.column_plan(tmpl)
+    assert (plan.aligned_with, plan.dense, plan.is_json) == (tmpl.uuid, False, False)
+    assert fresh.to_pandas(masked)["n"].tolist() == ["n1", "n7"]
