@@ -735,10 +735,6 @@ def build_parser() -> argparse.ArgumentParser:
     p_config.add_argument("--runner-type", dest="runner_type")
     p_config.add_argument("--store-uri", dest="store_uri")
     p_config.add_argument("--cache-path", dest="cache_path")
-    p_config.add_argument("--spark-master", dest="spark_master")
-    p_config.add_argument(
-        "--shuffle-partitions", dest="shuffle_partitions", type=int
-    )
     p_config.set_defaults(fn=cmd_config)
 
     p_compact = sub.add_parser(

@@ -72,16 +72,6 @@ class KrnelGraphSparkConfig(BaseSettings):
         description="Local cache directory (runner_type=LocalCachedRunner only)",
     )
 
-    spark_master: str = Field(
-        default="",
-        description="Spark master URL ('' = respect an existing session / spark-submit)",
-    )
-
-    shuffle_partitions: int = Field(
-        default=0,
-        description="spark.sql.shuffle.partitions for new sessions (0 = engine default)",
-    )
-
     def save(self) -> Path:
         """Write the non-default fields to the JSON config file."""
         config_path = default_config_file()

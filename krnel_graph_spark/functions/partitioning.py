@@ -1,5 +1,6 @@
-"""Partitioning guards for compute-heavy operators, and the one pinning
-policy every multi-consumer frame in the package goes through.
+"""Partitioning guards for compute-heavy operators, the one pinning
+policy every multi-consumer frame in the package goes through, and the
+one place that classifies the session's master.
 
 A small parquet file arrives as ONE input split (`maxPartitionBytes` is an
 upper bound, not a target), so per-row-expensive operators — shingling,
@@ -51,6 +52,20 @@ def _local_master(master: str) -> bool:
     return master == "local" or master.startswith("local[")
 
 
+def _same_host_master(master: str) -> bool:
+    """True for a local master and for ``local-cluster[...]``, whose
+    executor JVMs run on the driver's host and so see the driver's
+    package root: ``get_spark`` gives these the worker daemon and the
+    per-core shuffle-partition default."""
+    return _local_master(master) or master.startswith("local-cluster[")
+
+
+def _sized_master(master: str, cpus: str | None) -> str:
+    """``SPARK_GRAFT_CPUS`` (``cpus``) sizes a local master; every other
+    master stays as Spark resolved it."""
+    return f"local[{cpus}]" if cpus and _local_master(master) else master
+
+
 class _PinScope(list):
     """Frames pinned while this scope is the innermost active one."""
 
@@ -84,12 +99,13 @@ def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
       do not grow their plans), and the ContextCleaner reclaims the
       blocks when the frame is garbage-collected. One JVM holds every
       block, so none can be lost on its own.
-    * anything else (a real cluster): ``persist(MEMORY_AND_DISK)``, plus
-      a ``count()`` when ``eager``. Cached blocks keep their lineage, so
-      a frame whose executor is lost is recomputed instead of failing
-      every later consumer. The frame is registered with the innermost
-      :func:`pin_scope`, which unpersists it on exit; outside any scope
-      it stays cached until ``spark.catalog.clearCache()``.
+    * anything else (``local-cluster[...]``, a cluster):
+      ``persist(MEMORY_AND_DISK)``, plus a ``count()`` when ``eager``.
+      Cached blocks keep their lineage, so a frame whose executor is
+      lost is recomputed instead of failing every later consumer. The
+      frame is registered with the innermost :func:`pin_scope`, which
+      unpersists it on exit; outside any scope it stays cached until
+      ``spark.catalog.clearCache()``.
 
     ``eager`` materializes before returning — for bounded frames whose
     every consumer runs right away, or where the caller wants the

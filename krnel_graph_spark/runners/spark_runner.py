@@ -28,6 +28,7 @@ from typing import Any, Optional, Union
 
 import pandas as pd
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,7 +84,7 @@ from ..operators.dataset_ops import (
     TakeRowsOp,
     VectorToScalarOp,
 )
-from ..functions.partitioning import pin, pin_scope
+from ..functions.partitioning import _same_host_master, _sized_master, pin, pin_scope
 from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
 from ..plans.op_spec import OpSpec
@@ -96,53 +97,40 @@ from .store import ResultStore
 _FILE_ORD_SHIFT = 40  # multi-file scans: row_id = file_ordinal << 40 | row_index
 
 
-def _default_shuffle_partitions(cpus: str) -> Optional[str]:
-    """Initial shuffle-partition count (r15, pre-coalesce — AQE's
-    parallelism-first coalescing adapts the FINAL count per query):
-
-    * local mode: ``max(32, cores)`` — tied to the session's core count
-      instead of the former magic 32, so a bigger local box is no longer
-      ceilinged; identical to the old value at the driver's 32- and
-      8-core bench configs by construction. Deriving ``2 x cores``
-      instead was measured and REJECTED: interleaved at local[32]/sf0.1
-      it cost +20% arpa_score_o5, +18% stupid_backoff_fixed, +8%
-      connected_components with no win beyond noise
-      (OPTIMIZATION_r15.md).
-    * real cluster (``SPARK_MASTER``/``MASTER`` set): return None — do
-      NOT pin a single-box constant; the submit-time conf or Spark's own
-      default governs, and ``SPARK_SHUFFLE_PARTITIONS`` overrides. At
-      100 TB size it so post-AQE partitions land in the 100 MB-1 GB
-      range (guide §2.2), e.g. ~2 x total executor cores.
-    """
-    if os.environ.get("SPARK_MASTER") or os.environ.get("MASTER"):
-        return None
-    n = int(cpus) if cpus.isdigit() else (os.cpu_count() or 32)
-    return str(max(32, n))
-
-
 def get_spark(
     app_name: str = "krnel-graph-spark",
     shuffle_partitions: Optional[int] = None,
 ) -> SparkSession:
     """Build (or reuse) a session with the engine's defaults: AQE on, UTC
-    timestamps, Arrow transfer on, zstd parquet output."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.ui.showConsoleProgress", "false")
-        # local[N] runs all executor threads inside the driver JVM; the 1g
-        # default heap GC-thrashes 32 concurrent tasks, while a huge heap
-        # makes full GCs take tens of seconds late in long sessions — 16g
-        # balances both. (No-op if the JVM is already up, e.g. on a real
-        # cluster via spark-submit.)
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        )
+    timestamps, Arrow transfer on, zstd parquet output. The master is the
+    one Spark resolved (``SPARK_GRAFT_CPUS`` only sizes a local master);
+    the master-dependent defaults follow its class, and no default
+    replaces a value the user gave Spark. ``shuffle_partitions`` always
+    applies."""
+    # Start the JVM first, so the master and the user's conf can be read
+    # before any default is chosen. local[N] runs all executor threads
+    # inside the driver JVM; the 1g default heap GC-thrashes 32 concurrent
+    # tasks, while a huge heap makes full GCs take tens of seconds late in
+    # long sessions — 16g balances both. The console progress bar is off
+    # at launch too: spark-submit turns it on for pyspark otherwise. (No-op
+    # if the JVM is already up, e.g. under spark-submit.)
+    launch = SparkConf(loadDefaults=False)
+    launch.set("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+    launch.set("spark.ui.showConsoleProgress", "false")
+    SparkContext._ensure_initialized(conf=launch)
+    # The launch's system properties: what the user gave Spark through
+    # spark-submit, PYSPARK_SUBMIT_ARGS or spark-defaults.
+    given = SparkContext._jvm.org.apache.spark.SparkConf(True)
+    active = SparkContext._active_spark_context
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    master = active.master if active else _sized_master(given.get("spark.master"), cpus)
+    same_host = _same_host_master(master)
+    defaults = {
         # Back-compat for TIMESTAMP(NANOS) parquet (read as nanosecond longs,
         # converted at use sites by with_event_time); harmless on µs files.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # Let AQE coalesce the FINAL stage of persisted frames too
         # (default false only to keep a cached plan's output
         # partitioning reusable by downstream joins). This engine's
@@ -155,38 +143,36 @@ def get_spark(
         # -49% kn3_arpa, -30% arpa_score, -16% minhash_pairs, no
         # regressions (OPTIMIZATION_r14.md); sizes stay byte-adaptive
         # at scale because AQE's advisory size does the coalescing.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            "true",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-    )
-    parts = (
-        str(shuffle_partitions)
-        if shuffle_partitions
-        else os.environ.get("SPARK_SHUFFLE_PARTITIONS")
-        or _default_shuffle_partitions(cpus)
-    )
-    if parts is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", parts)
-    if not os.environ.get("SPARK_MASTER") and not os.environ.get("MASTER"):
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.compression.codec": "zstd",
+    }
+    if same_host:
         # Python workers fork from the engine's daemon, which skips the
-        # per-task re-read of pyspark.zip (see worker_daemon.py). Local
-        # only: cluster executors may not have the package. The package
-        # root goes on the workers' path so the daemon imports from any
-        # driver working directory.
-        package_root = os.path.dirname(
+        # per-task re-read of pyspark.zip (see worker_daemon.py). The
+        # package root goes on the workers' path, so the daemon and the
+        # UDFs import from any driver working directory. Executors on
+        # another host may not have the package.
+        defaults["spark.python.daemon.module"] = f"{__package__}.worker_daemon"
+        defaults["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
-        builder = (
-            builder.master(f"local[{cpus}]")
-            .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
-            .config("spark.executorEnv.PYTHONPATH", package_root)
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for key, value in defaults.items():
+        if not given.contains(key):
+            builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    if same_host and not given.contains("spark.sql.shuffle.partitions"):
+        # Tied to the session's cores, floored at the former constant 32.
+        # 2 x cores was measured and rejected in r15: +20% arpa_score_o5 at
+        # local[32]/sf0.1, no win beyond noise (OPTIMIZATION_r15.md).
+        shuffle_partitions = shuffle_partitions or max(
+            32, spark.sparkContext.defaultParallelism
         )
-    return builder.getOrCreate()
-
+    if shuffle_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark
 
 
 @contextlib.contextmanager

@@ -1,4 +1,4 @@
-"""Python worker daemon for local sessions (``spark.python.daemon.module``).
+"""Python worker daemon for same-host sessions (``spark.python.daemon.module``).
 
 Before every task, ``pyspark.worker_util.setup_spark_files`` calls
 ``importlib.invalidate_caches()``. On Python 3.11 that makes every
@@ -13,8 +13,10 @@ changed since the last read, then hands over to pyspark's own daemon. A
 zip added to ``sys.path`` later (``SparkContext.addPyFile``) has no
 cached importer yet, so it is read as before.
 
-``get_spark`` selects this module for local masters only: executors on a
-real cluster may not have the package installed.
+``get_spark`` selects this module for same-host masters only (``local``,
+``local[N]``, ``local-cluster[...]``), whose executors import the package
+from the driver's package root; executors on another host may not have
+it installed.
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ scavenge a pipeline module, filter, materialize into the store, inspect
 status/summary/pseudocode, diff two pipelines.
 """
 
+import json
 import textwrap
 
 import pytest
@@ -197,21 +198,30 @@ def test_cli_config_get_and_set(tmp_path, capsys, monkeypatch):
     assert not cfg_file.exists()
 
     # Set: persists only the overridden fields.
-    assert main(["config", "--store-uri", "/tmp/ktest", "--shuffle-partitions", "7"]) == 0
+    assert main(["config", "--store-uri", "/tmp/ktest", "--cache-path", "/tmp/kcache"]) == 0
     out = capsys.readouterr().out
     assert "/tmp/ktest" in out and cfg_file.exists()
     saved = cfg_file.read_text()
     assert "store_uri" in saved and "runner_type" not in saved
 
-    # A later set of a different field preserves the earlier one.
+    # A later set of a different field preserves the earlier ones.
     assert main(["config", "--runner-type", "LocalCachedRunner"]) == 0
     capsys.readouterr()
     from krnel_graph_spark.config import KrnelGraphSparkConfig
 
     cfg = KrnelGraphSparkConfig()
     assert cfg.store_uri == "/tmp/ktest"
-    assert cfg.shuffle_partitions == 7
+    assert str(cfg.cache_path) == "/tmp/kcache"
     assert cfg.runner_type == "LocalCachedRunner"
+
+    # A file from before the session knobs were removed still loads.
+    saved = json.loads(cfg_file.read_text())
+    cfg_file.write_text(
+        json.dumps({**saved, "spark_master": "local[2]", "shuffle_partitions": 7})
+    )
+    cfg = KrnelGraphSparkConfig()
+    assert cfg.store_uri == "/tmp/ktest"
+    assert not hasattr(cfg, "spark_master")
 
     # Env beats file (reference precedence).
     monkeypatch.setenv("KRNEL_SPARK_STORE_URI", "/tmp/env-wins")

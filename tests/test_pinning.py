@@ -41,6 +41,21 @@ def test_local_master_predicate():
     assert not partitioning._local_master("yarn")
     assert not partitioning._local_master("spark://host:7077")
     assert not partitioning._local_master("local-cluster[2,1,1024]")
+    # local-cluster executors are separate JVMs, but on the driver's host
+    for master in ("local", "local[4]", "local[*]", "local-cluster[2,1,1024]"):
+        assert partitioning._same_host_master(master)
+    assert not partitioning._same_host_master("yarn")
+    assert not partitioning._same_host_master("spark://host:7077")
+    assert not partitioning._same_host_master("k8s://https://host:443")
+
+
+def test_spark_graft_cpus_sizes_only_a_local_master():
+    sized = partitioning._sized_master
+    assert sized("local[*]", "4") == "local[4]"
+    assert sized("local", "4") == "local[4]"
+    assert sized("local[2]", None) == "local[2]"
+    assert sized("local-cluster[2,1,1024]", "4") == "local-cluster[2,1,1024]"
+    assert sized("spark://host:7077", "4") == "spark://host:7077"
 
 
 def test_local_pin_is_a_checkpoint_not_a_cache(spark):
@@ -175,3 +190,27 @@ def test_pins_only_in_the_policy_module():
         if _PIN_CALL.search(line)
     ]
     assert offenders == []
+
+
+_MASTER_ENV = re.compile(
+    r"""(environ|getenv)[^\n]*["'](SPARK_MASTER|MASTER|SPARK_SHUFFLE_PARTITIONS)["']"""
+)
+_MASTER_STRING = re.compile(r"""["'](local\[|local-cluster\[)""")
+
+
+def test_master_is_classified_only_in_the_policy_module():
+    """The session's master is what Spark resolved: no module reads the
+    master or shuffle-partition variables from the environment, and
+    only the policy module tests master strings."""
+    root = Path(krnel_graph_spark.__file__).parent
+    policy = root / "functions" / "partitioning.py"
+    env_reads, master_tests = [], []
+    for path in sorted(root.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            where = f"{path.relative_to(root)}:{i}"
+            if _MASTER_ENV.search(line):
+                env_reads.append(where)
+            if path != policy and _MASTER_STRING.search(line):
+                master_tests.append(where)
+    assert env_reads == []
+    assert master_tests == []

@@ -1,11 +1,14 @@
 """The engine's Python worker daemon (``runners/worker_daemon.py``):
 zip archives are re-read only when they change on disk, zips added
 later still import, and a local session's workers run under it from
-any driver working directory."""
+any driver working directory. ``get_spark`` keeps the master Spark
+resolved and turns the daemon on from that master, not from the
+environment."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
 import subprocess
 import sys
@@ -145,10 +148,10 @@ def test_add_py_file_after_workers_are_warm(spark, tmp_path):
     assert df.select(scaled("id").alias("x")).agg(F.sum("x")).first()[0] == 3 * 2016
 
 
-def test_get_spark_from_another_working_directory(tmp_path):
-    """Workers import the daemon from the package root, not from the
-    driver's working directory (``python -m`` puts the cwd on the
-    path)."""
+def _run_from(tmp_path, body: str, **env_vars: str | None) -> str:
+    """Run ``body`` after ``get_spark()`` in a fresh process whose working
+    directory is outside the repo; return its stdout. An ``env_vars``
+    value of None unsets that variable."""
     script = textwrap.dedent(
         f"""
         import sys
@@ -158,29 +161,87 @@ def test_get_spark_from_another_working_directory(tmp_path):
         from krnel_graph_spark import get_spark
 
         spark = get_spark("daemon-cwd-test")
+        """
+    ) + textwrap.dedent(body) + "spark.stop()\n"
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("PYTHONPATH", "SPARK_MASTER", "MASTER", "PYSPARK_SUBMIT_ARGS")
+    }
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    env.update(env_vars)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env={k: v for k, v in env.items() if v is not None},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stdout
 
+
+def test_get_spark_from_another_working_directory(tmp_path):
+    """Workers import the daemon from the package root, not from the
+    driver's working directory (``python -m`` puts the cwd on the
+    path)."""
+    stdout = _run_from(
+        tmp_path,
+        """
         @F.pandas_udf("long")
         def plus_one(s: pd.Series) -> pd.Series:
             return s + 1
 
         total = spark.range(0, 100, 1, 2).select(plus_one("id").alias("x"))
         print("TOTAL", total.agg(F.sum("x")).first()[0])
-        spark.stop()
-        """
+        """,
     )
-    env = {
-        k: v
-        for k, v in os.environ.items()
-        if k not in ("PYTHONPATH", "SPARK_MASTER", "MASTER")
-    }
-    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=str(tmp_path),
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
+    assert "TOTAL 5050" in stdout
+
+
+_SESSION = """
+import json
+sc = spark.sparkContext
+conf = sc.getConf()
+print("SESSION", json.dumps({
+    "master": sc.master,
+    "parallelism": sc.defaultParallelism,
+    "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    "daemon": conf.get("spark.python.daemon.module"),
+    "pythonpath": conf.get("spark.executorEnv.PYTHONPATH"),
+}))
+"""
+
+
+@pytest.mark.parametrize(
+    "env_vars, master, shuffle_partitions",
+    [
+        # pyspark ignores SPARK_MASTER: the session is local, and the
+        # engine's local defaults follow from that.
+        ({"SPARK_MASTER": "spark://nowhere:7077"}, "local[2]", None),
+        # A master and a conf the user gave Spark are kept as given.
+        (
+            {
+                "PYSPARK_SUBMIT_ARGS": "--master local[2] --conf "
+                "spark.sql.shuffle.partitions=5 pyspark-shell",
+                "SPARK_GRAFT_CPUS": None,
+            },
+            "local[2]",
+            5,
+        ),
+    ],
+    ids=["spark_master_env", "submit_args"],
+)
+def test_session_follows_the_master_spark_resolved(
+    tmp_path, env_vars, master, shuffle_partitions
+):
+    stdout = _run_from(tmp_path, _SESSION, **env_vars)
+    line = next(l for l in stdout.splitlines() if l.startswith("SESSION "))
+    session = json.loads(line.split(" ", 1)[1])
+    assert session["master"] == master
+    assert session["shuffle_partitions"] == (
+        shuffle_partitions or max(32, session["parallelism"])
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "TOTAL 5050" in proc.stdout
+    assert session["daemon"] == "krnel_graph_spark.runners.worker_daemon"
+    assert session["pythonpath"] == REPO_ROOT
