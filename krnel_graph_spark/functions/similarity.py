@@ -1572,7 +1572,8 @@ def contrastive_triplets(
 # fresh TakeOrdered round). Driver arithmetic is bit-identical to the
 # scan-side expressions: the dot is the same left-to-right IEEE fold
 # `F.aggregate(zip_with(u, v, a*b), 0.0, a+x)` evaluates, min/max are
-# exact, and the round-6 shield uses the same HALF_UP `_r6`.
+# exact. Sort keys and the bound come rounded from the scan itself;
+# the driver's HALF_UP `_r6` rounds only the scores it updates.
 # extra candidates per job: a deeper batch weakens the acceptance bound
 # (the LAST collected row's old key), so more picks clear it per job.
 # Probed at sf0.1 (k=8/12): pad 16 -> kcenter 7 jobs / mmr 4; 256 -> 5/3;
@@ -1695,9 +1696,8 @@ def kcenter_select(
         remaining = k - len(picked)
         m = min(remaining + _GREEDY_PAD, _GREEDY_COLLECT_MAX)
         top = (
-            state.orderBy(
-                F.round(F.col("__mind"), 6).desc(), F.col(id_col).asc()
-            )
+            state.withColumn("__key", F.round(F.col("__mind"), 6))
+            .orderBy(F.col("__key").desc(), F.col(id_col).asc())
             .limit(m)
             .collect()
         )
@@ -1706,9 +1706,12 @@ def kcenter_select(
         # fewer rows than asked for => the batch IS the whole remaining
         # point set and the driver can finish the greedy walk exactly
         exhaustive = len(top) < m
-        bound = (-_r6(top[-1]["__mind"]), top[-1][id_col])
+        # the bound and the collected keys are the scan's own rounding;
+        # _r6 only rounds distances the driver updates
+        bound = (-top[-1]["__key"], top[-1][id_col])
+        # cand = [id, u, mind, key]
         cands = [
-            [row[id_col], list(row["__u"]), float(row["__mind"])]
+            [row[id_col], list(row["__u"]), float(row["__mind"]), row["__key"]]
             for row in top
         ]
         accepted = [cands.pop(0)]  # the collected head IS the argmax
@@ -1717,14 +1720,14 @@ def kcenter_select(
             for cand in cands:
                 d = 1.0 - _fold_dot(cand[1], pu)
                 if d < cand[2]:
-                    cand[2] = d
-            cands.sort(key=lambda cand: (-_r6(cand[2]), cand[0]))
-            if exhaustive or (-_r6(cands[0][2]), cands[0][0]) <= bound:
+                    cand[2], cand[3] = d, _r6(d)
+            cands.sort(key=lambda cand: (-cand[3], cand[0]))
+            if exhaustive or (-cands[0][3], cands[0][0]) <= bound:
                 accepted.append(cands.pop(0))
             else:
                 break  # tail rejected: back to a fresh TakeOrdered round
-        for cid, _cu, cmind in accepted:
-            picked.append((len(picked) + 1, cid, _r6(cmind)))
+        for cid, _cu, _cmind, ckey in accepted:
+            picked.append((len(picked) + 1, cid, ckey))
         if len(picked) >= k or (exhaustive and not cands):
             break
         cond = F.col(id_col) != F.lit(accepted[0][0])
@@ -1851,15 +1854,17 @@ def mmr_select(
         m = min(remaining + _GREEDY_PAD, _GREEDY_COLLECT_MAX)
         top = (
             state.withColumn("__s", score)
-            .orderBy(F.round(F.col("__s"), 6).desc(), F.col(id_col).asc())
+            .withColumn("__key", F.round(F.col("__s"), 6))
+            .orderBy(F.col("__key").desc(), F.col(id_col).asc())
             .limit(m)
             .collect()
         )
         if not top:
             break
         exhaustive = len(top) < m
-        bound = (-_r6(top[-1]["__s"]), top[-1][id_col])
-        # cand = [id, u, rel, maxsim, s]
+        # scan-rounded bound and keys, as in kcenter_select
+        bound = (-top[-1]["__key"], top[-1][id_col])
+        # cand = [id, u, rel, maxsim, s, key]
         cands = [
             [
                 row[id_col],
@@ -1867,6 +1872,7 @@ def mmr_select(
                 float(row["__rel"]),
                 float(row["__maxsim"]),
                 float(row["__s"]),
+                row["__key"],
             ]
             for row in top
         ]
@@ -1878,13 +1884,14 @@ def mmr_select(
                 if d > cand[3]:
                     cand[3] = d
                     cand[4] = lam_f * cand[2] - inv_f * cand[3]
-            cands.sort(key=lambda cand: (-_r6(cand[4]), cand[0]))
-            if exhaustive or (-_r6(cands[0][4]), cands[0][0]) <= bound:
+                    cand[5] = _r6(cand[4])
+            cands.sort(key=lambda cand: (-cand[5], cand[0]))
+            if exhaustive or (-cands[0][5], cands[0][0]) <= bound:
                 accepted.append(cands.pop(0))
             else:
                 break
-        for cid, _cu, crel, _cms, cs in accepted:
-            picked.append((len(picked) + 1, cid, _r6(crel), _r6(cs)))
+        for cid, _cu, crel, _cms, _cs, ckey in accepted:
+            picked.append((len(picked) + 1, cid, _r6(crel), ckey))
         if len(picked) >= k or (exhaustive and not cands):
             break
         cond = F.col(id_col) != F.lit(accepted[0][0])

@@ -31,17 +31,14 @@ _CACHEABLE_STATES = {"completed", "ephemeral"}
 
 
 def _atomic_copy_file(src: str, dst: str) -> None:
-    tmp = f"{dst}.tmp-{os.getpid()}"
-    shutil.copy2(src, tmp)
-    os.replace(tmp, dst)
+    with ResultStore.staged(dst) as tmp:
+        shutil.copy2(src, tmp)
 
 
 def _atomic_copy_tree(src: str, dst: str) -> None:
-    tmp = f"{dst}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.copytree(src, tmp)
-    shutil.rmtree(dst, ignore_errors=True)
-    os.replace(tmp, dst)
+    with ResultStore.staged(dst) as tmp:
+        shutil.copytree(src, tmp)
+        shutil.rmtree(dst, ignore_errors=True)
 
 
 class CachedResultStore(ResultStore):

@@ -24,6 +24,7 @@ import json
 import math
 import os
 import random
+import shutil
 from typing import Any, Optional, Union
 
 import pandas as pd
@@ -84,7 +85,13 @@ from ..operators.dataset_ops import (
     TakeRowsOp,
     VectorToScalarOp,
 )
-from ..functions.partitioning import _same_host_master, _sized_master, pin, pin_scope
+from ..functions.partitioning import (
+    _same_host_master,
+    _sized_master,
+    pin,
+    pin_scope,
+    plan_size_bytes,
+)
 from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
 from ..plans.op_spec import OpSpec
@@ -813,10 +820,101 @@ def _with_plan_facts(plan: Union[DatasetPlan, ColumnPlan]) -> DataFrame:
 def _write_store_parquet(df: DataFrame, path: str) -> None:
     """Write a store result, then its schema next to the data. Spark's
     file listing skips ``_``-prefixed files, and the schema is written
-    before the caller marks the result done."""
-    df.write.mode("overwrite").parquet(path)
+    before the caller marks the result done.
+
+    A small result bound for a local path (see ``_collect_small``) is
+    written as one file, skipping Spark's write job and commit
+    protocol. Its footer carries what Spark's own writer puts there: the
+    Spark schema, so the plan facts on ``__row_id`` survive a read
+    without ``_schema.json``, and the Spark version, so dates and
+    timestamps read with the proleptic calendar. Anything else goes
+    through Spark's writer."""
+    table = _collect_small(df) if "://" not in path else None
+    if table is None:
+        df.write.mode("overwrite").parquet(path)
+    else:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        spark = df.sparkSession
+        table = table.replace_schema_metadata(
+            {
+                "org.apache.spark.sql.parquet.row.metadata": df.schema.json(),
+                "org.apache.spark.version": spark.version,
+            }
+        )
+        # Sized like Spark's writer: the session's codec at its zstd
+        # level; no dictionaries, which pyarrow keeps even where they do
+        # not pay (unique floats); no statistics, which copy whole texts
+        # into the footer of a file too small to skip. The Arrow schema
+        # stays: without it pyarrow drops the footer keys.
+        codec = spark.conf.get("spark.sql.parquet.compression.codec")
+        level = spark.sparkContext._jsc.hadoopConfiguration().getInt(
+            "parquet.compression.codec.zstd.level", 3
+        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(
+            table,
+            buf,
+            compression=codec,
+            compression_level=level if codec == "zstd" else None,
+            use_dictionary=False,
+            write_statistics=False,
+        )
+        shutil.rmtree(path, ignore_errors=True)  # as mode("overwrite") does
+        os.makedirs(path, exist_ok=True)
+        ResultStore.write_atomically(
+            os.path.join(path, "part-00000.parquet"), buf.getvalue()
+        )
     with open(os.path.join(path, ResultStore.SCHEMA), "w") as f:
         f.write(df.schema.json())
+
+
+def _collect_small(df: DataFrame):
+    """``df`` as one Arrow table if it is small, else None.
+
+    Small means at most the session's broadcast threshold, the size
+    Spark already collects to the driver to broadcast. Catalyst's
+    estimate must be known and within it, but the estimate alone is not
+    trusted: Catalyst sizes a Python UDF's output from default type
+    widths (an ``array<float>`` counts as one element), so an activations
+    frame can be thousands of times its estimate. The frame is therefore
+    collected as a stream of Arrow batches, and the collect gives up as
+    soon as the batches would pass the threshold, so this process holds
+    at most the threshold. (The JVM gathers the job's results before the
+    stream starts; past ``spark.driver.maxResultSize`` it fails the
+    collect.) An empty frame or a failed collect returns None too, so
+    Spark's writer runs, and raises a genuine error itself."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.util import local_connect_and_auth
+
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    size = plan_size_bytes(df)
+    if size is None or size > threshold:
+        return None
+    port, secret, server = df._jdf.collectAsArrowToPython()
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)  # the job may run for long before the first batch
+    batches, nbytes, order = [], 0, None
+    with contextlib.suppress(Exception):
+        # Batches may come out of row order; the last item is their order.
+        for item in ArrowCollectSerializer().load_stream(sockfile):
+            if isinstance(item, list):
+                order = item
+            elif nbytes + item.nbytes > threshold:
+                break
+            else:
+                nbytes += item.nbytes
+                batches.append(item)
+    sockfile.close()  # the socket closes with its last file
+    sock.close()
+    try:
+        server.getResult()
+    except Exception:
+        order = None
+    return pa.Table.from_batches([batches[i] for i in order]) if order else None
 
 
 def _read_store_parquet(spark: SparkSession, path: str) -> DataFrame:

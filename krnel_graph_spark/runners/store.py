@@ -3,17 +3,23 @@
 Layout (parity with the reference's store,
 ``local_arrow_runner.py:51-57,105-152``)::
 
-    {root}/{ClassName}/{hash}/result.parquet/   (a Spark parquet directory)
+    {root}/{ClassName}/{hash}/result.parquet/   (a parquet directory)
                                result.parquet/_schema.json  (its schema)
                                result.json
                                result.pickle
                                status.json
                                done              (completion marker)
 
-The ``done`` marker is written last, so a crashed writer never looks
-complete. Results written by one process are visible to any other process
-pointing at the same root — this is the engine's cross-run / cross-machine
-memoization layer (content-addressed keys make it safe).
+A small result's directory holds one Arrow-written file,
+``part-00000.parquet``; a larger one holds Spark's part files. The
+``done`` marker is written last, so a crashed writer never looks
+complete. The JSON, pickle and status files, the one-file parquet
+result and the cache's copies are staged under a temporary name and
+renamed into place (``ResultStore.staged``), so a failed write leaves
+the previous file whole. Results written by one
+process are visible to any other process pointing at the same root —
+this is the engine's cross-run / cross-machine memoization layer
+(content-addressed keys make it safe).
 
 Paths are plain strings so the same code works for ``file:``-like local paths
 and (via Spark's Hadoop FS for parquet) remote object stores; the small
@@ -23,10 +29,12 @@ reason.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import pickle
 import shutil
+import uuid as _uuid
 from typing import Any, Optional
 
 
@@ -54,6 +62,32 @@ class ResultStore:
     def _side_path(self, uuid: str, name: str) -> str:
         return os.path.join(self.op_dir(uuid), name)
 
+    @staticmethod
+    @contextlib.contextmanager
+    def staged(path: str):
+        """The store's one staging rule: yield a unique ``.``-prefixed
+        name next to ``path`` to build a file or directory under, then
+        rename it into place. Readers see the old entry or the new one,
+        never a torn one, and Spark's file listing skips the staged
+        name. If the block fails, the staged entry is removed."""
+        folder, name = os.path.split(path)
+        tmp = os.path.join(folder, f".{name}.{_uuid.uuid4().hex}.tmp")
+        try:
+            yield tmp
+            os.replace(tmp, path)
+        except BaseException:
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp, ignore_errors=True)
+            elif os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+
+    @classmethod
+    def write_atomically(cls, path: str, data) -> None:
+        """Write the bytes-like ``data`` to ``path`` through ``staged``."""
+        with cls.staged(path) as tmp, open(tmp, "xb") as f:
+            f.write(data)
+
     # -- completion protocol ---------------------------------------------- #
 
     def is_done(self, uuid: str) -> bool:
@@ -74,9 +108,9 @@ class ResultStore:
     # -- sidecar payloads --------------------------------------------------#
 
     def write_json(self, uuid: str, payload: Any) -> None:
+        data = json.dumps(payload, sort_keys=True).encode()
         self.ensure_dir(uuid)
-        with open(self._side_path(uuid, self.JSON), "w") as f:
-            json.dump(payload, f, sort_keys=True)
+        self.write_atomically(self._side_path(uuid, self.JSON), data)
 
     def read_json(self, uuid: str) -> Any:
         with open(self._side_path(uuid, self.JSON)) as f:
@@ -86,9 +120,9 @@ class ResultStore:
         return os.path.exists(self._side_path(uuid, self.JSON))
 
     def write_pickle(self, uuid: str, obj: Any) -> None:
+        data = pickle.dumps(obj)
         self.ensure_dir(uuid)
-        with open(self._side_path(uuid, self.PICKLE), "wb") as f:
-            pickle.dump(obj, f)
+        self.write_atomically(self._side_path(uuid, self.PICKLE), data)
 
     def read_pickle(self, uuid: str) -> Any:
         with open(self._side_path(uuid, self.PICKLE), "rb") as f:
@@ -103,9 +137,9 @@ class ResultStore:
     # -- status -------------------------------------------------------------#
 
     def write_status(self, uuid: str, status_json: str) -> None:
+        data = status_json.encode()
         self.ensure_dir(uuid)
-        with open(self._side_path(uuid, self.STATUS), "w") as f:
-            f.write(status_json)
+        self.write_atomically(self._side_path(uuid, self.STATUS), data)
 
     def read_status(self, uuid: str) -> Optional[str]:
         path = self._side_path(uuid, self.STATUS)

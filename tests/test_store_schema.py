@@ -1,10 +1,13 @@
 """Store results carry their schema (``result.parquet/_schema.json``):
 a re-read is given the schema instead of running a schema-inference
 job, reads exactly what inference would, and entries written without
-the file still load."""
+the file still load. Small results are written as one Arrow file, the
+rest by Spark's writer; ``TestSparkWriter`` runs the store tests again
+through the latter."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import shutil
@@ -16,8 +19,11 @@ from pyspark.sql.types import VariantVal
 
 import krnel_graph_spark
 from krnel_graph_spark import LocalCachedRunner, SparkRunner
+from krnel_graph_spark.functions.partitioning import plan_size_bytes
+from krnel_graph_spark.runners.plan import ROW_ID, VALUE
 from krnel_graph_spark.runners.spark_runner import (
     _read_store_parquet,
+    _with_plan_facts,
     _write_store_parquet,
 )
 from krnel_graph_spark.runners.store import ResultStore
@@ -38,14 +44,33 @@ def _schema_files(root) -> list[str]:
     ]
 
 
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _spark_writer_forced(spark) -> bool:
+    return spark.conf.get(_THRESHOLD) == "-1"
+
+
+def _written_by_spark(path) -> bool:
+    """Spark's commit protocol leaves ``_SUCCESS``; the one-file path
+    leaves exactly its data file and the schema."""
+    names = set(os.listdir(path))
+    if "_SUCCESS" in names:
+        return True
+    assert names == {"part-00000.parquet", ResultStore.SCHEMA}
+    return False
+
+
 _COLUMNS = {
     "array_float": "array(cast(1.5 as float), cast(null as float))",
     "double": "cast(id as double) / 3",
     "boolean": "id % 2 = 0",
     "string": "concat('s', cast(id as string))",
     "date": "date_add(date'2024-02-28', cast(id as int))",
+    "date_pre1582": "date_add(date'1200-02-28', cast(id as int))",
     "timestamp": "timestamp'2024-01-02 03:04:05.123456' + make_interval(0, 0, 0, 0, cast(id as int))",
     "timestamp_ntz": "timestamp_ntz'2024-01-02 03:04:05'",
+    "timestamp_pre1900": "timestamp'1850-01-02 03:04:05.123456' + make_interval(0, 0, 0, 0, cast(id as int))",
     "decimal": "cast(id as decimal(20, 4)) / 7",
     "binary": "cast(concat('b', cast(id as string)) as binary)",
     "struct": "named_struct('a', id, 'b', array(named_struct('c', 'x')))",
@@ -63,6 +88,7 @@ def test_schema_given_reread_equals_inferred(spark, tmp_path, kind):
     path = str(tmp_path / "result.parquet")
     _write_store_parquet(df, path)
     assert os.path.isfile(os.path.join(path, ResultStore.SCHEMA))
+    assert _written_by_spark(path) == _spark_writer_forced(spark)
 
     given = _read_store_parquet(spark, path)
     inferred = spark.read.parquet(path)
@@ -159,6 +185,24 @@ def test_store_parquet_only_through_the_helpers():
     assert offenders == []
 
 
+def test_arrow_parquet_writes_only_in_the_store_writer():
+    """pyarrow writes parquet in one place: the one-file path of
+    ``_write_store_parquet``. Any other Arrow writer would bypass the
+    gate, the footer keys and the staged rename."""
+    root = Path(krnel_graph_spark.__file__).parent
+    writers = set()
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and getattr(
+                    node.func, "attr", getattr(node.func, "id", None)
+                ) in ("write_table", "ParquetWriter"):
+                    writers.add((str(path.relative_to(root)), fn.name))
+    assert writers == {("runners/spark_runner.py", "_write_store_parquet")}
+
+
 def test_entry_without_plan_facts_still_loads(spark, tmp_path):
     """Entries stored before plan facts were recorded load with their
     own uuid as the row domain and as not dense, and still combine
@@ -181,3 +225,146 @@ def test_entry_without_plan_facts_still_loads(spark, tmp_path):
     plan = fresh.column_plan(tmpl)
     assert (plan.aligned_with, plan.dense, plan.is_json) == (tmpl.uuid, False, False)
     assert fresh.to_pandas(masked)["n"].tolist() == ["n1", "n7"]
+
+
+def test_stale_part_files_are_not_read_back(spark, tmp_path):
+    """A crashed earlier write may leave part files behind; the writer
+    clears the directory first, as ``mode("overwrite")`` does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "result.parquet"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"id": [100, 101]}), str(path / "part-00007-stale.parquet")
+    )
+    df = spark.range(3)
+    _write_store_parquet(df, str(path))
+    assert _rows(_read_store_parquet(spark, str(path))) == [(0,), (1,), (2,)]
+    assert _written_by_spark(str(path)) == _spark_writer_forced(spark)
+
+
+class TestSparkWriter:
+    """The store tests above, through Spark's writer: a broadcast
+    threshold of -1 fails the one-file gate."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_writer(self, spark):
+        old = spark.conf.get(_THRESHOLD)
+        spark.conf.set(_THRESHOLD, "-1")
+        yield
+        spark.conf.set(_THRESHOLD, old)
+
+    test_schema_given_reread_equals_inferred = staticmethod(
+        test_schema_given_reread_equals_inferred
+    )
+    test_persisted_result_reloads_without_a_job = staticmethod(
+        test_persisted_result_reloads_without_a_job
+    )
+    test_entry_without_schema_file_still_loads = staticmethod(
+        test_entry_without_schema_file_still_loads
+    )
+    test_cached_rehydrate_carries_the_schema = staticmethod(
+        test_cached_rehydrate_carries_the_schema
+    )
+    test_prepared_source_loads_from_store_without_inference = staticmethod(
+        test_prepared_source_loads_from_store_without_inference
+    )
+    test_entry_without_plan_facts_still_loads = staticmethod(
+        test_entry_without_plan_facts_still_loads
+    )
+    test_stale_part_files_are_not_read_back = staticmethod(
+        test_stale_part_files_are_not_read_back
+    )
+
+
+def test_small_persist_leaves_one_data_file(runner):
+    ds = runner.from_inline_dataset({"n": [f"n{i}" for i in range(500)]})
+    op = ds.template("[{{n}}]", n=ds.col_text("n"))
+    runner.to_pandas(op)
+    path = runner.store.parquet_path(op.uuid)
+    assert sorted(os.listdir(path)) == [ResultStore.SCHEMA, "part-00000.parquet"]
+
+
+def test_unknown_size_takes_the_spark_writer(spark, tmp_path):
+    """A frame built from an RDD has no size estimate. (A checkpointed
+    frame keeps its origin's estimate, so a small one writes one file.)"""
+    rdd = spark.sparkContext.parallelize([(i, i * 2) for i in range(10)], 2)
+    df = spark.createDataFrame(rdd, "id long, c long")
+    assert plan_size_bytes(df) is None
+    assert plan_size_bytes(df.localCheckpoint()) is None
+    path = str(tmp_path / "result.parquet")
+    _write_store_parquet(df, path)
+    assert _written_by_spark(path)
+    assert _rows(_read_store_parquet(spark, path)) == _rows(df)
+
+
+def test_remote_path_takes_the_spark_writer(spark, tmp_path, monkeypatch):
+    """A URI with a scheme other than ``file:`` is Hadoop's to resolve;
+    here no filesystem serves the scheme, so Spark's writer fails."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(Exception, match="nosuchfs"):
+        _write_store_parquet(spark.range(3), "nosuchfs://bucket/result.parquet")
+    assert os.listdir(tmp_path) == []
+
+
+def test_frame_far_above_its_estimate_takes_the_spark_writer(
+    runner, spark, tmp_path
+):
+    """Catalyst sizes an LLM op's ``array<float>`` output as one element,
+    so wide activations are estimated far below their bytes. The
+    one-file path must notice the real size and leave the write to
+    Spark's writer. The result (52 MB) is more than the socket buffers
+    hold, so a give-up that left the collect's socket open would hang."""
+    texts = runner.from_inline_dataset({"t": [f"t{i}" for i in range(200)]})
+    acts = texts.col_text("t").llm_layer_activations("fake:dim65536", layer_num=1)
+    frame = _with_plan_facts(runner.dispatch(acts)(runner, acts))
+    threshold = 64 * 1024
+    old = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, str(threshold))
+    try:
+        assert plan_size_bytes(frame) <= threshold
+        path = str(tmp_path / "result.parquet")
+        _write_store_parquet(frame, path)
+    finally:
+        spark.conf.set(_THRESHOLD, old)
+    assert _written_by_spark(path)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    back = _read_store_parquet(spark, path).orderBy(ROW_ID).toPandas()
+    assert len(back) == 200 and {len(v) for v in back[VALUE]} == {65536}
+
+
+def test_slow_small_frame_takes_the_one_file_path(spark, tmp_path, monkeypatch):
+    """The collect's first batch comes only when the job is done, so the
+    socket must wait as long as the job runs: a slow small frame is
+    still written as one file, not computed again by Spark's writer."""
+    monkeypatch.setenv("SPARK_AUTH_SOCKET_TIMEOUT", "1")
+
+    def slow(batches):
+        import time
+
+        time.sleep(3)
+        yield from batches
+
+    df = spark.range(3).coalesce(1).mapInArrow(slow, "id long")
+    path = str(tmp_path / "result.parquet")
+    _write_store_parquet(df, path)
+    assert not _written_by_spark(path)
+    assert _rows(_read_store_parquet(spark, path)) == [(0,), (1,), (2,)]
+
+
+def test_failed_collect_takes_the_spark_writer(spark, tmp_path, monkeypatch):
+    """A collect that fails (on ``spark.driver.maxResultSize``, say)
+    leaves the frame to Spark's writer, which raises a genuine error
+    itself."""
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+
+    def fail(self, stream):
+        raise RuntimeError("collect failed")
+        yield
+
+    monkeypatch.setattr(ArrowCollectSerializer, "load_stream", fail)
+    path = str(tmp_path / "result.parquet")
+    _write_store_parquet(spark.range(3), path)
+    assert _written_by_spark(path)
+    assert _rows(_read_store_parquet(spark, path)) == [(0,), (1,), (2,)]
