@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Any, Iterable, Iterator
+from typing import Any, Iterable, Iterator, get_args
 
 from pydantic import BaseModel, ConfigDict
 
@@ -338,6 +338,8 @@ def deserialize_graph(data: dict[str, Any]) -> list[OpSpec]:
         cls = op_class(payload.pop("type"))
         fields = {
             name: _decode_value(value, build)
+            if _may_hold_opspec(cls.model_fields[name].annotation)
+            else value
             for name, value in payload.items()
             if name in cls.model_fields
         }
@@ -361,6 +363,15 @@ def deserialize_graph(data: dict[str, Any]) -> list[OpSpec]:
             f"Graph contains nodes unreachable from outputs: {sorted(unreachable)[:3]}"
         )
     return roots
+
+
+def _may_hold_opspec(annotation: Any) -> bool:
+    """Whether a field annotated ``annotation`` can hold an OpSpec, so
+    its UUID-shaped strings are graph edges. Other fields (inline data,
+    parameters) keep their strings as they are."""
+    if isinstance(annotation, type) and issubclass(annotation, OpSpec):
+        return True
+    return any(_may_hold_opspec(arg) for arg in get_args(annotation))
 
 
 def _decode_value(value: Any, build) -> Any:

@@ -38,7 +38,6 @@ def _atomic_copy_file(src: str, dst: str) -> None:
 def _atomic_copy_tree(src: str, dst: str) -> None:
     with ResultStore.staged(dst) as tmp:
         shutil.copytree(src, tmp)
-        shutil.rmtree(dst, ignore_errors=True)
 
 
 class CachedResultStore(ResultStore):
@@ -46,8 +45,8 @@ class CachedResultStore(ResultStore):
     backed by a shared (possibly remote-mounted) store."""
 
     def __init__(self, shared_root: str, cache_root: str):
-        super().__init__(cache_root)  # inherited paths = the local cache
         self.shared = ResultStore(shared_root)
+        super().__init__(cache_root)  # inherited paths = the local cache
 
     # -- sync primitives ------------------------------------------------- #
 
@@ -59,12 +58,6 @@ class CachedResultStore(ResultStore):
                 self.ensure_dir(uuid)
                 _atomic_copy_file(remote, local)
         return local
-
-    def _push_file(self, uuid: str, name: str) -> None:
-        self.shared.ensure_dir(uuid)
-        _atomic_copy_file(
-            self._side_path(uuid, name), self.shared._side_path(uuid, name)
-        )
 
     # -- completion ------------------------------------------------------ #
 
@@ -79,16 +72,18 @@ class CachedResultStore(ResultStore):
         return False
 
     def mark_done(self, uuid: str) -> None:
-        # Data first, shared `done` marker last (crash-safe ordering).
+        # The one push of an entry's data (parquet tree, json, pickle),
+        # data first, shared `done` marker last (crash-safe ordering).
+        self.shared.ensure_dir(uuid)
         local_parquet = super().parquet_path(uuid)
         if os.path.exists(local_parquet):
             _atomic_copy_tree(local_parquet, self.shared.parquet_path(uuid))
+        for name in (self.JSON, self.PICKLE):
+            local = self._side_path(uuid, name)
+            if os.path.exists(local):
+                _atomic_copy_file(local, self.shared._side_path(uuid, name))
         super().mark_done(uuid)
         self.shared.mark_done(uuid)
-
-    def clear(self, uuid: str) -> None:
-        super().clear(uuid)
-        self.shared.clear(uuid)
 
     # -- parquet --------------------------------------------------------- #
 
@@ -101,14 +96,7 @@ class CachedResultStore(ResultStore):
             _atomic_copy_tree(self.shared.parquet_path(uuid), local)
         return local
 
-    def has_parquet(self, uuid: str) -> bool:
-        return super().has_parquet(uuid) or self.shared.has_parquet(uuid)
-
     # -- json / pickle sidecars ------------------------------------------ #
-
-    def write_json(self, uuid: str, payload) -> None:
-        super().write_json(uuid, payload)
-        self._push_file(uuid, self.JSON)
 
     def read_json(self, uuid: str):
         self._pull_file(uuid, self.JSON)
@@ -116,10 +104,6 @@ class CachedResultStore(ResultStore):
 
     def has_json(self, uuid: str) -> bool:
         return super().has_json(uuid) or self.shared.has_json(uuid)
-
-    def write_pickle(self, uuid: str, obj) -> None:
-        super().write_pickle(uuid, obj)
-        self._push_file(uuid, self.PICKLE)
 
     def read_pickle(self, uuid: str):
         self._pull_file(uuid, self.PICKLE)
@@ -161,9 +145,6 @@ class CachedResultStore(ResultStore):
         if remote is not None and self._state_of(remote) in _CACHEABLE_STATES:
             super().write_status(uuid, remote)
         return remote
-
-    def list_uuids(self) -> list[str]:
-        return sorted(set(super().list_uuids()) | set(self.shared.list_uuids()))
 
 
 class LocalCachedRunner(SparkRunner):

@@ -24,7 +24,6 @@ import json
 import math
 import os
 import random
-import shutil
 from typing import Any, Optional, Union
 
 import pandas as pd
@@ -90,7 +89,6 @@ from ..functions.partitioning import (
     _sized_master,
     pin,
     pin_scope,
-    plan_size_bytes,
 )
 from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
@@ -428,9 +426,7 @@ class SparkRunner(BaseRunner):
                 continue
             if self.store.is_done(dep.uuid):
                 continue
-            ds = self.dataset_plan(dep)  # includes ROW_ID
-            _write_store_parquet(_with_plan_facts(ds), self.store.parquet_path(dep.uuid))
-            self.store.mark_done(dep.uuid)
+            self._persist(dep, self.dataset_plan(dep))  # includes ROW_ID
 
     # ------------------------------------------------------------------ #
     # Materialization protocol                                            #
@@ -521,15 +517,12 @@ class SparkRunner(BaseRunner):
         plan backed by the stored copy (the materialization barrier)."""
         store = self.store
         if isinstance(plan, ArtifactPlan):
-            if plan.kind == "pickle":
-                store.write_pickle(op.uuid, plan.payload)
-            else:
-                store.write_json(op.uuid, plan.payload)
-            store.mark_done(op.uuid)
-            return plan
-        _write_store_parquet(_with_plan_facts(plan), store.parquet_path(op.uuid))
+            write = store.write_pickle if plan.kind == "pickle" else store.write_json
+            write(op.uuid, plan.payload)
+        else:
+            store.write_parquet(op.uuid, *_stored_frame(plan))
         store.mark_done(op.uuid)
-        return self._load_from_store(op)
+        return plan if isinstance(plan, ArtifactPlan) else self._load_from_store(op)
 
     def _load_from_store(self, op: OpSpec):
         """Rebuild a stored result's plan from the store entry alone, so a
@@ -540,10 +533,9 @@ class SparkRunner(BaseRunner):
             return ArtifactPlan(payload=store.read_json(op.uuid), kind="json")
         if store.has_pickle(op.uuid):
             return ArtifactPlan(payload=store.read_pickle(op.uuid), kind="pickle")
-        df = _read_store_parquet(self.spark, store.parquet_path(op.uuid))
+        df, facts = store.read_parquet(self.spark, op.uuid)
         # Entries written without recorded facts: their own row domain,
         # not dense, JSON exactly when stored as VARIANT.
-        facts = df.schema[ROW_ID].metadata.get(_PLAN_FACTS, {})
         domain = facts.get("aligned_with", op.uuid)
         dense = facts.get("dense", False)
         value_cols = [c for c in df.columns if c != ROW_ID]
@@ -801,132 +793,15 @@ def _bucket_of(col, bounds: list[int], lo: int = 0, hi: Optional[int] = None):
     )
 
 
-_PLAN_FACTS = "krnel.plan"  # key of the plan facts in __row_id's field metadata
-
-
-def _with_plan_facts(plan: Union[DatasetPlan, ColumnPlan]) -> DataFrame:
-    """The frame to store for ``plan``: its ``__row_id`` field records the
-    facts a reload needs to plan like the compute — row domain, density
-    and JSON-ness. Field metadata flows through selects, so the facts are
+def _stored_frame(plan: Union[DatasetPlan, ColumnPlan]) -> tuple[DataFrame, dict]:
+    """The frame to store for ``plan`` and the facts a reload needs to
+    plan like the compute: row domain, density and JSON-ness. They are
     always set here, never inherited from a stored upstream."""
     if isinstance(plan, ColumnPlan):
         df, domain, is_json = plan.df(), plan.aligned_with, plan.is_json
     else:
         df, domain, is_json = plan.df, plan.dataset_uuid, False
-    facts = {"aligned_with": domain, "dense": plan.dense, "is_json": is_json}
-    return df.withMetadata(ROW_ID, {_PLAN_FACTS: facts})
-
-
-def _write_store_parquet(df: DataFrame, path: str) -> None:
-    """Write a store result, then its schema next to the data. Spark's
-    file listing skips ``_``-prefixed files, and the schema is written
-    before the caller marks the result done.
-
-    A small result bound for a local path (see ``_collect_small``) is
-    written as one file, skipping Spark's write job and commit
-    protocol. Its footer carries what Spark's own writer puts there: the
-    Spark schema, so the plan facts on ``__row_id`` survive a read
-    without ``_schema.json``, and the Spark version, so dates and
-    timestamps read with the proleptic calendar. Anything else goes
-    through Spark's writer."""
-    table = _collect_small(df) if "://" not in path else None
-    if table is None:
-        df.write.mode("overwrite").parquet(path)
-    else:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        spark = df.sparkSession
-        table = table.replace_schema_metadata(
-            {
-                "org.apache.spark.sql.parquet.row.metadata": df.schema.json(),
-                "org.apache.spark.version": spark.version,
-            }
-        )
-        # Sized like Spark's writer: the session's codec at its zstd
-        # level; no dictionaries, which pyarrow keeps even where they do
-        # not pay (unique floats); no statistics, which copy whole texts
-        # into the footer of a file too small to skip. The Arrow schema
-        # stays: without it pyarrow drops the footer keys.
-        codec = spark.conf.get("spark.sql.parquet.compression.codec")
-        level = spark.sparkContext._jsc.hadoopConfiguration().getInt(
-            "parquet.compression.codec.zstd.level", 3
-        )
-        buf = pa.BufferOutputStream()
-        pq.write_table(
-            table,
-            buf,
-            compression=codec,
-            compression_level=level if codec == "zstd" else None,
-            use_dictionary=False,
-            write_statistics=False,
-        )
-        shutil.rmtree(path, ignore_errors=True)  # as mode("overwrite") does
-        os.makedirs(path, exist_ok=True)
-        ResultStore.write_atomically(
-            os.path.join(path, "part-00000.parquet"), buf.getvalue()
-        )
-    with open(os.path.join(path, ResultStore.SCHEMA), "w") as f:
-        f.write(df.schema.json())
-
-
-def _collect_small(df: DataFrame):
-    """``df`` as one Arrow table if it is small, else None.
-
-    Small means at most the session's broadcast threshold, the size
-    Spark already collects to the driver to broadcast. Catalyst's
-    estimate must be known and within it, but the estimate alone is not
-    trusted: Catalyst sizes a Python UDF's output from default type
-    widths (an ``array<float>`` counts as one element), so an activations
-    frame can be thousands of times its estimate. The frame is therefore
-    collected as a stream of Arrow batches, and the collect gives up as
-    soon as the batches would pass the threshold, so this process holds
-    at most the threshold. (The JVM gathers the job's results before the
-    stream starts; past ``spark.driver.maxResultSize`` it fails the
-    collect.) An empty frame or a failed collect returns None too, so
-    Spark's writer runs, and raises a genuine error itself."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
-    from pyspark.util import local_connect_and_auth
-
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    threshold = conf.autoBroadcastJoinThreshold()
-    size = plan_size_bytes(df)
-    if size is None or size > threshold:
-        return None
-    port, secret, server = df._jdf.collectAsArrowToPython()
-    sockfile, sock = local_connect_and_auth(port, secret)
-    sock.settimeout(None)  # the job may run for long before the first batch
-    batches, nbytes, order = [], 0, None
-    with contextlib.suppress(Exception):
-        # Batches may come out of row order; the last item is their order.
-        for item in ArrowCollectSerializer().load_stream(sockfile):
-            if isinstance(item, list):
-                order = item
-            elif nbytes + item.nbytes > threshold:
-                break
-            else:
-                nbytes += item.nbytes
-                batches.append(item)
-    sockfile.close()  # the socket closes with its last file
-    sock.close()
-    try:
-        server.getResult()
-    except Exception:
-        order = None
-    return pa.Table.from_batches([batches[i] for i in order]) if order else None
-
-
-def _read_store_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """The one reader of store parquet results. A given schema spares
-    the schema-inference job (about 0.1 s per re-read); entries written
-    without a schema file are still inferred."""
-    try:
-        with open(os.path.join(path, ResultStore.SCHEMA)) as f:
-            schema = T.StructType.fromJson(json.load(f))
-    except FileNotFoundError:
-        return spark.read.parquet(path)
-    return spark.read.schema(schema).parquet(path)
+    return df, {"aligned_with": domain, "dense": plan.dense, "is_json": is_json}
 
 
 def _content_identity(file_path: str) -> str:

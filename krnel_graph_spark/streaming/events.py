@@ -50,48 +50,29 @@ def windowed_event_counts(
     window_duration: str = "1 hour",
     watermark: str | None = "2 hours",
 ) -> DataFrame:
-    """Tumbling-window counts + value sums per event type. With a watermark
-    (streaming mode), late rows beyond the bound are dropped and window
-    state is evicted — bounded state at any scale."""
-    df = with_event_time(events)
-    if watermark is not None and events.isStreaming:
-        df = df.withWatermark("ts", watermark)
-    return (
-        df.groupBy(F.window("ts", window_duration).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            # Exact decimal accumulation (order-independent), round once,
-            # then convert — same contract as rollup_event_counts, so the
-            # result cannot flip on a .00005 boundary under reordering.
-            F.round(F.sum(F.col("value").cast("decimal(30,10)")), 4)
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    """Tumbling-window counts + value sums per event type: the hopping
+    counts with no slide, so every event lands in exactly one window."""
+    return hopping_event_counts(events, window_duration, None, watermark)
 
 
 def hopping_event_counts(
     events: DataFrame,
     window_duration: str = "1 hour",
-    slide_duration: str = "30 minutes",
+    slide_duration: str | None = "30 minutes",
     watermark: str | None = "2 hours",
 ) -> DataFrame:
     """Hopping (sliding) window counts + value sums per event type: every
     event lands in ``size/slide`` overlapping epoch-aligned windows — the
     moving-average / rolling-rate companion to the tumbling
-    ``windowed_event_counts``, streaming-capable through the same
-    ``F.window`` operator (state per OPEN window, evicted by watermark).
+    ``windowed_event_counts`` (``slide_duration=None``), streaming-capable
+    through the same ``F.window`` operator (state per OPEN window,
+    evicted by watermark). With a watermark (streaming mode), late rows
+    beyond the bound are dropped and window state is evicted — bounded
+    state at any scale.
 
     Scale: the window expansion is a codegen Expand (size/slide rows per
     event) feeding one partial-aggregated groupBy — shuffle carries
-    (window, type) partial sums, not events. Decimal-exact value sums,
-    same contract as the tumbling/rollup ops.
+    (window, type) partial sums, not events.
     """
     df = with_event_time(events)
     if watermark is not None and events.isStreaming:
@@ -103,6 +84,9 @@ def hopping_event_counts(
         )
         .agg(
             F.count("*").alias("n_events"),
+            # Exact decimal accumulation (order-independent), round once,
+            # then convert — same contract as rollup_event_counts, so the
+            # result cannot flip on a .00005 boundary under reordering.
             F.round(F.sum(F.col("value").cast("decimal(30,10)")), 4)
             .cast("double")
             .alias("sum_value"),

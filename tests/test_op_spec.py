@@ -87,6 +87,31 @@ def test_serialize_roundtrip():
     assert rebuilt.mask.true_values == ["a"]
 
 
+def test_uuid_shaped_inline_data_of_an_unrelated_op_stays_a_string():
+    """Inline data is not a graph edge, even when a value has the shape
+    of a registered op's UUID."""
+    other = make_ds(id=[9])
+    ds = make_ds(u=[other.uuid, "x", other.uuid])
+    col = SelectCategoricalColumnOp(dataset=ds, column_name="u")
+    [rebuilt] = deserialize_graph(serialize_graph([col]))
+    assert rebuilt.uuid == col.uuid
+    assert rebuilt.dataset.data == ds.data
+
+
+def test_uuid_shaped_inline_data_of_a_node_in_the_graph_stays_a_string():
+    """The same holds when the UUID names a node of the same graph: the
+    data keeps its string and gains no dependency."""
+    ds = make_ds()
+    tagged = make_ds(u=[ds.uuid, "x", ds.uuid])
+    col = SelectCategoricalColumnOp(dataset=ds, column_name="cat")
+    mask = CategoryToBooleanOp(input_category=col, true_values=["a"])
+    masked = MaskRowsOp(dataset=tagged, mask=mask)
+    [rebuilt] = deserialize_graph(serialize_graph([masked]))
+    assert rebuilt.uuid == masked.uuid
+    assert rebuilt.dataset.data == tagged.data
+    assert rebuilt.dataset.get_dependencies() == []
+
+
 def test_deserialize_detects_hash_drift():
     ds = make_ds()
     graph = serialize_graph([ds])

@@ -3,13 +3,13 @@ a re-read is given the schema instead of running a schema-inference
 job, reads exactly what inference would, and entries written without
 the file still load. Small results are written as one Arrow file, the
 rest by Spark's writer; ``TestSparkWriter`` runs the store tests again
-through the latter."""
+through the latter. The entry format lives in ``runners/store.py``
+alone; the source scans below keep it there."""
 
 from __future__ import annotations
 
 import ast
 import os
-import re
 import shutil
 from pathlib import Path
 
@@ -21,12 +21,10 @@ import krnel_graph_spark
 from krnel_graph_spark import LocalCachedRunner, SparkRunner
 from krnel_graph_spark.functions.partitioning import plan_size_bytes
 from krnel_graph_spark.runners.plan import ROW_ID, VALUE
-from krnel_graph_spark.runners.spark_runner import (
-    _read_store_parquet,
-    _with_plan_facts,
-    _write_store_parquet,
-)
+from krnel_graph_spark.runners.spark_runner import _stored_frame
 from krnel_graph_spark.runners.store import ResultStore
+
+_UUID = "StoredOp_abc"
 
 
 def _rows(df):
@@ -36,6 +34,21 @@ def _rows(df):
         return v
 
     return [tuple(norm(v) for v in row) for row in df.orderBy("id").collect()]
+
+
+def _frame(spark, n: int):
+    return spark.range(n).selectExpr(f"id AS {ROW_ID}", "id")
+
+
+def _write(tmp_path, df, facts=None) -> tuple[ResultStore, str]:
+    """Store ``df`` as one entry; return the store and the entry's path."""
+    store = ResultStore(str(tmp_path / "store"))
+    store.write_parquet(_UUID, df, facts or {})
+    return store, store.parquet_path(_UUID)
+
+
+def _read(spark, store):
+    return store.read_parquet(spark, _UUID)[0]
 
 
 def _schema_files(root) -> list[str]:
@@ -82,19 +95,18 @@ _COLUMNS = {
 
 @pytest.mark.parametrize("kind", sorted(_COLUMNS))
 def test_schema_given_reread_equals_inferred(spark, tmp_path, kind):
-    df = spark.range(4).selectExpr("id", f"{_COLUMNS[kind]} AS c")
+    df = _frame(spark, 4).selectExpr(ROW_ID, "id", f"{_COLUMNS[kind]} AS c")
     if kind == "non_nullable":
         assert not df.schema["c"].nullable
-    path = str(tmp_path / "result.parquet")
-    _write_store_parquet(df, path)
+    store, path = _write(tmp_path, df)
     assert os.path.isfile(os.path.join(path, ResultStore.SCHEMA))
     assert _written_by_spark(path) == _spark_writer_forced(spark)
 
-    given = _read_store_parquet(spark, path)
+    given = _read(spark, store)
     inferred = spark.read.parquet(path)
     assert given.schema == inferred.schema
     assert _rows(given) == _rows(inferred)
-    assert jobs_during(spark, lambda: _read_store_parquet(spark, path)) == 0
+    assert jobs_during(spark, lambda: _read(spark, store)) == 0
 
 
 def test_persisted_result_reloads_without_a_job(spark, tmp_path):
@@ -166,41 +178,80 @@ def test_prepared_source_loads_from_store_without_inference(spark, tmp_path):
     assert worker.to_pandas(op)["name"].tolist() == ["n1", "n7"]
 
 
-_HELPER_CALL = re.compile(r"_(read|write)_store_parquet\(")
+_PACKAGE = Path(krnel_graph_spark.__file__).parent
+_STORE = _PACKAGE / "runners" / "store.py"
+
+
+def _calls(path: Path):
+    """``(function name, call node)`` for every call in ``path``."""
+    for fn in ast.walk(ast.parse(path.read_text())):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    yield fn.name, node
+
+
+def _callee(node: ast.Call):
+    return getattr(node.func, "attr", getattr(node.func, "id", None))
 
 
 def test_store_parquet_only_through_the_helpers():
-    """Store paths come from ``parquet_path``; outside the store modules
-    every use of one goes straight into the read or write helper, so no
-    module reads a store result with ``spark.read.parquet`` itself."""
-    root = Path(krnel_graph_spark.__file__).parent
-    store_modules = {root / "runners" / "store.py", root / "runners" / "cached_runner.py"}
+    """Store paths come from ``parquet_path``. Outside ``store.py`` only
+    the cache uses one, to copy trees, and nothing reads a store path
+    with ``spark.read``: every store read goes through
+    ``ResultStore.read_parquet``."""
+    offenders = []
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        if path == _STORE:
+            continue
+        rel = str(path.relative_to(_PACKAGE))
+        for _fn, node in _calls(path):
+            src = ast.unparse(node)
+            if _callee(node) == "parquet_path" and rel != "runners/cached_runner.py":
+                offenders.append(f"{rel}: {src}")
+            elif ".read." in f"{ast.unparse(node.func)}." and "parquet_path" in src:
+                offenders.append(f"{rel}: {src}")
+    assert offenders == []
+
+
+def test_entry_format_named_only_in_the_store_module():
+    """The names of an entry's parquet directory, its schema file and
+    the plan-facts key appear in no module but ``store.py``."""
+    names = (ResultStore.PARQUET, ResultStore.SCHEMA, ResultStore.PLAN_FACTS)
     offenders = [
-        f"{path.relative_to(root)}:{i}"
-        for path in sorted(root.rglob("*.py"))
-        if path not in store_modules
+        f"{path.relative_to(_PACKAGE)}:{i}"
+        for path in sorted(_PACKAGE.rglob("*.py"))
+        if path != _STORE
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "parquet_path(" in line and not _HELPER_CALL.search(line)
+        if any(name in line for name in names)
     ]
     assert offenders == []
 
 
 def test_arrow_parquet_writes_only_in_the_store_writer():
     """pyarrow writes parquet in one place: the one-file path of
-    ``_write_store_parquet``. Any other Arrow writer would bypass the
-    gate, the footer keys and the staged rename."""
-    root = Path(krnel_graph_spark.__file__).parent
-    writers = set()
-    for path in sorted(root.rglob("*.py")):
-        for fn in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            for node in ast.walk(fn):
-                if isinstance(node, ast.Call) and getattr(
-                    node.func, "attr", getattr(node.func, "id", None)
-                ) in ("write_table", "ParquetWriter"):
-                    writers.add((str(path.relative_to(root)), fn.name))
-    assert writers == {("runners/spark_runner.py", "_write_store_parquet")}
+    ``ResultStore.write_parquet``. Any other Arrow writer would bypass
+    the gate, the footer keys and the staged commit."""
+    writers = {
+        (str(path.relative_to(_PACKAGE)), fn)
+        for path in sorted(_PACKAGE.rglob("*.py"))
+        for fn, node in _calls(path)
+        if _callee(node) in ("write_table", "ParquetWriter")
+    }
+    assert writers == {("runners/store.py", "_write_one_file")}
+
+
+def test_only_the_staging_rule_renames_in_runners():
+    """Every write into the store commits through ``ResultStore.staged``:
+    it is the one caller of ``os.replace`` under ``runners/``."""
+    callers = {
+        (str(path.relative_to(_PACKAGE)), fn)
+        for path in sorted((_PACKAGE / "runners").rglob("*.py"))
+        for fn, node in _calls(path)
+        if _callee(node) in ("replace", "rename", "renames")
+        and ast.unparse(node.func).startswith("os.")
+    }
+    assert callers == {("runners/store.py", "staged")}
 
 
 def test_entry_without_plan_facts_still_loads(spark, tmp_path):
@@ -215,11 +266,10 @@ def test_entry_without_plan_facts_still_loads(spark, tmp_path):
     tmpl = ds.template("{{n}}!", n=ds.col_text("n"))
     masked = ds.mask_rows(tmpl.is_in({"n1!", "n7!"}))
     assert runner.column_plan(tmpl).aligned_with == ds.uuid
-    path = runner.store.parquet_path(tmpl.uuid)
-    stored = spark.read.parquet(path)
+    stored = spark.read.parquet(runner.store.parquet_path(tmpl.uuid))
     rows = stored.collect()
     legacy = spark.createDataFrame(rows, stored.schema).withMetadata(ROW_ID, {})
-    _write_store_parquet(legacy, path)
+    runner.store.write_parquet(tmpl.uuid, legacy, {})
 
     fresh = SparkRunner(spark=spark, store_path=store)
     plan = fresh.column_plan(tmpl)
@@ -228,19 +278,20 @@ def test_entry_without_plan_facts_still_loads(spark, tmp_path):
 
 
 def test_stale_part_files_are_not_read_back(spark, tmp_path):
-    """A crashed earlier write may leave part files behind; the writer
-    clears the directory first, as ``mode("overwrite")`` does."""
+    """A crashed earlier write may leave part files behind; the new
+    entry replaces the old directory rather than merging into it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    path = tmp_path / "result.parquet"
-    path.mkdir()
+    store = ResultStore(str(tmp_path / "store"))
+    path = Path(store.parquet_path(_UUID))
+    path.mkdir(parents=True)
     pq.write_table(
-        pa.table({"id": [100, 101]}), str(path / "part-00007-stale.parquet")
+        pa.table({ROW_ID: [100, 101], "id": [100, 101]}),
+        str(path / "part-00007-stale.parquet"),
     )
-    df = spark.range(3)
-    _write_store_parquet(df, str(path))
-    assert _rows(_read_store_parquet(spark, str(path))) == [(0,), (1,), (2,)]
+    store.write_parquet(_UUID, _frame(spark, 3), {})
+    assert _rows(_read(spark, store)) == [(0, 0), (1, 1), (2, 2)]
     assert _written_by_spark(str(path)) == _spark_writer_forced(spark)
 
 
@@ -289,23 +340,32 @@ def test_small_persist_leaves_one_data_file(runner):
 def test_unknown_size_takes_the_spark_writer(spark, tmp_path):
     """A frame built from an RDD has no size estimate. (A checkpointed
     frame keeps its origin's estimate, so a small one writes one file.)"""
-    rdd = spark.sparkContext.parallelize([(i, i * 2) for i in range(10)], 2)
-    df = spark.createDataFrame(rdd, "id long, c long")
+    rdd = spark.sparkContext.parallelize([(i, i, i * 2) for i in range(10)], 2)
+    df = spark.createDataFrame(rdd, f"{ROW_ID} long, id long, c long")
     assert plan_size_bytes(df) is None
     assert plan_size_bytes(df.localCheckpoint()) is None
-    path = str(tmp_path / "result.parquet")
-    _write_store_parquet(df, path)
+    store, path = _write(tmp_path, df)
     assert _written_by_spark(path)
-    assert _rows(_read_store_parquet(spark, path)) == _rows(df)
+    assert _rows(_read(spark, store)) == _rows(df)
 
 
-def test_remote_path_takes_the_spark_writer(spark, tmp_path, monkeypatch):
-    """A URI with a scheme other than ``file:`` is Hadoop's to resolve;
-    here no filesystem serves the scheme, so Spark's writer fails."""
+def test_uri_store_root_is_rejected(spark, tmp_path, monkeypatch):
+    """The sidecars are written with ``os`` and the parquet data by
+    Spark, so a URI root would split one entry across the local disk
+    (under ``./s3:/...``) and the remote filesystem. It is refused
+    before anything is written."""
     monkeypatch.chdir(tmp_path)
-    with pytest.raises(Exception, match="nosuchfs"):
-        _write_store_parquet(spark.range(3), "nosuchfs://bucket/result.parquet")
+    for root in ("s3://bucket/store", "file:///tmp/store", "hdfs://nn:8020/s"):
+        with pytest.raises(ValueError, match="local or mounted"):
+            ResultStore(root)
+        with pytest.raises(ValueError, match="local or mounted"):
+            SparkRunner(spark=spark, store_path=root)
+        with pytest.raises(ValueError, match="local or mounted"):
+            LocalCachedRunner(
+                spark=spark, store_path=root, cache_path=str(tmp_path / "c")
+            )
     assert os.listdir(tmp_path) == []
+    ResultStore(str(tmp_path / "colon:in/the_name"))  # a path, not a URI
 
 
 def test_frame_far_above_its_estimate_takes_the_spark_writer(
@@ -318,19 +378,18 @@ def test_frame_far_above_its_estimate_takes_the_spark_writer(
     hold, so a give-up that left the collect's socket open would hang."""
     texts = runner.from_inline_dataset({"t": [f"t{i}" for i in range(200)]})
     acts = texts.col_text("t").llm_layer_activations("fake:dim65536", layer_num=1)
-    frame = _with_plan_facts(runner.dispatch(acts)(runner, acts))
+    frame, facts = _stored_frame(runner.dispatch(acts)(runner, acts))
     threshold = 64 * 1024
     old = spark.conf.get(_THRESHOLD)
     spark.conf.set(_THRESHOLD, str(threshold))
     try:
         assert plan_size_bytes(frame) <= threshold
-        path = str(tmp_path / "result.parquet")
-        _write_store_parquet(frame, path)
+        store, path = _write(tmp_path, frame, facts)
     finally:
         spark.conf.set(_THRESHOLD, old)
     assert _written_by_spark(path)
     assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
-    back = _read_store_parquet(spark, path).orderBy(ROW_ID).toPandas()
+    back = _read(spark, store).orderBy(ROW_ID).toPandas()
     assert len(back) == 200 and {len(v) for v in back[VALUE]} == {65536}
 
 
@@ -346,11 +405,10 @@ def test_slow_small_frame_takes_the_one_file_path(spark, tmp_path, monkeypatch):
         time.sleep(3)
         yield from batches
 
-    df = spark.range(3).coalesce(1).mapInArrow(slow, "id long")
-    path = str(tmp_path / "result.parquet")
-    _write_store_parquet(df, path)
+    df = _frame(spark, 3).coalesce(1).mapInArrow(slow, f"{ROW_ID} long, id long")
+    store, path = _write(tmp_path, df)
     assert not _written_by_spark(path)
-    assert _rows(_read_store_parquet(spark, path)) == [(0,), (1,), (2,)]
+    assert _rows(_read(spark, store)) == [(0, 0), (1, 1), (2, 2)]
 
 
 def test_failed_collect_takes_the_spark_writer(spark, tmp_path, monkeypatch):
@@ -364,7 +422,6 @@ def test_failed_collect_takes_the_spark_writer(spark, tmp_path, monkeypatch):
         yield
 
     monkeypatch.setattr(ArrowCollectSerializer, "load_stream", fail)
-    path = str(tmp_path / "result.parquet")
-    _write_store_parquet(spark.range(3), path)
+    store, path = _write(tmp_path, _frame(spark, 3))
     assert _written_by_spark(path)
-    assert _rows(_read_store_parquet(spark, path)) == [(0,), (1,), (2,)]
+    assert _rows(_read(spark, store)) == [(0, 0), (1, 1), (2, 2)]
