@@ -20,16 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition up to ``target`` (default: the session's
-    ``defaultParallelism``) when the plan currently has fewer partitions.
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
+    """Round-robin repartition up to the session's ``defaultParallelism``
+    when the plan currently has fewer partitions.
 
     Use before CPU-bound per-row work whose input may be a handful of
     splits. The partition count is read from the physical plan (analysis
     only — no job is triggered).
     """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -139,13 +138,13 @@ def pin_scope():
             df.unpersist()
 
 
-def widen_if_heavy(
-    df: DataFrame,
-    min_bytes: int = 16 << 20,
-    target: int | None = None,
-) -> DataFrame:
+_HEAVY_BYTES = 16 << 20  # inputs below this estimate are not widened
+
+
+def widen_if_heavy(df: DataFrame) -> DataFrame:
     """Size-gated :func:`ensure_min_partitions`: widen only when the input
-    is big enough that single-split execution would actually hurt.
+    (at least ``_HEAVY_BYTES``) is big enough that single-split execution
+    would actually hurt.
 
     A repartition of a tiny frame costs a shuffle + an extra stage that
     dwarfs the parallelism it buys (measured ~0.4 s on a 2 MB table), while
@@ -155,9 +154,9 @@ def widen_if_heavy(
     estimate unavailable.
     """
     size = plan_size_bytes(df)
-    if size is not None and size < min_bytes:
+    if size is not None and size < _HEAVY_BYTES:
         return df
-    return ensure_min_partitions(df, target)
+    return ensure_min_partitions(df)
 
 
 def write_bucketed(

@@ -7,14 +7,15 @@ dataset-level ops so they compose with the fluent API and inherit the
 result store for free. A corpus dedup that took an hour is exactly the
 kind of result content-addressed memoization exists for.
 
-Row-id semantics follow the engine's positional contract:
-
-- filters (dedup) keep the surviving rows' ORIGINAL ids (non-dense, like
-  ``MaskRowsOp``) — downstream positional ops keep working;
-- row-aligned enrichment (text stats) preserves ids and density;
-- fan-out (chunking) derives a deterministic new id from
-  ``parent_id * 2^20 + chunk_id`` (documented 1M-chunks-per-doc bound),
-  keeping exports reproducible without a global sort.
+This module only declares the ops. Their lowerings, and with them the
+row-id semantics of each result, live in ``runners/scale_impl.py``: a
+subset (dedup, samples) keeps the surviving rows' ORIGINAL ids, like
+``MaskRowsOp``; a row-aligned enrichment (text stats) keeps every input
+row, its id and density; a bounded table (top-k, pairs, bins) gets fresh
+dense ids; a fan-out (chunking) derives a deterministic new id from
+``parent_id * 2^20 + chunk_id``. The facts a plan records are described
+in ``runners/plan.py``; ``tests/test_scale_ops.py`` checks them for
+every op here.
 """
 
 from __future__ import annotations

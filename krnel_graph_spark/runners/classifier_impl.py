@@ -31,7 +31,7 @@ from ..operators.classifier_ops import (
     ClassifierPredictOp,
     TrainClassifierOp,
 )
-from .plan import VALUE, ArtifactPlan, ColumnPlan
+from .plan import ArtifactPlan, ColumnPlan
 from .spark_runner import SparkRunner
 
 # ---------------------------------------------------------------------- #
@@ -417,13 +417,7 @@ def classifier_predict(runner: SparkRunner, op: ClassifierPredictOp) -> ColumnPl
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
         return pd.Series(probe.scores(X))
 
-    return ColumnPlan(
-        source=x.source,
-        expr=score(x.expr.cast("array<double>")),
-        name=VALUE,
-        aligned_with=x.aligned_with,
-        dense=x.dense,
-    )
+    return x.derive(score(x.expr.cast("array<double>")))
 
 
 @SparkRunner.implementation

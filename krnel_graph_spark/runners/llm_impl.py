@@ -27,7 +27,7 @@ from ..operators.llm_ops import (
     LLMLayerActivationsOp,
     LLMLogitScoresOp,
 )
-from .plan import ROW_ID, VALUE, ColumnPlan
+from .plan import ROW_ID, VALUE, ColumnPlan, json_text
 from .spark_runner import SparkRunner
 
 _MODEL_PROVIDERS: dict[str, type] = {}
@@ -405,7 +405,9 @@ def _run_batched(
 
     from ..functions.partitioning import ensure_min_partitions
 
-    text_expr = F.to_json(col.expr) if col.is_json else col.expr.cast("string")
+    text_expr = (
+        json_text(col.expr, col.dtype) if is_conversation else col.expr.cast("string")
+    )
     # Inference is the most compute-heavy op in the engine: widen narrow
     # scans so every executor core hosts a model replica and a batch stream.
     src = ensure_min_partitions(
@@ -445,13 +447,7 @@ def _run_batched(
                 yield pd.DataFrame({ROW_ID: chunk[ROW_ID].values, VALUE: values})
 
     out = src.mapInPandas(run, schema=out_schema)
-    return ColumnPlan(
-        source=out,
-        expr=F.col(VALUE),
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-    )
+    return col.derive(F.col(VALUE), source=out)
 
 
 def _is_conversation(op) -> bool:

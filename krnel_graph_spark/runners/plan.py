@@ -14,28 +14,54 @@ assigned at scan time (parquet ``_metadata.row_index`` + file ordinal — no
 shuffle, reproducible across recomputation). Filters keep original ids;
 exports sort by id.
 
-A stored result records its plan's row domain, ``dense`` and ``is_json`` in
-the metadata of its ``__row_id`` field, so a store hit rebuilds exactly the
-plan its compute produced.
+A plan keeps only the row facts it cannot derive. A dataset's row domain
+is the uuid of the op it lowers, so a :class:`DatasetPlan` records only
+``dense``. A column records the row domain it is aligned with and
+``dense``; a column computed row by row from another takes both from it
+(:meth:`ColumnPlan.derive`). A new set of rows is decided only where rows
+are chosen: the store reload, the typed select, the row-id column, the
+mask and the train/test split. A stored result records these facts —
+``aligned_with`` (columns only) and ``dense`` — in the metadata of its
+``__row_id`` field, so a store hit rebuilds exactly the plan its compute
+produced. (Entries written before carry a dataset's own uuid and an
+``is_json`` flag too; both are ignored.)
+
+Whether a column is JSON is a fact of its op's type, and how it becomes
+JSON text is a fact of its Spark type: :func:`json_text` is the one rule.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 ROW_ID = "__row_id"
 VALUE = "value"
 
+# Spark types that hold JSON as a value rather than as text.
+JSON_VALUE_TYPES = (T.VariantType, T.StructType, T.ArrayType, T.MapType)
+
+
+def json_text(expr: Column, dtype: T.DataType) -> Column:
+    """The one JSON-text rule, decided from the column's Spark type: a
+    VARIANT, struct, array or map column goes through ``to_json``; any
+    other column is already text (a string column holding JSON is used
+    as it is)."""
+    if isinstance(dtype, JSON_VALUE_TYPES):
+        return F.to_json(expr)
+    return expr.cast("string")
+
 
 @dataclass
 class DatasetPlan:
-    """A lowered multi-column dataset: ``df`` includes ``__row_id``."""
+    """A lowered multi-column dataset: ``df`` includes ``__row_id``. Its
+    row domain is the uuid of the op it lowers."""
 
     df: DataFrame
-    dataset_uuid: str  # uuid of the OpSpec node this plan materializes
     dense: bool = False  # row ids are exactly 0..n-1 (enables arithmetic slicing)
 
     @property
@@ -57,10 +83,27 @@ class ColumnPlan:
     name: str
     aligned_with: str
     dense: bool = False
-    is_json: bool = False  # lowered as VARIANT; export via to_json
 
     def df(self) -> DataFrame:
         return self.source.select(ROW_ID, self.expr.alias(self.name))
+
+    @property
+    def dtype(self) -> T.DataType:
+        return self.df().schema[self.name].dataType
+
+    def derive(self, expr: Column, source: Optional[DataFrame] = None) -> "ColumnPlan":
+        """A ``value`` column computed row by row from this one: ``expr``
+        over ``source`` (this column's source by default). It keeps this
+        column's rows: row domain and density. ``source`` must carry
+        this column's row ids (an aligned frame, or a per-row map of
+        the source)."""
+        return ColumnPlan(
+            source=self.source if source is None else source,
+            expr=expr,
+            name=VALUE,
+            aligned_with=self.aligned_with,
+            dense=self.dense,
+        )
 
 
 @dataclass

@@ -33,36 +33,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.scale_ops import (
-    AnnTopKOp,
-    GroupCapOp,
-    PiiScrubOp,
-    MixToWeightsOp,
-    CdcChunkDedupOp,
-    SkylineSelectOp,
-    CalibrationBinsOp,
-    PmiCollocationsOp,
-    KneserNey3ScoreOp,
-    KneserNeyScoreOp,
-    DedupWeightsOp,
-    SpanCorruptionOp,
-    WinnowPairsOp,
-    SequencePackOp,
-    StratifiedSampleOp,
-    C4RulesOp,
-    ChunkDocumentsOp,
-    CompressionSignalsOp,
-    GopherRulesOp,
-    DecontaminateAgainstOp,
-    DropExactDupsOp,
-    DropNearDupsOp,
-    DsirWeightsOp,
-    HashSampleOp,
-    NgramCoverageOp,
-    ParagraphDedupOp,
-    TextStatsOp,
-    TokenEntropyOp,
-)
 from ..operators.dataset_ops import (
     AssignRowIDOp,
     AssignTrainTestSplitOp,
@@ -88,7 +58,6 @@ from ..functions.partitioning import (
     _same_host_master,
     _sized_master,
     pin,
-    pin_scope,
 )
 from ..logging import get_logger
 from ..operators.grouped_ops import GroupedOp
@@ -96,7 +65,15 @@ from ..plans.op_spec import OpSpec
 from ..plans.status import OpState, OpStatus, utcnow
 from ..types import JSONColumnType
 from .base import BaseRunner
-from .plan import ROW_ID, VALUE, ArtifactPlan, ColumnPlan, DatasetPlan
+from .plan import (
+    JSON_VALUE_TYPES,
+    ROW_ID,
+    VALUE,
+    ArtifactPlan,
+    ColumnPlan,
+    DatasetPlan,
+    json_text,
+)
 from .store import ResultStore
 
 _FILE_ORD_SHIFT = 40  # multi-file scans: row_id = file_ordinal << 40 | row_index
@@ -306,11 +283,11 @@ class SparkRunner(BaseRunner):
         header: bool = True,
     ) -> None:
         df = self._sink_df(op, sort_by_row_id)
-        # CSV has no nested types: arrays/structs/variants export as JSON text.
-        # (error translation below)
+        # CSV has no nested types: arrays/structs/maps/variants export as
+        # JSON text. (error translation below)
         cols = [
-            F.to_json(F.col(f.name)).alias(f.name)
-            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType, T.VariantType))
+            json_text(F.col(f.name), f.dataType).alias(f.name)
+            if isinstance(f.dataType, JSON_VALUE_TYPES)
             else F.col(f.name)
             for f in df.schema.fields
         ]
@@ -535,26 +512,21 @@ class SparkRunner(BaseRunner):
             return ArtifactPlan(payload=store.read_pickle(op.uuid), kind="pickle")
         df, facts = store.read_parquet(self.spark, op.uuid)
         # Entries written without recorded facts: their own row domain,
-        # not dense, JSON exactly when stored as VARIANT.
-        domain = facts.get("aligned_with", op.uuid)
+        # not dense.
         dense = facts.get("dense", False)
         value_cols = [c for c in df.columns if c != ROW_ID]
         from ..types import ColumnType
 
         if isinstance(op, ColumnType) and len(value_cols) == 1:
             name = value_cols[0]
-            is_json = facts.get(
-                "is_json", isinstance(df.schema[name].dataType, T.VariantType)
-            )
             return ColumnPlan(
                 source=df,
                 expr=F.col(name),
                 name=name,
-                aligned_with=domain,
+                aligned_with=facts.get("aligned_with", op.uuid),
                 dense=dense,
-                is_json=is_json,
             )
-        return DatasetPlan(df=df, dataset_uuid=domain, dense=dense)
+        return DatasetPlan(df=df, dense=dense)
 
     def has_result(self, op: OpSpec) -> bool:
         """Parity with the reference's recursive ``has_result``
@@ -604,22 +576,27 @@ class SparkRunner(BaseRunner):
         if isinstance(plan, ArtifactPlan):
             raise TypeError(f"{op.short_name()} is an artifact, not a table")
         df = plan.df() if isinstance(plan, ColumnPlan) else plan.df
-        if isinstance(plan, ColumnPlan) and plan.is_json:
-            df = df.select(ROW_ID, F.to_json(F.col(plan.name)).alias(plan.name))
+        if isinstance(op, JSONColumnType):
+            text = json_text(F.col(plan.name), df.schema[plan.name].dataType)
+            df = df.select(ROW_ID, text.alias(plan.name))
         if not keep_row_id:
             df = df.drop(ROW_ID)
         return df
 
+    def _ordered(self, op: OpSpec) -> DataFrame:
+        """The op's export frame: rows in row-id order, ids dropped."""
+        return self.dataframe(op, keep_row_id=True).orderBy(ROW_ID).drop(ROW_ID)
+
     def to_pandas(self, op: OpSpec) -> pd.DataFrame:
-        df = self.dataframe(op, keep_row_id=True)
+        df = self._ordered(op)
         with _translate_runtime_errors():
-            return df.orderBy(ROW_ID).drop(ROW_ID).toPandas()
+            return df.toPandas()
 
     def to_arrow(self, op: OpSpec):
-        import pyarrow as pa
-
-        pdf = self.to_pandas(op)
-        return pa.Table.from_pandas(pdf, preserve_index=False)
+        """The export as an Arrow table, with Spark's column types."""
+        df = self._ordered(op)
+        with _translate_runtime_errors():
+            return df.toArrow()
 
     def to_numpy(self, op: OpSpec):
         import numpy as np
@@ -795,13 +772,11 @@ def _bucket_of(col, bounds: list[int], lo: int = 0, hi: Optional[int] = None):
 
 def _stored_frame(plan: Union[DatasetPlan, ColumnPlan]) -> tuple[DataFrame, dict]:
     """The frame to store for ``plan`` and the facts a reload needs to
-    plan like the compute: row domain, density and JSON-ness. They are
+    plan like the compute: a column's row domain, and density. They are
     always set here, never inherited from a stored upstream."""
     if isinstance(plan, ColumnPlan):
-        df, domain, is_json = plan.df(), plan.aligned_with, plan.is_json
-    else:
-        df, domain, is_json = plan.df, plan.dataset_uuid, False
-    return df, {"aligned_with": domain, "dense": plan.dense, "is_json": is_json}
+        return plan.df(), {"aligned_with": plan.aligned_with, "dense": plan.dense}
+    return plan.df, {"dense": plan.dense}
 
 
 def _content_identity(file_path: str) -> str:
@@ -851,10 +826,10 @@ def load_parquet(runner: SparkRunner, op: LoadParquetDatasetOp) -> DatasetPlan:
             f"{op.file_path!r} not found locally and not prepared into the store"
         )
     df = spark.read.parquet(op.file_path)
-    return _scan_with_row_ids(df, op.uuid)
+    return _scan_with_row_ids(df)
 
 
-def _scan_with_row_ids(df: DataFrame, uuid: str) -> DatasetPlan:
+def _scan_with_row_ids(df: DataFrame) -> DatasetPlan:
     """Attach stable scan-time row ids from file metadata (works for every
     Spark file source: parquet, csv, json). Single file → in-file row index
     (dense); multi-file → ``file_ordinal << 40 | row_index``.
@@ -864,7 +839,7 @@ def _scan_with_row_ids(df: DataFrame, uuid: str) -> DatasetPlan:
     ids, so round-tripping through a user-directed sink preserves row
     identity."""
     if ROW_ID in df.columns:
-        return DatasetPlan(df=df, dataset_uuid=uuid, dense=False)
+        return DatasetPlan(df=df, dense=False)
     files = sorted(df.inputFiles())
     if len(files) <= 1:
         with_id = df.select(
@@ -884,10 +859,10 @@ def _scan_with_row_ids(df: DataFrame, uuid: str) -> DatasetPlan:
             *df.columns,
         )
         dense = False
-    return DatasetPlan(df=with_id, dataset_uuid=uuid, dense=dense)
+    return DatasetPlan(df=with_id, dense=dense)
 
 
-def _text_scan_with_row_ids(df: DataFrame, uuid: str) -> DatasetPlan:
+def _text_scan_with_row_ids(df: DataFrame) -> DatasetPlan:
     """Row ids for text sources (csv/json), which expose no per-file row
     index in ``_metadata``: ``monotonically_increasing_id`` — unique and
     stable for a fixed file set + session conf. When the scan is a single
@@ -898,10 +873,10 @@ def _text_scan_with_row_ids(df: DataFrame, uuid: str) -> DatasetPlan:
     first (``runner.write_parquet``) — parquet scans carry exact in-file
     row indexes."""
     if ROW_ID in df.columns:  # sink round-trip: re-adopt written ids
-        return DatasetPlan(df=df, dataset_uuid=uuid, dense=False)
+        return DatasetPlan(df=df, dense=False)
     with_id = df.select(F.monotonically_increasing_id().alias(ROW_ID), *df.columns)
     dense = with_id.rdd.getNumPartitions() <= 1
-    return DatasetPlan(df=with_id, dataset_uuid=uuid, dense=dense)
+    return DatasetPlan(df=with_id, dense=dense)
 
 
 @SparkRunner.implementation
@@ -916,7 +891,7 @@ def load_csv(runner: SparkRunner, op: LoadCSVDatasetOp) -> DatasetPlan:
         reader = reader.schema(op.schema_ddl)
     else:
         reader = reader.option("inferSchema", "true")
-    return _text_scan_with_row_ids(reader.csv(op.file_path), op.uuid)
+    return _text_scan_with_row_ids(reader.csv(op.file_path))
 
 
 @SparkRunner.implementation
@@ -924,7 +899,7 @@ def load_json_lines(runner: SparkRunner, op: LoadJSONLinesDatasetOp) -> DatasetP
     reader = runner.spark.read
     if op.schema_ddl:
         reader = reader.schema(op.schema_ddl)
-    return _text_scan_with_row_ids(reader.json(op.file_path), op.uuid)
+    return _text_scan_with_row_ids(reader.json(op.file_path))
 
 
 @SparkRunner.implementation
@@ -932,425 +907,7 @@ def load_orc(runner: SparkRunner, op: LoadORCDatasetOp) -> DatasetPlan:
     """ORC scan (columnar, vectorized, predicate-pushdown-capable like
     parquet). Row ids follow the text-source policy: written ids are
     re-adopted on round-trips, fresh scans get stable monotonic ids."""
-    return _text_scan_with_row_ids(runner.spark.read.orc(op.file_path), op.uuid)
-
-
-def _fresh_ids(df: DataFrame, *order) -> DataFrame:
-    """Fresh dense row ids 0..n-1 in ``order``. The global window runs in
-    one task, so only for results bounded by contract (top-k, pair and
-    bin tables)."""
-    w = Window.orderBy(*order)
-    return df.select((F.row_number().over(w) - 1).cast("long").alias(ROW_ID), "*")
-
-
-@SparkRunner.implementation
-def drop_exact_dups_op(runner: SparkRunner, op: DropExactDupsOp) -> DatasetPlan:
-    """Scale-surface dedup as a memoized op: keep the min-row-id row per
-    normalized-text fingerprint (``functions/dedup.py:drop_exact_dups``
-    keyed on the engine row id — "first occurrence wins", positionally).
-    Survivors keep their ORIGINAL ids, like a mask (dense=False)."""
-    from ..functions.dedup import drop_exact_dups as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, op.text_column, ROW_ID)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def drop_near_dups_op(runner: SparkRunner, op: DropNearDupsOp) -> DatasetPlan:
-    """MinHash-LSH near-dedup as a memoized op (the expensive pipeline
-    step content-addressing exists for). Survivors keep original ids."""
-    from ..functions.dedup import drop_near_dups as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df,
-        op.text_column,
-        ROW_ID,
-        num_perm=op.num_perm,
-        bands=op.bands,
-        shingle_k=op.shingle_k,
-        jaccard_threshold=op.jaccard_threshold,
-        keep_by=op.keep_by,
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def text_stats_op(runner: SparkRunner, op: TextStatsOp) -> DatasetPlan:
-    """Row-aligned text-quality enrichment: appends n_tok / n_tok_bpe /
-    stop_r / punct_r / mwl / quality as pure codegen expressions fused
-    into the parent plan; ids and density are preserved."""
-    from ..functions import text as tx
-
-    ds = runner.dataset_plan(op.dataset)
-    c = op.text_column
-    out = ds.df.select(
-        "*",
-        tx.token_count(c).alias("n_tok"),
-        tx.regex_token_count(c).alias("n_tok_bpe"),
-        F.round(tx.stopword_ratio(c), 6).alias("stop_r"),
-        F.round(tx.punct_ratio(c), 6).alias("punct_r"),
-        F.round(tx.mean_word_length(c), 6).alias("mwl"),
-        F.round(tx.quality_score(c), 6).alias("quality"),
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def chunk_documents_op(runner: SparkRunner, op: ChunkDocumentsOp) -> DatasetPlan:
-    """Zero-shuffle chunk fan-out. New deterministic row ids:
-    ``parent_id * 2^20 + chunk_id`` (1M chunks/doc bound, asserted), so
-    exports reproduce without a global sort; the parent id rides along as
-    ``src_row_id`` for joins back to the document."""
-    from ..functions.text import chunk_documents as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, op.text_column, ROW_ID, op.chunk_size, op.overlap)
-    out = out.withColumnRenamed(ROW_ID, "src_row_id").select(
-        (
-            F.col("src_row_id") * F.lit(1 << 20)
-            + F.when(
-                F.col("chunk_id") < (1 << 20), F.col("chunk_id")
-            ).otherwise(
-                F.raise_error(
-                    F.lit("chunk_documents op: > 2^20 chunks in one document")
-                )
-            )
-        ).alias(ROW_ID),
-        "*",
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def hash_sample_op(runner: SparkRunner, op: HashSampleOp) -> DatasetPlan:
-    """Deterministic Bernoulli sample on the row-id hash: a scan-side
-    filter that pushes down, keeps original ids (dense=False), and picks
-    identical rows under any partitioning or engine."""
-    from ..functions.sampling import hash_sample as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, ROW_ID, op.fraction, seed=op.seed)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def decontaminate_against_op(
-    runner: SparkRunner, op: DecontaminateAgainstOp
-) -> DatasetPlan:
-    """Two-parent decontamination: digest-join the train shingles against
-    the eval set's distinct gram digests, drop flagged rows via
-    left_anti. Survivors keep original ids (dense=False)."""
-    from ..functions.curation import decontaminate as _impl
-
-    train = runner.dataset_plan(op.dataset)
-    test = runner.dataset_plan(op.against)
-    flagged = _impl(
-        train.df,
-        test.df.select(F.col(op.against_column).alias(op.text_column)),
-        op.text_column,
-        ROW_ID,
-        n=op.ngram,
-    ).select(ROW_ID)
-    out = train.df.join(flagged, ROW_ID, "left_anti")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def ann_topk_op(runner: SparkRunner, op: AnnTopKOp) -> DatasetPlan:
-    """Two-parent exact cosine top-k (queries broadcast). Fresh dense row
-    ids in (query, rank) order — legal because the result is bounded by
-    contract (|queries| x k), the same contract as the rrf/top-k frames."""
-    from ..functions.similarity import cosine_topk as _impl
-
-    corpus = runner.dataset_plan(op.dataset)
-    queries = runner.dataset_plan(op.queries)
-    out = _impl(
-        corpus.df.select(op.id_column, op.vector_column),
-        queries.df.select(op.id_column, op.vector_column),
-        op.vector_column,
-        op.id_column,
-        k=op.k,
-    )
-    return DatasetPlan(
-        df=_fresh_ids(out, "query_id", "rank"), dataset_uuid=op.uuid, dense=True
-    )
-
-
-@SparkRunner.implementation
-def stratified_sample_op(
-    runner: SparkRunner, op: StratifiedSampleOp
-) -> DatasetPlan:
-    """Per-stratum md5-bucket downsampling keyed on the row id — one
-    scan-side predicate, survivors keep original ids."""
-    from ..functions.sampling import stratified_sample as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df, op.strata_column, dict(op.fractions), ROW_ID,
-        seed=op.seed, default_fraction=op.default_fraction,
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def mix_to_weights_op(runner: SparkRunner, op: MixToWeightsOp) -> DatasetPlan:
-    """Integer-exact corpus mixing: one stratum-count agg (collects
-    #strata rows — human-sized), then the stratified-sample predicate."""
-    from ..functions.sampling import mix_to_weights as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, op.strata_column, dict(op.weights), ROW_ID, seed=op.seed)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def pii_scrub_op(runner: SparkRunner, op: PiiScrubOp) -> DatasetPlan:
-    """Row-aligned PII redaction of ``text_column`` in place; ids and
-    density preserved (an enrichment-style rewrite, not a filter)."""
-    from ..functions.curation import pii_scrub as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = ds.df.withColumn(
-        op.text_column, _impl(op.text_column, tuple(op.kinds))
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def group_cap_op(runner: SparkRunner, op: GroupCapOp) -> DatasetPlan:
-    """Deterministic per-key cap: the engine row id rides as the final
-    tiebreaker so the kept set is unique; survivors keep original ids."""
-    from ..functions.curation import group_cap as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df, list(op.key_columns), op.n, list(op.order_by) + [ROW_ID]
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def sequence_pack_op(runner: SparkRunner, op: SequencePackOp) -> DatasetPlan:
-    """Offset packing as a row-aligned enrichment (adds n_tokens +
-    pack_id); ids and density preserved. partition_by is the scale path —
-    without it the global-order window is single-task (result-set frames
-    only, same contract as the function)."""
-    from ..functions.curation import sequence_pack as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df, op.order_by, op.token_column, op.budget,
-        partition_by=op.partition_by,
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def paragraph_dedup_op(runner: SparkRunner, op: ParagraphDedupOp) -> DatasetPlan:
-    """Corpus-wide paragraph dedup keyed on the engine row id: the
-    deduped text replaces ``text_column`` (with n_paras/n_kept appended),
-    non-text parent columns ride along via a row-id equi-join, and docs
-    whose every paragraph was boilerplate disappear (dense=False)."""
-    from ..functions.curation import paragraph_dedup as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    deduped = _impl(
-        ds.df.select(ROW_ID, op.text_column), op.text_column, ROW_ID,
-        sep=op.sep,
-    ).withColumnRenamed("text", op.text_column)
-    out = ds.df.drop(op.text_column).join(deduped, ROW_ID)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def cdc_chunk_dedup_op(runner: SparkRunner, op: CdcChunkDedupOp) -> DatasetPlan:
-    """CDC dedup-signal enrichment keyed on the engine row id: the
-    per-row chunk/dup counters join back onto the parent's columns;
-    every input row reports (blank docs as zeros), so ids and density
-    are preserved."""
-    from ..functions.dedup import cdc_chunk_dedup as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    rep = _impl(
-        ds.df.select(ROW_ID, op.text_column),
-        op.text_column,
-        ROW_ID,
-        window=op.window,
-        modulus=op.modulus,
-    )
-    out = ds.df.join(rep, ROW_ID)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def winnow_pairs_op(runner: SparkRunner, op: WinnowPairsOp) -> DatasetPlan:
-    """Winnowing pair mining keyed on the engine row id; the result is
-    a bounded pair table, so fresh dense row ids in (doc_a, doc_b)
-    order (the AnnTopKOp contract)."""
-    from ..functions.dedup import winnow_pairs as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df.select(ROW_ID, op.text_column),
-        op.text_column,
-        ROW_ID,
-        k=op.k,
-        w=op.w,
-        min_shared=op.min_shared,
-        max_doc_freq=op.max_doc_freq,
-    )
-    return DatasetPlan(
-        df=_fresh_ids(out, "doc_a", "doc_b"), dataset_uuid=op.uuid, dense=True
-    )
-
-
-@SparkRunner.implementation
-def span_corruption_op(runner: SparkRunner, op: SpanCorruptionOp) -> DatasetPlan:
-    """T5 denoising-pair enrichment keyed on the engine row id: the
-    (inputs, targets) columns join back onto the parent's columns;
-    every input row reports, so ids and density are preserved."""
-    from ..functions.curation import span_corruption_text as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    rep = _impl(
-        ds.df.select(ROW_ID, op.text_column),
-        op.text_column,
-        ROW_ID,
-        noise_density=op.noise_density,
-        mean_span=op.mean_span,
-        seed=op.seed,
-    )
-    out = ds.df.join(rep, ROW_ID)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def dedup_weights_op(runner: SparkRunner, op: DedupWeightsOp) -> DatasetPlan:
-    """Soft-dedup enrichment keyed on the engine row id: the
-    (cluster_size, weight) table — pair-graph-sized, broadcast — joins
-    back onto the parent's columns; every input row reports (singletons
-    weight 1.0), so ids and density are preserved."""
-    from ..functions.dedup import dedup_weights as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    rep = _impl(
-        ds.df.select(ROW_ID, op.text_column),
-        op.text_column,
-        ROW_ID,
-        num_perm=op.num_perm,
-        bands=op.bands,
-        jaccard_threshold=op.jaccard_threshold,
-        mode=op.mode,
-    )
-    out = ds.df.join(rep, ROW_ID)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def gopher_rules_op(runner: SparkRunner, op: GopherRulesOp) -> DatasetPlan:
-    """Gopher rule-bundle enrichment: one codegen projection appended in
-    place — no join, ids and density preserved."""
-    from ..functions.text import gopher_rules as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df, op.text_column,
-        min_words=op.min_words, max_words=op.max_words,
-        min_mwl=op.min_mwl, max_mwl=op.max_mwl,
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def c4_rules_op(runner: SparkRunner, op: C4RulesOp) -> DatasetPlan:
-    """C4 cleaning enrichment: one codegen projection appended in place
-    (clean_text + counters + verdict) — no join, ids and density
-    preserved."""
-    from ..functions.text import c4_rules as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(
-        ds.df, op.text_column,
-        min_line_words=op.min_line_words, min_sentences=op.min_sentences,
-    )
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def token_entropy_op(runner: SparkRunner, op: TokenEntropyOp) -> DatasetPlan:
-    """Lexical-diversity enrichment: n_tokens/n_types/entropy left-joined
-    back on the row id so blank docs survive with nulls — ids and density
-    preserved."""
-    from ..functions.text import token_entropy as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    stats = _impl(ds.df.select(ROW_ID, op.text_column), op.text_column, ROW_ID)
-    out = ds.df.join(stats, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def dsir_weights_op(runner: SparkRunner, op: DsirWeightsOp) -> DatasetPlan:
-    """Two-parent DSIR enrichment: raw corpus scored against the target
-    parent's hashed-n-gram distribution; n_grams/dsir_logw left-joined
-    back on the row id (blank docs null). Both parents content-address
-    the result."""
-    from ..functions.text import dsir_weights as _impl
-
-    raw = runner.dataset_plan(op.dataset)
-    target = runner.dataset_plan(op.target)
-    weights = _impl(
-        raw.df.select(ROW_ID, op.text_column),
-        target.df.select(
-            ROW_ID, F.col(op.target_column).alias(op.text_column)
-        ),
-        op.text_column,
-        ROW_ID,
-        buckets=op.buckets,
-        smoothing=op.smoothing,
-    )
-    out = raw.df.join(weights, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=raw.dense)
-
-
-@SparkRunner.implementation
-def compression_signals_op(
-    runner: SparkRunner, op: CompressionSignalsOp
-) -> DatasetPlan:
-    """zlib-compressibility enrichment: n_bytes/n_zlib from the single
-    Arrow stage, left-joined back on the row id — ids and density
-    preserved."""
-    from ..functions.text import compression_signals as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    stats = _impl(
-        ds.df.select(ROW_ID, op.text_column), op.text_column, ROW_ID,
-        level=op.level,
-    )
-    out = ds.df.join(stats, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def ngram_coverage_op(runner: SparkRunner, op: NgramCoverageOp) -> DatasetPlan:
-    """Two-parent contamination-coverage enrichment: this dataset is the
-    eval suite, ``corpus`` the training side; n_grams/n_hit left-joined
-    back on the row id (nulls for rows with < n tokens)."""
-    from ..functions.curation import ngram_coverage as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    corpus = runner.dataset_plan(op.corpus)
-    cov = _impl(
-        corpus.df.select(F.col(op.corpus_column).alias(op.text_column)),
-        ds.df.select(ROW_ID, op.text_column),
-        op.text_column,
-        ROW_ID,
-        n=op.ngram,
-    )
-    out = ds.df.join(cov, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
+    return _text_scan_with_row_ids(runner.spark.read.orc(op.file_path))
 
 
 @SparkRunner.implementation
@@ -1361,7 +918,7 @@ def load_avro(runner: SparkRunner, op: "LoadAvroDatasetOp") -> DatasetPlan:
     from ..sources.avro import read_avro_dataframe
 
     df = read_avro_dataframe(runner.spark, op.file_path, op.schema_ddl)
-    return _text_scan_with_row_ids(df, op.uuid)
+    return _text_scan_with_row_ids(df)
 
 
 @SparkRunner.implementation
@@ -1375,7 +932,7 @@ def load_text_lines(
     df = runner.spark.read.text(op.file_path).withColumnRenamed(
         "value", op.column
     )
-    return _text_scan_with_row_ids(df, op.uuid)
+    return _text_scan_with_row_ids(df)
 
 
 @SparkRunner.implementation
@@ -1391,7 +948,7 @@ def load_inline(runner: SparkRunner, op: LoadInlineJsonDatasetOp) -> DatasetPlan
     ids = pa.array(range(table.num_rows), type=pa.int64())
     table = table.add_column(0, pa.field(ROW_ID, pa.int64()), ids)
     df = runner.spark.createDataFrame(table)
-    return DatasetPlan(df=df, dataset_uuid=op.uuid, dense=True)
+    return DatasetPlan(df=df, dense=True)
 
 
 # ====================================================================== #
@@ -1414,9 +971,6 @@ def select_column(runner: SparkRunner, op: SelectColumnOp) -> ColumnPlan:
         name=op.column_name,
         aligned_with=op.dataset.uuid,
         dense=ds.dense,
-        # JSON-ish selects (incl. conversations) export via to_json and are
-        # serialized to JSON text before entering LLM providers.
-        is_json=isinstance(op, JSONColumnType),
     )
 
 
@@ -1452,7 +1006,7 @@ def take_rows(runner: SparkRunner, op: TakeRowsOp) -> DatasetPlan:
     if not ds.dense:
         out = out.drop("__rank")
     dense = ds.dense and op.skip == 1 and op.offset == 0
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=dense)
+    return DatasetPlan(df=out, dense=dense)
 
 
 @SparkRunner.implementation
@@ -1474,7 +1028,7 @@ def mask_rows(runner: SparkRunner, op: MaskRowsOp) -> DatasetPlan:
     )
     df, (row, keep) = runner.align_columns(rows, mask)
     out = df.filter(keep).select(row.alias("__rows")).select("__rows.*")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
+    return DatasetPlan(df=out, dense=False)
 
 
 # ====================================================================== #
@@ -1501,13 +1055,7 @@ def category_to_boolean(runner: SparkRunner, op: CategoryToBooleanOp) -> ColumnP
         out = expr.isin(sorted(op.true_values))
     else:
         out = ~expr.isin(sorted(op.false_values))
-    return ColumnPlan(
-        source=col.source,
-        expr=out,
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-    )
+    return col.derive(out)
 
 
 def _require_boolean(plan: ColumnPlan) -> None:
@@ -1521,24 +1069,12 @@ def boolean_logic(runner: SparkRunner, op: BooleanLogicOp) -> ColumnPlan:
     left = runner.column_plan(op.left)
     _require_boolean(left)
     if op.operation == "not":
-        return ColumnPlan(
-            source=left.source,
-            expr=~left.expr,
-            name=VALUE,
-            aligned_with=left.aligned_with,
-            dense=left.dense,
-        )
+        return left.derive(~left.expr)
     right = runner.column_plan(op.right)
     _require_boolean(right)
     df, (l, r) = runner.align_columns(left, right)
     combined = {"and": l & r, "or": l | r, "xor": l != r}[op.operation]
-    return ColumnPlan(
-        source=df,
-        expr=combined,
-        name=VALUE,
-        aligned_with=left.aligned_with,
-        dense=left.dense,
-    )
+    return left.derive(combined, source=df)
 
 
 @SparkRunner.implementation
@@ -1561,13 +1097,7 @@ def pairwise_arithmetic(runner: SparkRunner, op: PairwiseArithmeticOp) -> Column
             .when(l < 0.0, F.lit(float("-inf")))
             .otherwise(F.lit(float("nan")))
         )
-    return ColumnPlan(
-        source=df,
-        expr=expr,
-        name=VALUE,
-        aligned_with=left.aligned_with,
-        dense=left.dense,
-    )
+    return left.derive(expr, source=df)
 
 
 @SparkRunner.implementation
@@ -1587,42 +1117,24 @@ def vector_to_scalar(runner: SparkRunner, op: VectorToScalarOp) -> ColumnPlan:
             )
         ).cast("double"),
     ).otherwise(F.element_at(col.expr, idx + 1).cast("double"))
-    return ColumnPlan(
-        source=col.source,
-        expr=guarded,
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-    )
+    return col.derive(guarded)
 
 
 @SparkRunner.implementation
 def parse_json_column(runner: SparkRunner, op: ParseJSONColumnOp) -> ColumnPlan:
     col = runner.column_plan(op.input)
-    return ColumnPlan(
-        source=col.source,
-        expr=F.parse_json(col.expr),  # strict: invalid JSON errors (parity)
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-        is_json=True,
-    )
+    return col.derive(F.parse_json(col.expr))  # strict: invalid JSON errors (parity)
 
 
 @SparkRunner.implementation
 def json_get_field(runner: SparkRunner, op: JSONGetFieldOp) -> ColumnPlan:
     col = runner.column_plan(op.input)
-    if col.is_json:
+    dtype = col.dtype
+    if isinstance(dtype, T.VariantType):
         expr = F.try_variant_get(col.expr, f"$.{op.path}", "string")
     else:
-        expr = F.get_json_object(col.expr.cast("string"), f"$.{op.path}")
-    return ColumnPlan(
-        source=col.source,
-        expr=expr,
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-    )
+        expr = F.get_json_object(json_text(col.expr, dtype), f"$.{op.path}")
+    return col.derive(expr)
 
 
 @SparkRunner.implementation
@@ -1639,7 +1151,7 @@ def jinja_templatize(runner: SparkRunner, op: JinjaTemplatizeOp) -> ColumnPlan:
     json_vars = {k for k, v in op.context.items() if isinstance(v, JSONColumnType)}
     df, cols = runner.align_columns(*plans)
     exprs = [
-        F.to_json(c) if k in json_vars and p.is_json else c
+        json_text(c, p.dtype) if k in json_vars else c
         for k, p, c in zip(names, plans, cols)
     ]
 
@@ -1654,7 +1166,6 @@ def jinja_templatize(runner: SparkRunner, op: JinjaTemplatizeOp) -> ColumnPlan:
     template_src = op.template
     constants = dict(op.constants)
     max_length = op.max_length
-    json_var_names = set(json_vars)
 
     @F.pandas_udf(T.StringType())
     def render(*cols: pd.Series) -> pd.Series:
@@ -1668,20 +1179,14 @@ def jinja_templatize(runner: SparkRunner, op: JinjaTemplatizeOp) -> ColumnPlan:
         for row in zip(*cols):
             ctx = dict(constants)
             for k, v in zip(names, row):
-                ctx[k] = _json.loads(v) if k in json_var_names and v is not None else v
+                ctx[k] = _json.loads(v) if k in json_vars and v is not None else v
             text = tmpl.render(**ctx)
             if max_length is not None:
                 text = text[:max_length]
             out.append(text)
         return pd.Series(out, dtype="object")
 
-    return ColumnPlan(
-        source=df,
-        expr=render(*exprs),
-        name=VALUE,
-        aligned_with=plans[0].aligned_with,
-        dense=plans[0].dense,
-    )
+    return plans[0].derive(render(*exprs), source=df)
 
 
 # ====================================================================== #
@@ -1813,122 +1318,6 @@ def _resolve_split_counts(op: AssignTrainTestSplitOp, total: int) -> tuple[int, 
     return n_train, n_test
 
 
-@SparkRunner.implementation
-def skyline_select_op(runner: SparkRunner, op: SkylineSelectOp) -> DatasetPlan:
-    """Pareto-frontier selection as a memoized op: survivors keep their
-    ORIGINAL row ids (mask semantics, dense=False). The frontier is a
-    partition-invariant row SET (sampling.py:skyline_select), so the
-    content-addressed result reproduces on any layout or retry."""
-    from ..functions.sampling import skyline_select as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, dict(op.criteria), chunk=op.chunk)
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=False)
-
-
-@SparkRunner.implementation
-def calibration_bins_op(
-    runner: SparkRunner, op: CalibrationBinsOp
-) -> DatasetPlan:
-    """Reliability-curve aggregate: a bounded ``bins``-row table, fresh
-    dense row ids in bin order (the bounded-aggregate contract)."""
-    from ..functions.metrics import calibration_bins as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    out = _impl(ds.df, op.score_column, op.label_column, bins=op.bins)
-    return DatasetPlan(df=_fresh_ids(out, "bin"), dataset_uuid=op.uuid, dense=True)
-
-
-@SparkRunner.implementation
-def pmi_collocations_op(
-    runner: SparkRunner, op: PmiCollocationsOp
-) -> DatasetPlan:
-    """PMI collocation mining: a bounded top-k table, fresh dense row
-    ids in the deterministic (pmi desc, w1, w2) rank order.
-
-    The result is top_k rows by construction, so the op path pins it
-    eagerly (executor-side, no driver round-trip) inside a
-    ``pin_scope`` that releases the two vocab-sized count tables on
-    exit, on the error path too — repeated PmiCollocationsOp runs over
-    different corpora in one long-lived session do not accumulate
-    cached tables."""
-    from ..functions.text import pmi_collocations as _impl
-
-    ds = runner.dataset_plan(op.dataset)
-    with pin_scope() as scope:
-        scored = _impl(
-            ds.df, op.text_column, min_count=op.min_count, top_k=op.top_k
-        )
-        scored = scope.keep(pin(scored, eager=True))
-    out = _fresh_ids(scored, F.col("pmi").desc(), "w1", "w2")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=True)
-
-
-@SparkRunner.implementation
-def kneser_ney_score_op(
-    runner: SparkRunner, op: KneserNeyScoreOp
-) -> DatasetPlan:
-    """Two-parent Kneser-Ney enrichment: this dataset scored against the
-    train parent's count tables; n_tokens/n_oov/logprob_sum left-joined
-    back on the row id (blank docs null). Both parents content-address
-    the result.
-
-    The op path eagerly pins the NARROW scores frame (4 columns per
-    doc) inside a ``pin_scope`` that releases the trainer's vocab²-sized
-    count tables on exit, on the error path too — repeated LM ops over
-    different corpora in one session must not accumulate cached
-    tables."""
-    from ..functions.text import kneser_ney_score as _score
-    from ..functions.text import kneser_ney_train as _train
-
-    ds = runner.dataset_plan(op.dataset)
-    train = runner.dataset_plan(op.train)
-    with pin_scope() as scope:
-        lm = _train(
-            train.df.select(
-                ROW_ID, F.col(op.train_column).alias(op.text_column)
-            ),
-            op.text_column,
-        )
-        scores = _score(
-            lm, ds.df.select(ROW_ID, op.text_column),
-            op.text_column, ROW_ID, discount=op.discount,
-        )
-        scores = scope.keep(pin(scores, eager=True))
-    out = ds.df.join(scores, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
-
-@SparkRunner.implementation
-def kneser_ney3_score_op(
-    runner: SparkRunner, op: KneserNey3ScoreOp
-) -> DatasetPlan:
-    """Trigram twin of kneser_ney_score_op: same two-parent enrichment
-    contract, order-3 count tables with optional hapax pruning; same
-    pin-then-release scope."""
-    from ..functions.text import kneser_ney3_score as _score
-    from ..functions.text import kneser_ney3_train as _train
-
-    ds = runner.dataset_plan(op.dataset)
-    train = runner.dataset_plan(op.train)
-    with pin_scope() as scope:
-        lm = _train(
-            train.df.select(
-                ROW_ID, F.col(op.train_column).alias(op.text_column)
-            ),
-            op.text_column,
-            min_count=op.min_count,
-        )
-        scores = _score(
-            lm, ds.df.select(ROW_ID, op.text_column),
-            op.text_column, ROW_ID,
-            discount="modified" if op.smoothing == "modified" else op.discount,
-            base_discount=op.discount,
-        )
-        scores = scope.keep(pin(scores, eager=True))
-    out = ds.df.join(scores, ROW_ID, "left")
-    return DatasetPlan(df=out, dataset_uuid=op.uuid, dense=ds.dense)
-
 
 @SparkRunner.implementation
 def grouped(runner: SparkRunner, op: GroupedOp):
@@ -1938,7 +1327,9 @@ def grouped(runner: SparkRunner, op: GroupedOp):
     return plan
 
 
-# Register the ML / LLM / viz implementation modules (import side effects).
+# Register the ML / LLM / viz / scale implementation modules (import side
+# effects).
 from . import classifier_impl as _classifier_impl  # noqa: E402,F401
 from . import llm_impl as _llm_impl  # noqa: E402,F401
+from . import scale_impl as _scale_impl  # noqa: E402,F401
 from . import viz_impl as _viz_impl  # noqa: E402,F401

@@ -113,13 +113,7 @@ def umap_vis(runner: SparkRunner, op: UMAPVizOp) -> ColumnPlan:
             {ROW_ID: pdf[ROW_ID].values, VALUE: [list(map(float, c)) for c in coords]}
         )
         out = runner.spark.createDataFrame(out_pdf)
-        return ColumnPlan(
-            source=out,
-            expr=F.col(VALUE),
-            name=VALUE,
-            aligned_with=col.aligned_with,
-            dense=col.dense,
-        )
+        return col.derive(F.col(VALUE), source=out)
 
     # Distributed PCA: stats pass + broadcast projection; vectors stay put.
     # Pinned: the stats collect and the projection job would otherwise
@@ -140,10 +134,4 @@ def umap_vis(runner: SparkRunner, op: UMAPVizOp) -> ColumnPlan:
         return pd.Series([row.tolist() for row in Y])
 
     out = src.select(F.col(ROW_ID), project(F.col(col.name)).alias(VALUE))
-    return ColumnPlan(
-        source=out,
-        expr=F.col(VALUE),
-        name=VALUE,
-        aligned_with=col.aligned_with,
-        dense=col.dense,
-    )
+    return col.derive(F.col(VALUE), source=out)

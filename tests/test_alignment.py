@@ -37,8 +37,8 @@ def _fresh(runner) -> SparkRunner:
 
 def _facts(plan):
     if isinstance(plan, ColumnPlan):
-        return plan.aligned_with, plan.dense, plan.is_json
-    return plan.dataset_uuid, plan.dense
+        return plan.aligned_with, plan.dense
+    return plan.dense
 
 
 def _run(runner, op):
@@ -82,7 +82,7 @@ _CASES = {
 
 @pytest.mark.parametrize("case", sorted(_CASES))
 def test_hit_plans_like_the_compute(text_ds, case):
-    """Every node keeps the row domain, density and JSON-ness of a plain
+    """Every node keeps the row domain and density of a plain
     store-less compute, and a hit from a fresh runner exports the same
     values with the same Spark jobs as the runner that computed it."""
     runner, ds = text_ds

@@ -431,3 +431,155 @@ def test_kneser_ney_two_parent_rehydrates(runner):
     assert rebuilt.uuid == op.uuid
     # both parents content-address the result
     assert op.uuid != ds.take(200).kneser_ney_score(ds.take(150), "text").uuid
+
+
+EMB = DOCS.replace("documents.parquet", "embeddings.parquet")
+
+
+def _docs(r):
+    return r.from_parquet(DOCS).take(60)
+
+
+def _calibration(r):
+    scores = [round((i * 37 % 100) / 100, 2) for i in range(40)]
+    data = {"score": scores, "label": [int(s > 0.4) for s in scores]}
+    return r.from_inline_dataset(data).calibration_bins("score", "label", bins=5)
+
+
+def _ann(r):
+    emb = r.from_parquet(EMB).take(20)
+    return emb.ann_topk(emb.take(3), "embedding", "vec_id", k=2)
+
+
+# Every scale op, by the row shape of its result (see runners/scale_impl.py).
+_SCALE_OPS = {
+    "drop_exact_dups": ("subset", lambda r: _docs(r).drop_exact_dups("text")),
+    "drop_near_dups": (
+        "subset", lambda r: _docs(r).drop_near_dups("text", num_perm=16, bands=4)
+    ),
+    "hash_sample": ("subset", lambda r: _docs(r).hash_sample(0.5, seed=1)),
+    "decontaminate_against": (
+        "subset",
+        lambda r: _docs(r).decontaminate_against(
+            r.from_parquet(DOCS).take(10), "text", ngram=8
+        ),
+    ),
+    "stratified_sample": (
+        "subset", lambda r: _docs(r).stratified_sample("lang", {"en": 0.5, "fr": 1.0})
+    ),
+    "mix_to_weights": (
+        "subset", lambda r: _docs(r).mix_to_weights("lang", {"en": 2, "fr": 1})
+    ),
+    "group_cap": ("subset", lambda r: _docs(r).group_cap("lang", 5, "doc_id")),
+    "paragraph_dedup": ("subset", lambda r: _docs(r).paragraph_dedup("text")),
+    "skyline_select": ("subset", lambda r: _docs(r).skyline_select({"n_chars": "max"})),
+    "text_stats": ("enrichment", lambda r: _docs(r).text_stats("text")),
+    "pii_scrub": ("enrichment", lambda r: _docs(r).pii_scrub("text")),
+    "sequence_pack": (
+        "enrichment",
+        lambda r: _docs(r).text_stats("text").sequence_pack(
+            "__row_id", "n_tok", budget=256
+        ),
+    ),
+    "cdc_dedup": ("enrichment", lambda r: _docs(r).cdc_dedup("text")),
+    "span_corruption": ("enrichment", lambda r: _docs(r).span_corruption("text")),
+    "dedup_weights": (
+        "enrichment", lambda r: _docs(r).dedup_weights("text", num_perm=16, bands=4)
+    ),
+    "gopher_rules": ("enrichment", lambda r: _docs(r).gopher_rules("text")),
+    "c4_rules": ("enrichment", lambda r: _docs(r).c4_rules("text")),
+    "token_entropy": ("enrichment", lambda r: _docs(r).token_entropy("text")),
+    "dsir_weights": (
+        "enrichment",
+        lambda r: _docs(r).dsir_weights(r.from_parquet(DOCS).take(20), "text", buckets=4096),
+    ),
+    "compression_signals": ("enrichment", lambda r: _docs(r).compression_signals("text")),
+    "ngram_coverage": (
+        "enrichment",
+        lambda r: _docs(r).ngram_coverage(r.from_parquet(DOCS).take(20), "text"),
+    ),
+    "kneser_ney_score": (
+        "enrichment",
+        lambda r: _docs(r).kneser_ney_score(r.from_parquet(DOCS).take(20), "text"),
+    ),
+    "kneser_ney3_score": (
+        "enrichment",
+        lambda r: _docs(r).kneser_ney3_score(r.from_parquet(DOCS).take(20), "text"),
+    ),
+    "ann_topk": ("fresh", _ann),
+    "winnow_pairs": ("fresh", lambda r: _docs(r).winnow_pairs("text", min_shared=1)),
+    "calibration_bins": ("fresh", _calibration),
+    "pmi_collocations": (
+        "fresh", lambda r: _docs(r).pmi_collocations("text", min_count=2, top_k=20)
+    ),
+    "chunk_docs": ("fan-out", lambda r: _docs(r).chunk_docs("text", chunk_size=16, overlap=4)),
+}
+
+# One op per shape also checks that a store hit plans like its compute.
+_STORE_CHECKED = {"text_stats", "drop_exact_dups", "calibration_bins"}
+
+
+@pytest.fixture(scope="module")
+def module_runner(spark):
+    from krnel_graph_spark import SparkRunner
+
+    return SparkRunner(spark=spark)
+
+
+def test_every_scale_op_is_in_the_row_contract(module_runner):
+    from krnel_graph_spark.operators import scale_ops
+    from krnel_graph_spark.types import DatasetType
+
+    covered = {type(build(module_runner)) for _, build in _SCALE_OPS.values()}
+    defined = {
+        cls for cls in vars(scale_ops).values()
+        if isinstance(cls, type) and issubclass(cls, DatasetType)
+        and cls.__module__ == scale_ops.__name__
+    }
+    assert covered == defined
+
+
+def _row_ids(runner, op) -> list:
+    df = runner.dataframe(op, keep_row_id=True).select("__row_id")
+    return sorted(row[0] for row in df.collect())
+
+
+@pytest.mark.parametrize("name", sorted(_SCALE_OPS))
+def test_scale_op_row_contract(module_runner, spark, tmp_path, name):
+    """Each scale op's plan tells the truth about its rows:
+
+    * a slice by row position equals the same slice of the full export
+      (a wrong ``dense`` claim picks the wrong rows);
+    * an enrichment keeps every input row id and the input's density, a
+      subset keeps original ids and is not dense, and a fresh-id table
+      has ids exactly 0..n-1;
+    * for one op of each shape, a store hit from a fresh runner plans
+      the same facts as the compute that wrote it, and exports the same.
+    """
+    from krnel_graph_spark import SparkRunner
+
+    shape, build = _SCALE_OPS[name]
+    r = module_runner
+    op = build(r)
+    full = r.dataframe(op, keep_row_id=True).orderBy("__row_id").toPandas()
+    ids = full.pop("__row_id").tolist()
+    sliced = r.to_pandas(op.take(3, offset=1))
+    pd.testing.assert_frame_equal(sliced, full.iloc[1:4].reset_index(drop=True))
+
+    dense = r.dataset_plan(op).dense
+    if shape == "enrichment":
+        assert ids == _row_ids(r, op.dataset)
+        assert dense == r.dataset_plan(op.dataset).dense
+    elif shape == "subset":
+        assert set(ids) <= set(_row_ids(r, op.dataset)) and not dense
+    elif shape == "fresh":
+        assert ids == list(range(len(full))) and dense
+
+    if name in _STORE_CHECKED:
+        store = str(tmp_path / "store")
+        writer = SparkRunner(spark=spark, store_path=store)
+        computed = writer.dataset_plan(op)
+        hit = SparkRunner(spark=spark, store_path=store)
+        assert hit.store.is_done(op.uuid)
+        assert hit.dataset_plan(op).dense == computed.dense == dense
+        pd.testing.assert_frame_equal(hit.to_pandas(op), full)

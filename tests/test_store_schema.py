@@ -273,7 +273,7 @@ def test_entry_without_plan_facts_still_loads(spark, tmp_path):
 
     fresh = SparkRunner(spark=spark, store_path=store)
     plan = fresh.column_plan(tmpl)
-    assert (plan.aligned_with, plan.dense, plan.is_json) == (tmpl.uuid, False, False)
+    assert (plan.aligned_with, plan.dense) == (tmpl.uuid, False)
     assert fresh.to_pandas(masked)["n"].tolist() == ["n1", "n7"]
 
 
