@@ -627,8 +627,7 @@ def arpa_load(spark, path: str) -> DataFrame:
 # holds the full model vocabulary in memory in every scoring process,
 # so a model small enough to serve with KenLM is small enough to
 # broadcast; the gate only guards the degenerate huge-vocab case.
-_UNK_VOCAB_BROADCAST_MAX_ENV = "SPARK_GRAFT_UNK_VOCAB_BROADCAST_MAX"
-_UNK_VOCAB_BROADCAST_MAX_DEFAULT = 4_000_000
+_UNK_VOCAB_BROADCAST_MAX = 4_000_000
 
 
 def _rewrite_oov(rows: DataFrame, toks: DataFrame, id_col: str) -> DataFrame:
@@ -649,18 +648,12 @@ def _rewrite_oov(rows: DataFrame, toks: DataFrame, id_col: str) -> DataFrame:
     the oracle's replay (the old path compared md5 digests — equal
     modulo md5 collisions).
 
-    A vocabulary above ``$SPARK_GRAFT_UNK_VOCAB_BROADCAST_MAX``
-    (default 4M words — beyond KenLM's own serving envelope) falls
+    A vocabulary above ``_UNK_VOCAB_BROADCAST_MAX``
+    (4M words — beyond KenLM's own serving envelope) falls
     back to the join+reassembly path, so the operator never collects
     an unbounded side."""
-    import os
-
     vocab_rows = rows.filter(F.col("order") == 1).select("w1")
-    max_bc = int(
-        os.environ.get(
-            _UNK_VOCAB_BROADCAST_MAX_ENV, _UNK_VOCAB_BROADCAST_MAX_DEFAULT
-        )
-    )
+    max_bc = _UNK_VOCAB_BROADCAST_MAX
     # ONE bounded collect decides the gate AND supplies the vocabulary
     # (r15, verdict note: the count()+collect() pair was two driver jobs
     # where one suffices): limit(max_bc + 1) caps what the driver ever

@@ -11,6 +11,7 @@ from .dataset_ops import (
     JinjaTemplatizeOp,
     JSONGetFieldOp,
     LoadDatasetOp,
+    LoadFileDatasetOp,
     LoadInlineJsonDatasetOp,
     LoadParquetDatasetOp,
     MaskRowsOp,

@@ -38,12 +38,18 @@ class LoadDatasetOp(DatasetType):
     content_hash: str
 
 
-class LoadParquetDatasetOp(LoadDatasetOp):
-    """Read a Parquet file/directory (any Spark-readable URL). Identity is the
-    file content sha256, not the path, so moving a file does not invalidate
-    caches. Parity: reference ``dataset_ops.py:65-71``."""
+class LoadFileDatasetOp(LoadDatasetOp):
+    """Base: a dataset read from a file or directory (any Spark-readable
+    URL). Identity is the file content, not the path, so moving a file does
+    not invalidate caches; the subclasses add their reader's parameters,
+    which are part of identity."""
 
     file_path: Annotated[str, ExcludeFromUUID()]
+
+
+class LoadParquetDatasetOp(LoadFileDatasetOp):
+    """Read a Parquet file/directory. Parity: reference
+    ``dataset_ops.py:65-71``."""
 
 
 class LoadInlineJsonDatasetOp(LoadDatasetOp):
@@ -53,7 +59,7 @@ class LoadInlineJsonDatasetOp(LoadDatasetOp):
     data: dict[str, list]
 
 
-class LoadCSVDatasetOp(LoadDatasetOp):
+class LoadCSVDatasetOp(LoadFileDatasetOp):
     """Read a CSV file/directory (beyond-reference source; the reference
     supports only parquet + inline — ``base_runner.py:122-157``).
 
@@ -62,46 +68,40 @@ class LoadCSVDatasetOp(LoadDatasetOp):
     production callers pass the schema; identity still includes it so the
     same file with different schemas caches separately."""
 
-    file_path: Annotated[str, ExcludeFromUUID()]
     schema_ddl: Optional[str] = None
     header: bool = True
     delimiter: str = ","
 
 
-class LoadJSONLinesDatasetOp(LoadDatasetOp):
+class LoadJSONLinesDatasetOp(LoadFileDatasetOp):
     """Read newline-delimited JSON (beyond-reference source).
     ``schema_ddl`` skips inference, as with CSV."""
 
-    file_path: Annotated[str, ExcludeFromUUID()]
     schema_ddl: Optional[str] = None
 
 
-class LoadORCDatasetOp(LoadDatasetOp):
+class LoadORCDatasetOp(LoadFileDatasetOp):
     """Read an ORC file/directory (beyond-reference source). ORC is
     self-describing like parquet — no schema/inference knobs needed; the
     content hash keys identity exactly as for parquet sources."""
 
-    file_path: Annotated[str, ExcludeFromUUID()]
 
-
-class LoadAvroDatasetOp(LoadDatasetOp):
+class LoadAvroDatasetOp(LoadFileDatasetOp):
     """Read an Avro object-container file/directory (beyond-reference
     source). Decodes via the spark-avro jar when on the classpath, else
     the pure-Python container codec in ``sources/avro.py`` (same API).
     ``schema_ddl`` overrides schema discovery from the file header."""
 
-    file_path: Annotated[str, ExcludeFromUUID()]
     schema_ddl: Optional[str] = None
 
 
-class LoadTextLinesDatasetOp(LoadDatasetOp):
+class LoadTextLinesDatasetOp(LoadFileDatasetOp):
     """Read raw line-oriented text: one row per line, a single string
     column (beyond-reference source — the rawest corpus-ingestion format,
     one document per line). ``column`` names the output column; it is part
     of identity (the same file projected under two names is two logical
     datasets)."""
 
-    file_path: Annotated[str, ExcludeFromUUID()]
     column: str = "text"
 
 

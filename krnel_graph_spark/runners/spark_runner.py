@@ -11,9 +11,10 @@ Execution model (Spark-first redesign of the reference's pull-based runner,
   written once to a UUID-keyed parquet store and re-read lazily; any process
   sharing the store reuses results (content-addressed memoization — the one
   optimizer feature Catalyst does not provide).
-* **Stable row ids everywhere** (see ``plan.py``): assigned at scan from
-  parquet ``_metadata.row_index``, carried through every op, used for
-  alignment and canonical export order.
+* **Stable row ids everywhere** (see ``plan.py``): assigned at scan by
+  ``_scan_row_ids`` (parquet ``_metadata.row_index``, a monotonic id for
+  the other file formats), carried through every op, used for alignment
+  and canonical export order.
 """
 
 from __future__ import annotations
@@ -40,13 +41,15 @@ from ..operators.dataset_ops import (
     CategoryToBooleanOp,
     JinjaTemplatizeOp,
     JSONGetFieldOp,
+    LoadAvroDatasetOp,
     LoadCSVDatasetOp,
+    LoadDatasetOp,
+    LoadFileDatasetOp,
     LoadInlineJsonDatasetOp,
     LoadJSONLinesDatasetOp,
-    LoadAvroDatasetOp,
     LoadORCDatasetOp,
-    LoadTextLinesDatasetOp,
     LoadParquetDatasetOp,
+    LoadTextLinesDatasetOp,
     MaskRowsOp,
     PairwiseArithmeticOp,
     ParseJSONColumnOp,
@@ -79,16 +82,12 @@ from .store import ResultStore
 _FILE_ORD_SHIFT = 40  # multi-file scans: row_id = file_ordinal << 40 | row_index
 
 
-def get_spark(
-    app_name: str = "krnel-graph-spark",
-    shuffle_partitions: Optional[int] = None,
-) -> SparkSession:
+def get_spark(app_name: str = "krnel-graph-spark") -> SparkSession:
     """Build (or reuse) a session with the engine's defaults: AQE on, UTC
     timestamps, Arrow transfer on, zstd parquet output. The master is the
     one Spark resolved (``SPARK_GRAFT_CPUS`` only sizes a local master);
     the master-dependent defaults follow its class, and no default
-    replaces a value the user gave Spark. ``shuffle_partitions`` always
-    applies."""
+    replaces a value the user gave Spark."""
     # Start the JVM first, so the master and the user's conf can be read
     # before any default is chosen. local[N] runs all executor threads
     # inside the driver JVM; the 1g default heap GC-thrashes 32 concurrent
@@ -149,10 +148,7 @@ def get_spark(
         # Tied to the session's cores, floored at the former constant 32.
         # 2 x cores was measured and rejected in r15: +20% arpa_score_o5 at
         # local[32]/sf0.1, no win beyond noise (OPTIMIZATION_r15.md).
-        shuffle_partitions = shuffle_partitions or max(
-            32, spark.sparkContext.defaultParallelism
-        )
-    if shuffle_partitions:
+        shuffle_partitions = max(32, spark.sparkContext.defaultParallelism)
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
 
@@ -191,12 +187,11 @@ class SparkRunner(BaseRunner):
 
     def from_parquet(self, file_path: str) -> LoadParquetDatasetOp:
         """Dataset identified by file content (sha256), not by path — parity
-        with reference ``local_arrow_runner.py:154-198``. For directories /
-        remote URLs, identity falls back to a manifest hash of
-        (relative path, size) pairs, which a 100-TB scan can afford."""
-        return LoadParquetDatasetOp(
-            file_path=file_path, content_hash=_content_identity(file_path)
-        )
+        with reference ``local_arrow_runner.py:154-198``. A directory's
+        identity is a manifest hash of its (relative path, size) pairs,
+        which a 100-TB scan can afford; a remote URL's identity is the URL
+        string itself. Every ``from_*`` file source follows this rule."""
+        return _file_source(LoadParquetDatasetOp, file_path)
 
     def from_inline_dataset(self, data: dict[str, list]) -> LoadInlineJsonDatasetOp:
         return LoadInlineJsonDatasetOp(
@@ -209,12 +204,10 @@ class SparkRunner(BaseRunner):
         schema: Optional[str] = None,
         header: bool = True,
         delimiter: str = ",",
-    ) -> "LoadCSVDatasetOp":
-        from ..operators.dataset_ops import LoadCSVDatasetOp
-
-        return LoadCSVDatasetOp(
-            file_path=file_path,
-            content_hash=_content_identity(file_path),
+    ) -> LoadCSVDatasetOp:
+        return _file_source(
+            LoadCSVDatasetOp,
+            file_path,
             schema_ddl=schema,
             header=header,
             delimiter=delimiter,
@@ -222,43 +215,21 @@ class SparkRunner(BaseRunner):
 
     def from_json_lines(
         self, file_path: str, schema: Optional[str] = None
-    ) -> "LoadJSONLinesDatasetOp":
-        from ..operators.dataset_ops import LoadJSONLinesDatasetOp
+    ) -> LoadJSONLinesDatasetOp:
+        return _file_source(LoadJSONLinesDatasetOp, file_path, schema_ddl=schema)
 
-        return LoadJSONLinesDatasetOp(
-            file_path=file_path,
-            content_hash=_content_identity(file_path),
-            schema_ddl=schema,
-        )
-
-    def from_orc(self, file_path: str) -> "LoadORCDatasetOp":
-        from ..operators.dataset_ops import LoadORCDatasetOp
-
-        return LoadORCDatasetOp(
-            file_path=file_path, content_hash=_content_identity(file_path)
-        )
+    def from_orc(self, file_path: str) -> LoadORCDatasetOp:
+        return _file_source(LoadORCDatasetOp, file_path)
 
     def from_avro(
         self, file_path: str, schema: Optional[str] = None
-    ) -> "LoadAvroDatasetOp":
-        from ..operators.dataset_ops import LoadAvroDatasetOp
-
-        return LoadAvroDatasetOp(
-            file_path=file_path,
-            content_hash=_content_identity(file_path),
-            schema_ddl=schema,
-        )
+    ) -> LoadAvroDatasetOp:
+        return _file_source(LoadAvroDatasetOp, file_path, schema_ddl=schema)
 
     def from_text(
         self, file_path: str, column: str = "text"
-    ) -> "LoadTextLinesDatasetOp":
-        from ..operators.dataset_ops import LoadTextLinesDatasetOp
-
-        return LoadTextLinesDatasetOp(
-            file_path=file_path,
-            content_hash=_content_identity(file_path),
-            column=column,
-        )
+    ) -> LoadTextLinesDatasetOp:
+        return _file_source(LoadTextLinesDatasetOp, file_path, column=column)
 
     # ------------------------------------------------------------------ #
     # User-directed sinks (beyond-reference: the reference can only write  #
@@ -272,8 +243,8 @@ class SparkRunner(BaseRunner):
         ``sort_by_row_id`` forces deterministic file order at the cost of a
         global sort — leave off for large outputs (row ids still ride along
         in the data for downstream alignment)."""
-        with _translate_runtime_errors():
-            self._sink_df(op, sort_by_row_id).write.mode("overwrite").parquet(path)
+        with self._sink(op, sort_by_row_id) as df:
+            df.write.mode("overwrite").parquet(path)
 
     def write_csv(
         self,
@@ -282,16 +253,15 @@ class SparkRunner(BaseRunner):
         sort_by_row_id: bool = False,
         header: bool = True,
     ) -> None:
-        df = self._sink_df(op, sort_by_row_id)
-        # CSV has no nested types: arrays/structs/maps/variants export as
-        # JSON text. (error translation below)
-        cols = [
-            json_text(F.col(f.name), f.dataType).alias(f.name)
-            if isinstance(f.dataType, JSON_VALUE_TYPES)
-            else F.col(f.name)
-            for f in df.schema.fields
-        ]
-        with _translate_runtime_errors():
+        with self._sink(op, sort_by_row_id) as df:
+            # CSV has no nested types: arrays/structs/maps/variants export
+            # as JSON text.
+            cols = [
+                json_text(F.col(f.name), f.dataType).alias(f.name)
+                if isinstance(f.dataType, JSON_VALUE_TYPES)
+                else F.col(f.name)
+                for f in df.schema.fields
+            ]
             df.select(*cols).write.mode("overwrite").option("header", header).csv(
                 path
             )
@@ -299,14 +269,14 @@ class SparkRunner(BaseRunner):
     def write_json_lines(
         self, op: OpSpec, path: str, sort_by_row_id: bool = False
     ) -> None:
-        with _translate_runtime_errors():
-            self._sink_df(op, sort_by_row_id).write.mode("overwrite").json(path)
+        with self._sink(op, sort_by_row_id) as df:
+            df.write.mode("overwrite").json(path)
 
     def write_orc(
         self, op: OpSpec, path: str, sort_by_row_id: bool = False
     ) -> None:
-        with _translate_runtime_errors():
-            self._sink_df(op, sort_by_row_id).write.mode("overwrite").orc(path)
+        with self._sink(op, sort_by_row_id) as df:
+            df.write.mode("overwrite").orc(path)
 
     def write_avro(
         self, op: OpSpec, path: str, sort_by_row_id: bool = False,
@@ -317,8 +287,8 @@ class SparkRunner(BaseRunner):
         Arrow batch) — see ``sources/avro.py``."""
         from ..sources.avro import write_avro_dataframe
 
-        with _translate_runtime_errors():
-            write_avro_dataframe(self._sink_df(op, sort_by_row_id), path, codec)
+        with self._sink(op, sort_by_row_id) as df:
+            write_avro_dataframe(df, path, codec)
 
     def write_text(
         self,
@@ -331,8 +301,7 @@ class SparkRunner(BaseRunner):
         files carry no other columns, so row ids cannot ride along — a
         round-trip re-reads with fresh positional ids; use parquet when
         alignment must survive the trip."""
-        df = self._sink_df(op, sort_by_row_id)
-        with _translate_runtime_errors():
+        with self._sink(op, sort_by_row_id) as df:
             df.select(F.col(column).cast("string").alias("value")).write.mode(
                 "overwrite"
             ).text(path)
@@ -355,20 +324,17 @@ class SparkRunner(BaseRunner):
         (``saveAsTable``), not a bare path."""
         from ..functions.partitioning import write_bucketed
 
-        with _translate_runtime_errors():
-            write_bucketed(
-                self.dataframe(op, keep_row_id=True),
-                table,
-                bucket_cols,
-                num_buckets,
-                sort_cols=sort_cols,
-            )
+        with self._sink(op, sort_by_row_id=False) as df:
+            write_bucketed(df, table, bucket_cols, num_buckets, sort_cols=sort_cols)
 
-    def _sink_df(self, op: OpSpec, sort_by_row_id: bool) -> DataFrame:
-        df = self.dataframe(op, keep_row_id=True)
-        if sort_by_row_id:
-            df = df.orderBy(ROW_ID)
-        return df
+    @contextlib.contextmanager
+    def _sink(self, op: OpSpec, sort_by_row_id: bool):
+        """The one path of the user-directed sinks: the body writes the op's
+        frame, which keeps its row ids (in row-id order when asked), under
+        the exports' error contract."""
+        with _translate_runtime_errors():
+            df = self.dataframe(op, keep_row_id=True)
+            yield df.orderBy(ROW_ID) if sort_by_row_id else df
 
     def sql(self, query: str, **datasets: OpSpec) -> DataFrame:
         """ANSI-SQL entry point over materialized op graphs (additive: the
@@ -390,16 +356,18 @@ class SparkRunner(BaseRunner):
         return self.spark.sql(query, **frames)
 
     def prepare(self, op: OpSpec) -> None:
-        """Push local parquet sources referenced by ``op``'s graph into the
+        """Push the file sources referenced by ``op``'s graph into the
         store, so runners on machines without the source files (remote
         workers sharing the store) can still materialize the graph (parity:
         reference ``local_arrow_runner.py:200-217``). The copy keeps the
-        scan-assigned row ids, so a store-served source is row-identical to
-        the original scan."""
+        scan-assigned row ids. A prepared parquet source is row-identical
+        to any scan of its file; a prepared source of another format
+        serves the row ids of the scan that prepared it (see
+        ``_scan_row_ids``)."""
         if self.store is None:
             raise ValueError("prepare() requires a runner with a store")
         for dep in [op, *op.get_dependencies(recursive=True)]:
-            if not isinstance(dep, LoadParquetDatasetOp):
+            if not isinstance(dep, LoadFileDatasetOp):
                 continue
             if self.store.is_done(dep.uuid):
                 continue
@@ -419,9 +387,6 @@ class SparkRunner(BaseRunner):
         cached = self._plans.get(op.uuid)
         if cached is not None:
             return cached
-
-        from ..operators.dataset_ops import LoadDatasetOp
-
         if isinstance(op, LoadDatasetOp):
             # Sources are their own materialization: never copy the input
             # into the result store (a 100-TB scan must stay a scan).
@@ -531,8 +496,6 @@ class SparkRunner(BaseRunner):
     def has_result(self, op: OpSpec) -> bool:
         """Parity with the reference's recursive ``has_result``
         (``local_arrow_runner.py:230-248``)."""
-        from ..operators.dataset_ops import LoadDatasetOp
-
         if isinstance(op, LoadDatasetOp):
             return True  # sources are their own materialization
         if op.is_ephemeral:
@@ -779,6 +742,12 @@ def _stored_frame(plan: Union[DatasetPlan, ColumnPlan]) -> tuple[DataFrame, dict
     return plan.df, {"dense": plan.dense}
 
 
+def _file_source(cls: type, file_path: str, **params) -> LoadFileDatasetOp:
+    """A file-source op of type ``cls``, identified by the content of
+    ``file_path`` and its reader ``params``."""
+    return cls(file_path=file_path, content_hash=_content_identity(file_path), **params)
+
+
 def _content_identity(file_path: str) -> str:
     if os.path.isfile(file_path):
         h = hashlib.sha256()
@@ -811,79 +780,72 @@ def _inline_identity(data: dict[str, list]) -> str:
 # ====================================================================== #
 
 
-@SparkRunner.implementation
-def load_parquet(runner: SparkRunner, op: LoadParquetDatasetOp) -> DatasetPlan:
-    """Scan with stable row ids from parquet metadata: no shuffle, no window,
-    reproducible across runs (``_metadata.row_index`` is the in-file row
-    position; multi-file scans get ``file_ordinal << 40 | row_index``)."""
-    spark = runner.spark
+def _file_scan(
+    runner: SparkRunner, op: LoadFileDatasetOp, read, *, row_index: bool = False
+) -> DatasetPlan:
+    """The one lowering rule of file sources. A local path that is gone is
+    served from the store copy ``prepare()`` pushed (it carries the row ids
+    of the scan that prepared it), or raises ``FileNotFoundError``.
+    Otherwise ``read(path)`` scans the source and ``_scan_row_ids`` numbers
+    its rows."""
     if not os.path.exists(op.file_path) and "://" not in op.file_path:
-        # Source not on this machine: fall back to a store copy pushed by
-        # prepare() (it already carries the scan-assigned row ids).
         if runner.store is not None and runner.store.is_done(op.uuid):
             return runner._load_from_store(op)
         raise FileNotFoundError(
             f"{op.file_path!r} not found locally and not prepared into the store"
         )
-    df = spark.read.parquet(op.file_path)
-    return _scan_with_row_ids(df)
+    return _scan_row_ids(read(op.file_path), row_index=row_index)
 
 
-def _scan_with_row_ids(df: DataFrame) -> DatasetPlan:
-    """Attach stable scan-time row ids from file metadata (works for every
-    Spark file source: parquet, csv, json). Single file → in-file row index
-    (dense); multi-file → ``file_ordinal << 40 | row_index``.
+def _scan_row_ids(df: DataFrame, *, row_index: bool) -> DatasetPlan:
+    """Attach stable scan-time row ids — the one rule for every file source.
 
-    A file that already carries a ``__row_id`` column (written by
-    ``write_parquet``/``write_csv``/``write_json_lines``) re-adopts those
-    ids, so round-tripping through a user-directed sink preserves row
-    identity."""
+    * A scan that already carries a ``__row_id`` column (written by a
+      ``write_*`` sink) re-adopts those ids, so a round trip through a
+      user-directed sink keeps row identity.
+    * ``row_index`` (parquet, the only file source whose ``_metadata``
+      has a ``row_index`` on Spark 4.1): the in-file row position. One
+      file → dense; several → ``file_ordinal << 40 | row_index``. No
+      shuffle, no window, reproducible across runs.
+    * Every other format: ``monotonically_increasing_id`` — unique and
+      stable for a fixed file set and session conf. A one-partition scan
+      (one small file, the interactive case) gets dense ids 0..n-1 in file
+      order; a split scan gets stable ids that are not in file order
+      (Spark schedules splits largest-first). Convert to parquet
+      (``runner.write_parquet``) when file-ordered positions matter at
+      scale."""
     if ROW_ID in df.columns:
         return DatasetPlan(df=df, dense=False)
+    if not row_index:
+        with_id = df.select(F.monotonically_increasing_id().alias(ROW_ID), *df.columns)
+        return DatasetPlan(df=with_id, dense=with_id.rdd.getNumPartitions() <= 1)
     files = sorted(df.inputFiles())
     if len(files) <= 1:
-        with_id = df.select(
-            F.col("_metadata.row_index").alias(ROW_ID), *df.columns
-        )
-        dense = True
-    else:
-        mapping = F.create_map(
-            *[x for i, f in enumerate(files) for x in (F.lit(f), F.lit(i))]
-        )
-        with_id = df.select(
-            (
-                F.element_at(mapping, F.col("_metadata.file_path")).cast("long")
-                * F.lit(1 << _FILE_ORD_SHIFT)
-                + F.col("_metadata.row_index")
-            ).alias(ROW_ID),
-            *df.columns,
-        )
-        dense = False
-    return DatasetPlan(df=with_id, dense=dense)
+        with_id = df.select(F.col("_metadata.row_index").alias(ROW_ID), *df.columns)
+        return DatasetPlan(df=with_id, dense=True)
+    mapping = F.create_map(
+        *[x for i, f in enumerate(files) for x in (F.lit(f), F.lit(i))]
+    )
+    with_id = df.select(
+        (
+            F.element_at(mapping, F.col("_metadata.file_path")).cast("long")
+            * F.lit(1 << _FILE_ORD_SHIFT)
+            + F.col("_metadata.row_index")
+        ).alias(ROW_ID),
+        *df.columns,
+    )
+    return DatasetPlan(df=with_id, dense=False)
 
 
-def _text_scan_with_row_ids(df: DataFrame) -> DatasetPlan:
-    """Row ids for text sources (csv/json), which expose no per-file row
-    index in ``_metadata``: ``monotonically_increasing_id`` — unique and
-    stable for a fixed file set + session conf. When the scan is a single
-    partition (one small file, the interactive case) the ids are dense
-    0..n-1 in file order; split scans get stable-but-not-file-ordered ids
-    (Spark schedules splits largest-first). Pipelines that need strictly
-    file-ordered positional semantics at scale should convert to parquet
-    first (``runner.write_parquet``) — parquet scans carry exact in-file
-    row indexes."""
-    if ROW_ID in df.columns:  # sink round-trip: re-adopt written ids
-        return DatasetPlan(df=df, dense=False)
-    with_id = df.select(F.monotonically_increasing_id().alias(ROW_ID), *df.columns)
-    dense = with_id.rdd.getNumPartitions() <= 1
-    return DatasetPlan(df=with_id, dense=dense)
+@SparkRunner.implementation
+def load_parquet(runner: SparkRunner, op: LoadParquetDatasetOp) -> DatasetPlan:
+    return _file_scan(runner, op, runner.spark.read.parquet, row_index=True)
 
 
 @SparkRunner.implementation
 def load_csv(runner: SparkRunner, op: LoadCSVDatasetOp) -> DatasetPlan:
-    """CSV scan. An explicit ``schema_ddl`` avoids the inference pre-scan
-    (a full extra read at scale); without one, inference runs once at
-    lowering."""
+    """An explicit ``schema_ddl`` avoids the inference pre-scan (a full
+    extra read at scale); without one, inference runs once at lowering."""
     reader = runner.spark.read.option("header", op.header).option(
         "delimiter", op.delimiter
     )
@@ -891,7 +853,7 @@ def load_csv(runner: SparkRunner, op: LoadCSVDatasetOp) -> DatasetPlan:
         reader = reader.schema(op.schema_ddl)
     else:
         reader = reader.option("inferSchema", "true")
-    return _text_scan_with_row_ids(reader.csv(op.file_path))
+    return _file_scan(runner, op, reader.csv)
 
 
 @SparkRunner.implementation
@@ -899,40 +861,33 @@ def load_json_lines(runner: SparkRunner, op: LoadJSONLinesDatasetOp) -> DatasetP
     reader = runner.spark.read
     if op.schema_ddl:
         reader = reader.schema(op.schema_ddl)
-    return _text_scan_with_row_ids(reader.json(op.file_path))
+    return _file_scan(runner, op, reader.json)
 
 
 @SparkRunner.implementation
 def load_orc(runner: SparkRunner, op: LoadORCDatasetOp) -> DatasetPlan:
-    """ORC scan (columnar, vectorized, predicate-pushdown-capable like
-    parquet). Row ids follow the text-source policy: written ids are
-    re-adopted on round-trips, fresh scans get stable monotonic ids."""
-    return _text_scan_with_row_ids(runner.spark.read.orc(op.file_path))
+    return _file_scan(runner, op, runner.spark.read.orc)
 
 
 @SparkRunner.implementation
-def load_avro(runner: SparkRunner, op: "LoadAvroDatasetOp") -> DatasetPlan:
-    """Avro scan through sources/avro.py (jar-native or pure-Python
-    fallback). Row ids follow the text-source policy: written ids are
-    re-adopted on round-trips, fresh scans get stable monotonic ids."""
+def load_avro(runner: SparkRunner, op: LoadAvroDatasetOp) -> DatasetPlan:
+    """Through ``sources/avro.py``: the spark-avro jar when deployed, else
+    the pure-Python container codec."""
     from ..sources.avro import read_avro_dataframe
 
-    df = read_avro_dataframe(runner.spark, op.file_path, op.schema_ddl)
-    return _text_scan_with_row_ids(df)
+    return _file_scan(
+        runner, op, lambda path: read_avro_dataframe(runner.spark, path, op.schema_ddl)
+    )
 
 
 @SparkRunner.implementation
-def load_text_lines(
-    runner: SparkRunner, op: LoadTextLinesDatasetOp
-) -> DatasetPlan:
-    """Raw line scan: spark.read.text — one row per line, renamed to
-    ``op.column``. Splittable like any text source; row ids follow the
-    text-source policy (monotonic, dense only for single-partition
-    scans)."""
-    df = runner.spark.read.text(op.file_path).withColumnRenamed(
-        "value", op.column
+def load_text_lines(runner: SparkRunner, op: LoadTextLinesDatasetOp) -> DatasetPlan:
+    """One row per line, the line renamed to ``op.column``."""
+    return _file_scan(
+        runner,
+        op,
+        lambda path: runner.spark.read.text(path).withColumnRenamed("value", op.column),
     )
-    return _text_scan_with_row_ids(df)
 
 
 @SparkRunner.implementation

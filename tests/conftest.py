@@ -11,7 +11,8 @@ from krnel_graph_spark.runners.spark_runner import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    session = get_spark("krnel-graph-spark-tests", shuffle_partitions=8)
+    session = get_spark("krnel-graph-spark-tests")
+    session.conf.set("spark.sql.shuffle.partitions", "8")
     yield session
 
 

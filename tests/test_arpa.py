@@ -666,8 +666,9 @@ def test_arpa_score_oov_unk_mode_is_kenlm_faithful(spark, tmp_path):
 def test_arpa_oov_rewrite_join_fallback_identical(spark, tmp_path, monkeypatch):
     """The OOV rewrite's two implementations — the default map-side
     broadcast-set pass and the huge-vocab join+reassembly fallback
-    (forced here via SPARK_GRAFT_UNK_VOCAB_BROADCAST_MAX=0) — produce
+    (forced here by setting ``_UNK_VOCAB_BROADCAST_MAX`` to 0) — produce
     identical rows, markers on and off (r14 optimization guard)."""
+    from krnel_graph_spark.functions import arpa as arpa_mod
     from krnel_graph_spark.functions.arpa import arpa_score
 
     rows = _load5(spark, tmp_path)
@@ -684,7 +685,7 @@ def test_arpa_oov_rewrite_join_fallback_identical(spark, tmp_path, monkeypatch):
         return out
 
     fast = run()
-    monkeypatch.setenv("SPARK_GRAFT_UNK_VOCAB_BROADCAST_MAX", "0")
+    monkeypatch.setattr(arpa_mod, "_UNK_VOCAB_BROADCAST_MAX", 0)
     assert run() == fast
 
 

@@ -1,6 +1,7 @@
 """LocalCachedRunner: read/write-through caching over a shared store, and
-prepare() pushing local parquet sources into the store for source-less
-machines. Parity surface: reference cached_runner.py:27-164 and
+prepare() pushing file sources into the store for source-less machines
+(here over parquet; every format is covered in test_file_sources.py).
+Parity surface: reference cached_runner.py:27-164 and
 local_arrow_runner.py:200-217."""
 
 import json

@@ -218,3 +218,62 @@ def test_pinned_golden_uuid():
         json.dumps(payload, sort_keys=True).encode()
     ).hexdigest()
     assert ds.uuid == f"LoadInlineJsonDatasetOp_{expected}"
+
+
+def _fluent_defaults():
+    """``(method, parameter, default, op field)`` for every defaulted
+    parameter of a fluent method in ``types.py`` that the method passes
+    unchanged to the op it builds."""
+    import ast
+    import inspect
+    import textwrap
+
+    import krnel_graph_spark.operators  # noqa: F401  (registers every op)
+    from krnel_graph_spark import types
+    from krnel_graph_spark.plans.op_spec import op_class
+
+    found = []
+    for cls in vars(types).values():
+        if not (isinstance(cls, type) and cls.__module__ == types.__name__):
+            continue
+        for name, fn in vars(cls).items():
+            if not inspect.isfunction(fn):
+                continue
+            defaults = {
+                p.name: p.default
+                for p in inspect.signature(fn).parameters.values()
+                if p.default is not inspect.Parameter.empty
+            }
+            tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+            for call in ast.walk(tree):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Name)
+                    and call.func.id.endswith("Op")
+                ):
+                    continue
+                fields = op_class(call.func.id).model_fields
+                for kw in call.keywords:
+                    if isinstance(kw.value, ast.Name) and kw.value.id in defaults:
+                        found.append(
+                            (
+                                f"{cls.__name__}.{name}",
+                                kw.value.id,
+                                defaults[kw.value.id],
+                                fields[kw.arg],
+                            )
+                        )
+    return found
+
+
+def test_fluent_defaults_equal_op_field_defaults():
+    """A fluent call that omits a parameter builds the same op (same UUID)
+    as constructing the op without that field."""
+    found = _fluent_defaults()
+    assert len(found) > 50  # the scan reaches the fluent surface
+    wrong = [
+        (method, param, default, field.default)
+        for method, param, default, field in found
+        if field.is_required() or field.default != default
+    ]
+    assert wrong == []
