@@ -42,6 +42,10 @@ class UUIDMismatchError(GraphError):
 _OP_REGISTRY: dict[str, type["OpSpec"]] = {}
 
 
+# Per class: the sorted names of the fields that enter its UUID.
+_IDENTITY_FIELDS: dict[type["OpSpec"], tuple[str, ...]] = {}
+
+
 def op_class(name: str) -> type["OpSpec"]:
     try:
         return _OP_REGISTRY[name]
@@ -100,12 +104,13 @@ class OpSpec(BaseModel):
         )
 
     def _identity_payload(self) -> dict[str, Any]:
-        excluded = self._hash_excluded_fields()
-        return {
-            name: self._encode_value(getattr(self, name))
-            for name in sorted(type(self).model_fields)
-            if name not in excluded
-        }
+        cls = type(self)
+        names = _IDENTITY_FIELDS.get(cls)
+        if names is None:  # once per class: sorted, non-excluded fields
+            excluded = cls._hash_excluded_fields()
+            names = tuple(n for n in sorted(cls.model_fields) if n not in excluded)
+            _IDENTITY_FIELDS[cls] = names
+        return {name: self._encode_value(getattr(self, name)) for name in names}
 
     @property
     def uuid(self) -> str:

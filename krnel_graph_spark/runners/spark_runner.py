@@ -25,6 +25,8 @@ import json
 import math
 import os
 import random
+import stat
+import time
 from typing import Any, Optional, Union
 
 import pandas as pd
@@ -144,7 +146,9 @@ def get_spark(app_name: str = "krnel-graph-spark") -> SparkSession:
         if not given.contains(key):
             builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    if same_host and not given.contains("spark.sql.shuffle.partitions"):
+    if same_host and active is None and not given.contains("spark.sql.shuffle.partitions"):
+        # Only for a context this call created: a later call must not
+        # replace a value set on the running session.
         # Tied to the session's cores, floored at the former constant 32.
         # 2 x cores was measured and rejected in r15: +20% arpa_score_o5 at
         # local[32]/sf0.1, no win beyond noise (OPTIMIZATION_r15.md).
@@ -188,9 +192,11 @@ class SparkRunner(BaseRunner):
     def from_parquet(self, file_path: str) -> LoadParquetDatasetOp:
         """Dataset identified by file content (sha256), not by path — parity
         with reference ``local_arrow_runner.py:154-198``. A directory's
-        identity is a manifest hash of its (relative path, size) pairs,
-        which a 100-TB scan can afford; a remote URL's identity is the URL
-        string itself. Every ``from_*`` file source follows this rule."""
+        identity hashes the content digest of every file under it, with
+        its relative path; a remote URL's identity is the URL string
+        itself. Digests are memoized per process under each file's stat,
+        so an unchanged source costs one stat per file. Every ``from_*``
+        file source follows this rule (``_content_identity``)."""
         return _file_source(LoadParquetDatasetOp, file_path)
 
     def from_inline_dataset(self, data: dict[str, list]) -> LoadInlineJsonDatasetOp:
@@ -748,26 +754,54 @@ def _file_source(cls: type, file_path: str, **params) -> LoadFileDatasetOp:
     return cls(file_path=file_path, content_hash=_content_identity(file_path), **params)
 
 
+# Process-wide memo of file digests, keyed by the file's stat:
+# (st_dev, st_ino, st_size, st_mtime_ns, st_ctime_ns) -> sha256 hex.
+_DIGESTS: dict[tuple[int, int, int, int, int], str] = {}
+# Git's "racily clean" rule: a digest is memoized only if the file's mtime
+# and ctime are this much older than the moment its hash started, so a
+# rewrite inside one timestamp tick is hashed again, never served stale.
+_RACY_NS = 2_000_000_000
+
+
 def _content_identity(file_path: str) -> str:
-    if os.path.isfile(file_path):
-        h = hashlib.sha256()
-        with open(file_path, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                h.update(chunk)
-        return h.hexdigest()
-    if os.path.isdir(file_path):
-        h = hashlib.sha256()
-        for root, _dirs, files in sorted(os.walk(file_path)):
-            for name in sorted(files):
-                full = os.path.join(root, name)
-                rel = os.path.relpath(full, file_path)
-                h.update(f"{rel}:{os.path.getsize(full)};".encode())
-        return h.hexdigest()
-    if "://" not in file_path:
-        raise FileNotFoundError(f"No such file or directory: {file_path!r}")
-    # Remote URL: identity = the URL itself (documented deviation; Spark-side
-    # listing would be needed for a manifest hash).
-    return hashlib.sha256(file_path.encode()).hexdigest()
+    """The one identity rule of file sources. A file is its content's
+    sha256; a directory is the sha256 of its sorted ``relpath:digest``
+    lines, one per file. Each file digest is memoized under its stat, so
+    a hit costs one stat per file. A remote URL is the URL string (no
+    listing is made)."""
+    try:
+        st = os.stat(file_path)
+    except OSError:
+        if "://" not in file_path:
+            raise FileNotFoundError(
+                f"No such file or directory: {file_path!r}"
+            ) from None
+        # Remote URL: a documented deviation from content identity.
+        return hashlib.sha256(file_path.encode()).hexdigest()
+    if not stat.S_ISDIR(st.st_mode):
+        return _file_digest(file_path, st)
+    lines = []
+    for root, _dirs, files in os.walk(file_path):
+        for name in files:
+            full = os.path.join(root, name)
+            rel = os.path.relpath(full, file_path)
+            lines.append(f"{rel}:{_file_digest(full, os.stat(full))}\n")
+    return hashlib.sha256("".join(sorted(lines)).encode()).hexdigest()
+
+
+def _file_digest(path: str, st: os.stat_result) -> str:
+    """sha256 of the file at ``path``, whose stat is ``st``: read once per
+    stat key, and again while the file is inside the racy window."""
+    key = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    digest = _DIGESTS.get(key)
+    if digest is not None:
+        return digest
+    started = time.time_ns()
+    with open(path, "rb") as f:
+        digest = hashlib.file_digest(f, "sha256").hexdigest()
+    if max(st.st_mtime_ns, st.st_ctime_ns) <= started - _RACY_NS:
+        _DIGESTS[key] = digest
+    return digest
 
 
 def _inline_identity(data: dict[str, list]) -> str:

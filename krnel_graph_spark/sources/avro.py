@@ -467,12 +467,14 @@ def read_avro_dataframe(spark, path: str, schema_ddl: str | None = None):
             raise
 
     if schema_ddl is None:
-        first = sorted(
-            f for f in os.listdir(path) if f.endswith(".avro")
-        )
-        if not first:
-            raise ValueError(f"no .avro files under {path}")
-        with open(os.path.join(path, first[0]), "rb") as fh:
+        if os.path.isdir(path):
+            first = sorted(f for f in os.listdir(path) if f.endswith(".avro"))
+            if not first:
+                raise ValueError(f"no .avro files under {path}")
+            header_file = os.path.join(path, first[0])
+        else:
+            header_file = path
+        with open(header_file, "rb") as fh:
             schema, _, _, _ = read_header(fh.read())
         schema_ddl = spark_ddl_from_avro(schema)
 

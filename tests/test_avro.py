@@ -250,3 +250,13 @@ def test_float_array_nan_elements_roundtrip(spark, tmp_path):
         assert np.isnan(emb[1])  # NaN survived, not None
         xs = np.asarray(back["xs"][i], dtype="float64")
         assert np.isnan(xs[0]) and xs[1] == i
+
+
+def test_runner_reads_a_single_avro_file(spark, lazy_runner, tmp_path):
+    """Without the jar and without a schema, the schema comes from the
+    header of the one file given, not from a directory listing."""
+    path = str(tmp_path / "names_avro")
+    src = spark.createDataFrame([(i, f"n{i}") for i in range(4)], "id long, name string")
+    av.write_avro_dataframe(src.coalesce(1), path)
+    out = lazy_runner.to_pandas(lazy_runner.from_avro(f"{path}/part-00000.avro"))
+    assert out.sort_values("id")["name"].tolist() == ["n0", "n1", "n2", "n3"]

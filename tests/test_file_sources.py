@@ -92,7 +92,7 @@ def test_file_path_is_declared_once():
 # descends from a file source.
 GOLDEN_UUIDS = {
     "parquet": "LoadParquetDatasetOp_043c31f22081a833e369df6ba73acb406d6976e8a923971a409030d38dc0a3c6",
-    "parquet_dir": "LoadParquetDatasetOp_f9a568a6cfedf251fda77e436ba4718a0424dcac606dbeea59d89e7236d302cd",
+    "parquet_dir": "LoadParquetDatasetOp_ff2e4b9e1dce69d1331dafdb9d7b58a5436eb1c9155ef8737f6c56eb968b24da",
     "csv": "LoadCSVDatasetOp_4ac8877d859e087bcc0af1093b726e0d0cb9d2e823173fa5ead6a764cc8b1054",
     "csv_params": "LoadCSVDatasetOp_16f4f6c03cd3ce055db597d46a022e69dc8c10517a07e55c1f7825cfab924cef",
     "json_lines": "LoadJSONLinesDatasetOp_b5faeec1836ded08906015e687806f7835d700f99e21e7c4b0a79c3b10424e06",

@@ -200,6 +200,20 @@ def test_get_spark_from_another_working_directory(tmp_path):
     assert "TOTAL 5050" in stdout
 
 
+def test_get_spark_keeps_a_value_set_on_the_running_session(spark):
+    """The shuffle-partition default is applied only by the call that
+    creates the context; a later call keeps what was set since."""
+    from krnel_graph_spark import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        get_spark().conf.set(key, "8")
+        assert get_spark().conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, before)
+
+
 _SESSION = """
 import json
 sc = spark.sparkContext
